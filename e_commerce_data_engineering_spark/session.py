@@ -19,6 +19,14 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """Driver heap default: half of physical RAM, capped at 16g. In
+    local mode the driver JVM also runs the executors, and the Python
+    workers and off-heap buffers need the other half of the machine."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, ram_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "ecommerce-spark-engine",
     cpus: int | None = None,
@@ -55,7 +63,10 @@ def get_spark(
         .config("spark.default.parallelism", str(cpus))
         # Keep the UI off for headless runs.
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     if not os.environ.get("SPARK_MASTER") and "SPARK_CONNECT_MODE_ENABLED" not in os.environ:
         builder = builder.master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))

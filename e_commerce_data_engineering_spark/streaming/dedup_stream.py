@@ -19,15 +19,15 @@ over accepted text, at the cost of the estimator's ±1/sqrt(k) noise
 same estimate (greedy min-id keeper), so a batch containing both a new
 doc and its near-copy admits exactly one.
 
-Exactly-once: outputs and state appends land under ``batch_id=N``
-directories written with overwrite mode, so a replayed micro-batch
-(checkpoint recovery) rewrites the same bytes instead of duplicating
-them — same idempotency pattern as start_upsert_stream. Self-matches on
-replay are excluded by doc id, not arrival order, so a rerun reaches the
-identical accept/drop verdicts.
+Exactly-once: outputs and state are ``streaming/epochs`` stores, and
+every membership probe reads only epochs before the current one, so a
+replayed micro-batch reaches the identical accept/drop verdicts and
+rewrites the same bytes.
 """
 
 from __future__ import annotations
+
+import sys
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +35,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
 from ..operators.dedup import minhash_signature, shingles_of
+from .epochs import read_before, start_file_stream, write_epoch
 
 
 def _banded(sig_frame: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -79,15 +80,7 @@ def start_dedup_stream(
     """Drain ``source_dir`` (JSONL docs), append only corpus-novel docs
     to ``accepted_dir`` and their band signatures to ``state_dir``."""
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
     def _dedup_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         s = batch_df.sparkSession
         sigs = (
             batch_df.select(
@@ -104,14 +97,9 @@ def start_dedup_stream(
         banded.count()
 
         # 1) duplicates of the ACCEPTED corpus: bucket-collide with the
-        # store, verify by signature estimate (id != self for replays).
-        # The "no state yet" case is an explicit path-existence check —
-        # any OTHER read failure (corrupt files, storage errors) must
-        # fail the micro-batch so checkpoint recovery retries it, rather
-        # than silently admitting near-dups with no membership check.
-        jvm_path = s._jvm.org.apache.hadoop.fs.Path(state_dir)
-        fs = jvm_path.getFileSystem(s._jsc.hadoopConfiguration())
-        store = s.read.parquet(state_dir) if fs.exists(jvm_path) else None
+        # store, verify by signature estimate (id != self, so a doc id
+        # accepted in an earlier epoch and re-sent is not its own dup)
+        store = read_before(s, state_dir, epoch_id)
         if store is not None:
             hits = (
                 banded.join(
@@ -150,19 +138,15 @@ def start_dedup_stream(
         out = batch_df.join(
             kept.select(F.col("doc_id").alias(id_col)), id_col, "left_semi"
         )
-        out.write.mode("overwrite").parquet(f"{accepted_dir}/batch_id={epoch_id}")
-        _banded(kept, num_hashes, bands).select(
-            "band", "bucket", "doc_id", "sig"
-        ).write.mode("overwrite").parquet(f"{state_dir}/batch_id={epoch_id}")
+        write_epoch(out, accepted_dir, epoch_id)
+        banded_kept = _banded(kept, num_hashes, bands).select("band", "bucket", "doc_id", "sig")
+        write_epoch(banded_kept, state_dir, epoch_id)
         sigs.unpersist()
         banded.unpersist()
         kept.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(_dedup_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _dedup_batch
     )
 
 
@@ -191,8 +175,7 @@ def start_exact_dedup_stream(
     small fraction of the batch — the bit table is O(m) bounded and
     broadcast, while the hash store grows with the corpus.
 
-    State layout (all per-batch overwrite dirs → replay-safe, same
-    idempotency pattern as ``start_dedup_stream``):
+    State layout (``streaming/epochs`` stores):
       ``{state_dir}/hashes/batch_id=N`` — accepted (h) rows,
       ``{state_dir}/bloom/batch_id=N``  — their set bit positions,
       ``{state_dir}/metrics/batch_id=N`` — one row:
@@ -201,11 +184,6 @@ def start_exact_dedup_stream(
     """
     from ..operators.sketch import _portable_bucket
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
     hash_store = f"{state_dir}/hashes"
     bloom_store = f"{state_dir}/bloom"
     metrics_store = f"{state_dir}/metrics"
@@ -217,8 +195,6 @@ def start_exact_dedup_stream(
         )
 
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         s = batch_df.sparkSession
         hashed = batch_df.select(
             F.col(id_col).alias("doc_id"), F.md5(F.col(text_col).cast("binary")).alias("h")
@@ -230,10 +206,9 @@ def start_exact_dedup_stream(
         n_in = hashed.count()
         n_batch_unique = batch_unique.count()
 
-        jvm_path = s._jvm.org.apache.hadoop.fs.Path(bloom_store)
-        fs = jvm_path.getFileSystem(s._jsc.hadoopConfiguration())
-        if fs.exists(jvm_path):
-            bits = s.read.parquet(bloom_store).select("bit").distinct()
+        bloom = read_before(s, bloom_store, epoch_id)
+        if bloom is not None:
+            bits = bloom.select("bit").distinct()
             probed = (
                 _positions(batch_unique)
                 .join(F.broadcast(bits.withColumn("_set", F.lit(1))), "bit", "left")
@@ -244,7 +219,7 @@ def start_exact_dedup_stream(
             n_maybe = maybe.count()
             # only Bloom-positive hashes pay the store join; negatives
             # are PROVABLY new (no false negatives)
-            seen = s.read.parquet(hash_store).select("h").join(maybe, "h", "left_semi")
+            seen = read_before(s, hash_store, epoch_id).select("h").join(maybe, "h", "left_semi")
             kept = batch_unique.join(seen, "h", "left_anti").persist()
         else:
             n_maybe = 0
@@ -254,26 +229,20 @@ def start_exact_dedup_stream(
         out = batch_df.join(
             kept.select(F.col("doc_id").alias(id_col)), id_col, "left_semi"
         )
-        out.write.mode("overwrite").parquet(f"{accepted_dir}/batch_id={epoch_id}")
-        kept.select("h").write.mode("overwrite").parquet(
-            f"{hash_store}/batch_id={epoch_id}"
-        )
-        _positions(kept).select("bit").distinct().write.mode("overwrite").parquet(
-            f"{bloom_store}/batch_id={epoch_id}"
-        )
-        s.createDataFrame(
+        write_epoch(out, accepted_dir, epoch_id)
+        write_epoch(kept.select("h"), hash_store, epoch_id)
+        write_epoch(_positions(kept).select("bit").distinct(), bloom_store, epoch_id)
+        metrics = s.createDataFrame(
             [(n_in, n_batch_unique, n_batch_unique - n_maybe, n_maybe, n_kept)],
             "n_in bigint, n_batch_unique bigint, n_bloom_negative bigint, "
             "n_store_checked bigint, n_kept bigint",
-        ).write.mode("overwrite").parquet(f"{metrics_store}/batch_id={epoch_id}")
+        )
+        write_epoch(metrics, metrics_store, epoch_id)
         batch_unique.unpersist()
         kept.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _batch
     )
 
 
@@ -300,24 +269,17 @@ def start_segment_dedup_stream(
     This is how a C4-style span-dedup runs on a GROWING corpus: the
     batch pass would re-dedup the whole corpus per delivery; here each
     micro-batch pays one groupBy over its own segments plus one
-    equi-join against the store. State layout mirrors the other dedup
-    streams (per-batch overwrite dirs keyed by batch_id → replay-safe):
+    equi-join against the store. State layout (``streaming/epochs``
+    stores):
       ``{state_dir}/seghashes/batch_id=N`` — newly accepted (h) rows,
       ``{state_dir}/metrics/batch_id=N`` — (n_docs, n_segs,
         n_new_segs, n_docs_intact) per batch.
     Documents that lose EVERY segment still emit a row (empty
     clean_text) so downstream counts reconcile with arrivals."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
     seg_store = f"{state_dir}/seghashes"
     metrics_store = f"{state_dir}/metrics"
 
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         s = batch_df.sparkSession
         toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
         starts = F.sequence(F.lit(1), F.size("ts"), F.lit(seg_w))
@@ -342,11 +304,9 @@ def start_segment_dedup_stream(
             & (segs["seg_idx"] == winners["w.seg_idx"]),
             "left_semi",
         )
-        jvm_path = s._jvm.org.apache.hadoop.fs.Path(seg_store)
-        fs = jvm_path.getFileSystem(s._jsc.hadoopConfiguration())
-        if fs.exists(jvm_path):
-            store = s.read.parquet(seg_store).select("h")
-            kept_segs = first.join(store, "h", "left_anti").persist()
+        store = read_before(s, seg_store, epoch_id)
+        if store is not None:
+            kept_segs = first.join(store.select("h"), "h", "left_anti").persist()
         else:
             kept_segs = first.persist()
         n_new = kept_segs.count()
@@ -371,24 +331,20 @@ def start_segment_dedup_stream(
                 F.coalesce(F.col("n_kept_segs"), F.lit(0)).alias("n_kept_segs"),
             )
         )
-        out.write.mode("overwrite").parquet(f"{accepted_dir}/batch_id={epoch_id}")
-        kept_segs.select("h").distinct().write.mode("overwrite").parquet(
-            f"{seg_store}/batch_id={epoch_id}"
-        )
+        write_epoch(out, accepted_dir, epoch_id)
+        write_epoch(kept_segs.select("h").distinct(), seg_store, epoch_id)
         n_docs = totals.count()
         n_intact = out.filter(F.col("n_kept_segs") == F.col("n_segs")).count()
-        s.createDataFrame(
+        metrics = s.createDataFrame(
             [(n_docs, n_segs, n_new, n_intact)],
             "n_docs bigint, n_segs bigint, n_new_segs bigint, n_docs_intact bigint",
-        ).write.mode("overwrite").parquet(f"{metrics_store}/batch_id={epoch_id}")
+        )
+        write_epoch(metrics, metrics_store, epoch_id)
         segs.unpersist()
         kept_segs.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _batch
     )
 
 
@@ -413,64 +369,43 @@ def start_semantic_dedup_stream(
     The IVF centroids are trained ONCE on the first non-empty batch
     (operators/similarity.ivf_index — deterministic given the
     checkpointed batch content, so a replayed first batch retrains
-    identical centroids) and persisted to ``state_dir``/centroids; every
-    later batch reuses them as plan literals, so cell assignment is a
-    map-only pass. Membership state is (cell, id, unit vector) for the
-    accepted corpus: the per-batch probe is an equi-join on cell
-    (Σ|cell|·|batch-cell| work, never n²), then exact cosine against the
-    colliding members. Batch-internal duplicates collapse greedily to
-    the min-id survivor within each cell. Cross-cell near-dups survive
-    by design — the same recall trade batch semdedup makes and measures
-    (d07).
+    identical centroids) and persisted to the ``state_dir``/centroids
+    epoch store; every later batch reuses them as plan literals, so cell
+    assignment is a map-only pass. Membership state is (cell, id, unit
+    vector) for the accepted corpus: the per-batch probe is an equi-join
+    on cell (Σ|cell|·|batch-cell| work, never n²), then exact cosine
+    against the colliding members. Batch-internal duplicates collapse
+    greedily to the min-id survivor within each cell. Cross-cell
+    near-dups survive by design — the same recall trade batch semdedup
+    makes and measures (d07).
 
-    Exactly-once: accepted rows and member appends land in
-    ``batch_id=N`` overwrite dirs; probes read only batches strictly
-    earlier than the current epoch, so a checkpoint replay reaches
-    identical verdicts and rewrites identical bytes. Invariants
+    Exactly-once through the ``streaming/epochs`` layout. Invariants
     (no accepted same-cell pair above threshold; every rejection has an
     accepted same-cell witness) are pinned in tests/test_streaming.py.
     """
     from ..operators.similarity import l2_norm, make_cell_assigner
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
     members_dir = f"{state_dir}/members"
     centroids_dir = f"{state_dir}/centroids"
 
-    def _members_before(s: SparkSession, epoch: int) -> DataFrame | None:
-        jvm_path = s._jvm.org.apache.hadoop.fs.Path(members_dir)
-        fs = jvm_path.getFileSystem(s._jsc.hadoopConfiguration())
-        if not fs.exists(jvm_path):
-            return None
-        m = (
-            s.read.option("basePath", members_dir)
-            .parquet(members_dir)
-            .filter(F.col("batch_id") < epoch)
-        )
-        return m.drop("batch_id")
-
-    def _centroids(s: SparkSession, batch_df: DataFrame) -> list[list[float]]:
-        jvm_path = s._jvm.org.apache.hadoop.fs.Path(centroids_dir)
-        fs = jvm_path.getFileSystem(s._jsc.hadoopConfiguration())
-        if fs.exists(jvm_path):
-            rows = s.read.parquet(centroids_dir).orderBy("cell").collect()
+    def _centroids(s: SparkSession, batch_df: DataFrame, epoch_id: int) -> list[list[float]]:
+        trained = read_before(s, centroids_dir, epoch_id)
+        rows = trained.orderBy("cell").collect() if trained is not None else []
+        if rows:
             return [[float(x) for x in r["c"]] for r in rows]
         from ..operators.similarity import ivf_index
 
         _assigned, cents = ivf_index(batch_df, nlist, id_col, vec_col, seed)
-        s.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)], "cell INT, c ARRAY<DOUBLE>"
-        ).write.mode("overwrite").parquet(centroids_dir)
+        write_epoch(
+            s.createDataFrame([(i, c) for i, c in enumerate(cents)], "cell INT, c ARRAY<DOUBLE>"),
+            centroids_dir,
+            epoch_id,
+        )
         return cents
 
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         s = batch_df.sparkSession
-        cents = _centroids(s, batch_df)
+        cents = _centroids(s, batch_df, epoch_id)
         assign = make_cell_assigner(cents)
         vecs = (
             batch_df.select(
@@ -487,7 +422,7 @@ def start_semantic_dedup_stream(
         cos = F.aggregate(
             F.zip_with("_u", "_mu", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
         )
-        members = _members_before(s, epoch_id)
+        members = read_before(s, members_dir, epoch_id)
         if members is not None:
             hits = (
                 vecs.join(
@@ -524,38 +459,17 @@ def start_semantic_dedup_stream(
         )
         kept = survivors.join(intra, "_id", "left_anti").persist()
 
-        batch_df.join(
-            kept.select(F.col("_id").alias(id_col)), id_col, "left_semi"
-        ).write.mode("overwrite").parquet(f"{accepted_dir}/batch_id={epoch_id}")
-        kept.select(
+        accepted = batch_df.join(kept.select(F.col("_id").alias(id_col)), id_col, "left_semi")
+        write_epoch(accepted, accepted_dir, epoch_id)
+        members_new = kept.select(
             F.col("_cell").alias("cell"), F.col("_id").alias("id"), F.col("_u").alias("u")
-        ).write.mode("overwrite").parquet(f"{members_dir}/batch_id={epoch_id}")
+        )
+        write_epoch(members_new, members_dir, epoch_id)
         vecs.unpersist()
         kept.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _store_before(
-    s: SparkSession, store_dir: str, epoch: int
-) -> DataFrame | None:
-    """Read a per-batch-partitioned state store, visible rows = batches
-    strictly earlier than the current epoch (replay of batch N never
-    sees its own partial writes — the semantic-store discipline)."""
-    jvm_path = s._jvm.org.apache.hadoop.fs.Path(store_dir)
-    fs = jvm_path.getFileSystem(s._jsc.hadoopConfiguration())
-    if not fs.exists(jvm_path):
-        return None
-    return (
-        s.read.option("basePath", store_dir)
-        .parquet(store_dir)
-        .filter(F.col("batch_id") < epoch)
-        .drop("batch_id")
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _batch
     )
 
 
@@ -589,8 +503,7 @@ def start_dedup_waterfall_stream(
     bit-identical to the batch waterfall over the union of all batches
     — pinned by the stream-vs-batch parity test.
 
-    State stores (all ``batch_id=N`` overwrite dirs; probes read only
-    batches strictly earlier than the current epoch → replay-safe):
+    State stores (``streaming/epochs`` stores):
       ``{state_dir}/hashes``     — (h) of every exact-stage keeper,
       ``{state_dir}/texts``      — (blk, doc_id, len, text) of every
         exact-stage keeper: the stage-2 subsumer universe. Full text is
@@ -609,11 +522,6 @@ def start_dedup_waterfall_stream(
     enumerates cross-batch pairs."""
     from ..functions import text as X
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
     hash_store = f"{state_dir}/hashes"
     text_store = f"{state_dir}/texts"
     fp_store = f"{state_dir}/fps"
@@ -621,8 +529,6 @@ def start_dedup_waterfall_stream(
     metrics_store = f"{state_dir}/metrics"
 
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         s = batch_df.sparkSession
         s0 = batch_df.select(
             F.col(id_col).alias("doc_id"),
@@ -639,7 +545,7 @@ def start_dedup_waterfall_stream(
             "_rn",
             F.row_number().over(Window.partitionBy("h").orderBy("doc_id")),
         ).filter(F.col("_rn") == 1).drop("_rn")
-        seen_h = _store_before(s, hash_store, epoch_id)
+        seen_h = read_before(s, hash_store, epoch_id)
         s1 = (
             keepers.join(seen_h, "h", "left_anti") if seen_h is not None else keepers
         ).persist()
@@ -651,7 +557,7 @@ def start_dedup_waterfall_stream(
         # removed by stage 3 still subsumes — exactly as t55's pre_rm
         # ranges over s1, not s2), so the text store is NOT tombstone-
         # filtered; transitivity covers prefix-removed subsumers.
-        stored_texts = _store_before(s, text_store, epoch_id)
+        stored_texts = read_before(s, text_store, epoch_id)
         if stored_texts is not None:
             universe = s1.select("doc_id", "len", "text", "blk").unionByName(
                 stored_texts.select("doc_id", "len", "text", "blk")
@@ -707,8 +613,8 @@ def start_dedup_waterfall_stream(
             "_rn",
             F.row_number().over(Window.partitionBy("f").orderBy("doc_id")),
         ).filter(F.col("_rn") == 1).drop("_rn")
-        stored_fps = _store_before(s, fp_store, epoch_id)
-        old_tombs = _store_before(s, tomb_store, epoch_id)
+        stored_fps = read_before(s, fp_store, epoch_id)
+        old_tombs = read_before(s, tomb_store, epoch_id)
         all_tombs = (
             tombs.unionByName(old_tombs) if old_tombs is not None else tombs
         ).distinct()
@@ -727,35 +633,26 @@ def start_dedup_waterfall_stream(
         n_kept = survivors.count()
         fp_removed = n_s2 - n_kept
 
-        # ---- writes (all overwrite per batch_id → replay rewrites the
-        # same bytes)
+        # ---- writes
         out = batch_df.join(
             survivors.select(F.col("doc_id").alias(id_col)), id_col, "left_semi"
         )
-        out.write.mode("overwrite").parquet(f"{accepted_dir}/batch_id={epoch_id}")
-        s1.select("h").write.mode("overwrite").parquet(
-            f"{hash_store}/batch_id={epoch_id}"
-        )
-        s1.select("blk", "doc_id", "len", "text").write.mode("overwrite").parquet(
-            f"{text_store}/batch_id={epoch_id}"
-        )
-        kept_fp.select("f", "doc_id").write.mode("overwrite").parquet(
-            f"{fp_store}/batch_id={epoch_id}"
-        )
-        tombs.write.mode("overwrite").parquet(f"{tomb_store}/batch_id={epoch_id}")
-        s.createDataFrame(
+        write_epoch(out, accepted_dir, epoch_id)
+        write_epoch(s1.select("h"), hash_store, epoch_id)
+        write_epoch(s1.select("blk", "doc_id", "len", "text"), text_store, epoch_id)
+        write_epoch(kept_fp.select("f", "doc_id"), fp_store, epoch_id)
+        write_epoch(tombs, tomb_store, epoch_id)
+        metrics = s.createDataFrame(
             [(n_in, ex_removed, pre_removed, n_tombs, fp_removed, n_kept)],
             "n_in bigint, ex_removed bigint, pre_removed bigint, "
             "n_tombstoned bigint, fp_removed bigint, n_kept bigint",
-        ).write.mode("overwrite").parquet(f"{metrics_store}/batch_id={epoch_id}")
+        )
+        write_epoch(metrics, metrics_store, epoch_id)
         for frame in (s1, s2, tombs, kept_fp, survivors):
             frame.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _batch
     )
 
 
@@ -765,11 +662,7 @@ def read_waterfall_survivors(
     """Final survivor set of the waterfall stream: everything accepted,
     minus retractions (docs a later arrival subsumed)."""
     accepted = spark.read.parquet(accepted_dir)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(f"{state_dir}/tombstones")
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jvm_path):
+    tombs = read_before(spark, f"{state_dir}/tombstones", sys.maxsize)  # every epoch
+    if tombs is None:
         return accepted
-    tombs = spark.read.parquet(f"{state_dir}/tombstones").select(
-        F.col("doc_id").alias(id_col)
-    )
-    return accepted.join(tombs, id_col, "left_anti")
+    return accepted.join(tombs.select(F.col("doc_id").alias(id_col)), id_col, "left_anti")

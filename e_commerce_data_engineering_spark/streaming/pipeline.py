@@ -24,6 +24,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..pipeline import process_raw, with_processing_partitions
 from ..schemas import RAW_ORDER_SCHEMA_PERMISSIVE
+from .epochs import read_latest, start_file_stream, write_epoch
 
 
 def read_raw_stream(spark: SparkSession, raw_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
@@ -271,22 +272,11 @@ def start_upsert_stream(
     """
     from ..operators.layout import upsert_parquet
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
     def _merge(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         upsert_parquet(batch_df.sparkSession, target_dir, batch_df, key_col, version_col)
 
-    return (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _merge
     )
 
 
@@ -307,42 +297,26 @@ def start_rollup_stream(
 
     Exactly-once without transactions: additive merges are NOT
     idempotent (a replayed batch would double-count), so each batch
-    writes only its own PARTIAL aggregate under ``batch_id=N`` with
-    overwrite — replay rewrites the same partial instead of adding to
-    it. ``read_rollup`` folds the partials with a final groupBy: partial
-    aggregation is associative/commutative, so the fold equals the
-    aggregate over all raw data ever drained, and stays cheap because
-    each partial is pre-collapsed to the key domain. Periodically
-    compact old partials with ``operators.layout.compact`` semantics
-    (read + re-aggregate + rewrite) to bound the directory count; at
-    100 TB the partials are the same thing as a log-structured
-    aggregate tree's delta layer.
+    writes only its own PARTIAL aggregate to an additive
+    ``streaming/epochs`` store. ``read_rollup`` folds the partials with
+    a final groupBy: partial aggregation is associative/commutative, so
+    the fold equals the aggregate over all raw data ever drained, and
+    stays cheap because each partial is pre-collapsed to the key
+    domain. Periodically compact old partials with
+    ``operators.layout.compact`` semantics (read + re-aggregate +
+    rewrite) to bound the directory count; at 100 TB the partials are
+    the same thing as a log-structured aggregate tree's delta layer.
     """
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
     def _partial(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            batch_df.groupBy(*key_cols)
-            .agg(
-                F.count(F.lit(1)).alias("partial_count"),
-                F.sum(sum_col).alias("partial_sum"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{rollup_dir}/batch_id={epoch_id}")
+        partial = batch_df.groupBy(*key_cols).agg(
+            F.count(F.lit(1)).alias("partial_count"),
+            F.sum(sum_col).alias("partial_sum"),
         )
+        write_epoch(partial, rollup_dir, epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_partial)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
     )
 
 
@@ -374,41 +348,25 @@ def start_active_users_stream(
     (a COUNT can't be merged; the set can).
 
     Exactly-once like start_rollup_stream: each micro-batch writes only
-    its OWN distinct (d, user_id) pairs under ``batch_id=N`` with
-    overwrite, so a replayed batch rewrites the same pairs instead of
-    duplicating them; cross-batch duplicates collapse in the read-side
-    distinct (set union is idempotent, unlike addition — which is why
-    this needs no version column). ``read_rolling_active_users`` then
-    folds the SAME ``rolling_active_users`` core the batch query uses.
-    At 100 TB the state directory is partitioned by day and old days
-    compact to one file; a day outside every live window can be dropped
-    entirely (retention = window length).
+    its OWN distinct (d, user_id) pairs to an additive
+    ``streaming/epochs`` store; cross-batch duplicates collapse in the
+    read-side distinct (set union is idempotent, unlike addition — which
+    is why this needs no version column). ``read_rolling_active_users``
+    then folds the SAME ``rolling_active_users`` core the batch query
+    uses. At 100 TB the state directory is partitioned by day and old
+    days compact to one file; a day outside every live window can be
+    dropped entirely (retention = window length).
     """
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
     def _distinct_pairs(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            batch_df.select(
-                F.col(ts_col).cast("timestamp").cast("date").alias("d"),
-                F.col(user_col).alias("user_id"),
-            )
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(f"{state_dir}/batch_id={epoch_id}")
-        )
+        pairs = batch_df.select(
+            F.col(ts_col).cast("timestamp").cast("date").alias("d"),
+            F.col(user_col).alias("user_id"),
+        ).distinct()
+        write_epoch(pairs, state_dir, epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_distinct_pairs)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _distinct_pairs
     )
 
 
@@ -442,25 +400,18 @@ def start_trending_stream(
     multiplication with 0.5^((B-A)/halflife). Each batch (1) computes
     its own partial anchored at its max event time, (2) rescales the
     stored partial from its old anchor to the new one, (3) adds, and
-    (4) writes (event_type, partial, anchor_us, n_events) keyed by
-    batch_id — the same replay-safe overwrite layout as the other
-    streams, so a restarted batch recomputes byte-identical state. The
-    anchor always advances to the newest event seen, keeping partials
-    in (0, sum(values)] — no overflow for any stream length.
+    (4) writes (event_type, partial, anchor_us, n_events) as a chained
+    ``streaming/epochs`` snapshot, so a restarted batch recomputes
+    byte-identical state. The anchor always advances to the newest
+    event seen, keeping partials in (0, sum(values)] — no overflow for
+    any stream length.
 
     ``read_trending`` folds the per-batch dirs to the latest state and
     returns the same (event_type, n_events, trend_score, trend_rank)
     shape as e15; batch/stream parity is pinned in
     tests/test_streaming.py."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
 
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         s = batch_df.sparkSession
         ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
         anchor_new = batch_df.select(F.max(ts_us).alias("a")).collect()[0]["a"]
@@ -479,17 +430,7 @@ def start_trending_stream(
             .groupBy("event_type")
             .agg(F.sum("dv").alias("partial"), F.count(F.lit(1)).alias("n_events"))
         )
-        jvm_path = s._jvm.org.apache.hadoop.fs.Path(state_dir)
-        fs = jvm_path.getFileSystem(s._jsc.hadoopConfiguration())
-        # fold ONLY state from batches strictly before this epoch: a
-        # replayed batch must not read the failed attempt's own output
-        # (running-total state is NOT union-idempotent like the hash
-        # stores — replay safety comes from this exclusion + overwrite)
-        prev = (
-            read_trending_state(s, state_dir, before_batch=epoch_id)
-            if fs.exists(jvm_path)
-            else None
-        )
+        prev = read_trending_state(s, state_dir, before_batch=epoch_id)
         if prev is not None:
             anchor = max(
                 anchor_new,
@@ -525,32 +466,21 @@ def start_trending_stream(
         else:
             anchor = anchor_new
             merged = part
-        merged.withColumn("anchor_us", F.lit(anchor)).write.mode("overwrite").parquet(
-            f"{state_dir}/batch_id={epoch_id}"
-        )
+        write_epoch(merged.withColumn("anchor_us", F.lit(anchor)), state_dir, epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _batch
     )
 
 
 def read_trending_state(
     spark: SparkSession, state_dir: str, before_batch: int | None = None
 ) -> DataFrame | None:
-    """Latest per-type (event_type, partial, anchor_us, n_events) —
-    only the newest batch_id dir is live state. ``before_batch``
-    restricts to batches strictly earlier (the replay-safety read);
-    returns None when no eligible batch exists."""
-    all_batches = spark.read.option("basePath", state_dir).parquet(state_dir)
-    if before_batch is not None:
-        all_batches = all_batches.filter(F.col("batch_id") < before_batch)
-    latest = all_batches.agg(F.max("batch_id").alias("b")).collect()[0]["b"]
-    if latest is None:
-        return None
-    return all_batches.filter(F.col("batch_id") == latest).drop("batch_id")
+    """Latest per-type (event_type, partial, anchor_us, n_events)
+    snapshot, or None when no eligible batch exists. ``before_batch``
+    makes this the stream's per-epoch read (``epochs.read_latest``),
+    which also retires the snapshots older than the one returned."""
+    return read_latest(spark, state_dir, before=before_batch)
 
 
 def read_trending(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -591,33 +521,13 @@ def start_transition_stream(
     Assumes per-user event-time-ordered delivery across batches (file
     streams replaying a log satisfy this); genuinely out-of-order feeds
     belong to the batch query over the settled table. Both state
-    frames use the replay-safe layout: per-batch overwrite dirs, and
-    folds read only batches strictly earlier than the current epoch
-    (the start_trending_stream rule — running totals are not
-    union-idempotent). ``read_transitions`` returns the e18 shape;
+    frames are chained snapshots in the ``streaming/epochs`` layout.
+    ``read_transitions`` returns the e18 shape;
     batch/stream parity is pinned in tests/test_streaming.py."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
     counts_dir = f"{state_dir}/counts"
     last_dir = f"{state_dir}/last"
 
-    def _latest(s: SparkSession, d: str, before: int) -> DataFrame | None:
-        jvm_path = s._jvm.org.apache.hadoop.fs.Path(d)
-        fs = jvm_path.getFileSystem(s._jsc.hadoopConfiguration())
-        if not fs.exists(jvm_path):
-            return None
-        allb = s.read.option("basePath", d).parquet(d).filter(F.col("batch_id") < before)
-        latest = allb.agg(F.max("batch_id").alias("b")).collect()[0]["b"]
-        if latest is None:
-            return None
-        return allb.filter(F.col("batch_id") == latest).drop("batch_id")
-
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         s = batch_df.sparkSession
         ev = batch_df.select(
             "user_id",
@@ -626,7 +536,7 @@ def start_transition_stream(
             "event_type",
             F.lit(False).alias("_seed"),
         )
-        prev_last = _latest(s, last_dir, epoch_id)
+        prev_last = read_latest(s, last_dir, before=epoch_id)
         if prev_last is not None:
             seeds = prev_last.select(
                 "user_id",
@@ -647,14 +557,14 @@ def start_transition_stream(
             .groupBy("prev_type", F.col("event_type").alias("next_type"))
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        prev_counts = _latest(s, counts_dir, epoch_id)
+        prev_counts = read_latest(s, counts_dir, before=epoch_id)
         merged = (
             batch_trans.unionByName(prev_counts)
             if prev_counts is not None
             else batch_trans
         )
         merged = merged.groupBy("prev_type", "next_type").agg(F.sum("n").alias("n"))
-        merged.write.mode("overwrite").parquet(f"{counts_dir}/batch_id={epoch_id}")
+        write_epoch(merged, counts_dir, epoch_id)
 
         new_last = (
             ev.withColumn(
@@ -673,22 +583,16 @@ def start_transition_stream(
                 F.col("event_type").alias("last_type"),
             )
         )
-        new_last.write.mode("overwrite").parquet(f"{last_dir}/batch_id={epoch_id}")
+        write_epoch(new_last, last_dir, epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _batch
     )
 
 
 def read_transitions(spark: SparkSession, state_dir: str) -> DataFrame:
     """e18-shaped view of the stream state: (prev_type, next_type, n, p)."""
-    counts_dir = f"{state_dir}/counts"
-    allb = spark.read.option("basePath", counts_dir).parquet(counts_dir)
-    latest = allb.agg(F.max("batch_id").alias("b")).collect()[0]["b"]
-    trans = allb.filter(F.col("batch_id") == latest).drop("batch_id")
+    trans = read_latest(spark, f"{state_dir}/counts")
     row_tot = trans.groupBy("prev_type").agg(F.sum("n").alias("tot"))
     return trans.join(F.broadcast(row_tot), "prev_type").select(
         "prev_type",
@@ -723,33 +627,13 @@ def start_attribution_stream(
     last-non-purchase state (purchases never become seeds, so 'direct'
     attribution survives batch splits).
 
-    Same assumptions and replay-safe layout as start_transition_stream:
-    per-user event-time-ordered delivery across batches; per-batch
-    overwrite dirs; folds read only batches strictly earlier than the
-    current epoch. ``read_attribution`` returns the e21 shape;
+    Same assumptions and chained ``streaming/epochs`` snapshots as
+    start_transition_stream. ``read_attribution`` returns the e21 shape;
     batch/stream parity is pinned in tests/test_streaming.py."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
     totals_dir = f"{state_dir}/totals"
     last_dir = f"{state_dir}/last"
 
-    def _latest(s: SparkSession, d: str, before: int) -> DataFrame | None:
-        jvm_path = s._jvm.org.apache.hadoop.fs.Path(d)
-        fs = jvm_path.getFileSystem(s._jsc.hadoopConfiguration())
-        if not fs.exists(jvm_path):
-            return None
-        allb = s.read.option("basePath", d).parquet(d).filter(F.col("batch_id") < before)
-        latest = allb.agg(F.max("batch_id").alias("b")).collect()[0]["b"]
-        if latest is None:
-            return None
-        return allb.filter(F.col("batch_id") == latest).drop("batch_id")
-
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         s = batch_df.sparkSession
         ev = batch_df.select(
             "user_id",
@@ -759,7 +643,7 @@ def start_attribution_stream(
             F.col("value").cast("decimal(12,2)").alias("value"),
             F.lit(False).alias("_seed"),
         )
-        prev_last = _latest(s, last_dir, epoch_id)
+        prev_last = read_latest(s, last_dir, before=epoch_id)
         if prev_last is not None:
             seeds = prev_last.select(
                 "user_id",
@@ -788,13 +672,13 @@ def start_attribution_stream(
                 F.sum("value").cast("decimal(12,2)").alias("val_sum"),
             )
         )
-        prev_tot = _latest(s, totals_dir, epoch_id)
+        prev_tot = read_latest(s, totals_dir, before=epoch_id)
         merged = credited.unionByName(prev_tot) if prev_tot is not None else credited
         merged = merged.groupBy("channel").agg(
             F.sum("n_purchases").alias("n_purchases"),
             F.sum("val_sum").cast("decimal(12,2)").alias("val_sum"),
         )
-        merged.write.mode("overwrite").parquet(f"{totals_dir}/batch_id={epoch_id}")
+        write_epoch(merged, totals_dir, epoch_id)
 
         new_last = (
             ev.filter(F.col("event_type") != "purchase")
@@ -814,13 +698,10 @@ def start_attribution_stream(
                 F.col("event_type").alias("last_type"),
             )
         )
-        new_last.write.mode("overwrite").parquet(f"{last_dir}/batch_id={epoch_id}")
+        write_epoch(new_last, last_dir, epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _batch
     )
 
 
@@ -829,11 +710,7 @@ def read_attribution(spark: SparkSession, state_dir: str) -> DataFrame:
     attributed_value, avg_value)."""
     from ..plans.money import fround
 
-    totals_dir = f"{state_dir}/totals"
-    allb = spark.read.option("basePath", totals_dir).parquet(totals_dir)
-    latest = allb.agg(F.max("batch_id").alias("b")).collect()[0]["b"]
-    tot = allb.filter(F.col("batch_id") == latest).drop("batch_id")
-    return tot.select(
+    return read_latest(spark, f"{state_dir}/totals").select(
         "channel",
         "n_purchases",
         F.round(F.col("val_sum"), 2).cast("double").alias("attributed_value"),
@@ -860,71 +737,42 @@ def start_daily_totals_stream(
     days×types-sized state, never over raw events. That is why one
     store serves two analytics: the stream cost is one tiny keyed
     aggregate per batch, and adding a third finalizer costs nothing at
-    ingest. Same replay-safe layout as start_trending_stream:
-    per-batch overwrite dirs, folds read only strictly-earlier batches.
+    ingest. The totals are a chained ``streaming/epochs`` snapshot.
     Batch/stream parity for BOTH finalizers is pinned in
     tests/test_streaming.py."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
     daily_dir = f"{state_dir}/daily"
 
-    def _latest(s: SparkSession, d: str, before: int) -> DataFrame | None:
-        jvm_path = s._jvm.org.apache.hadoop.fs.Path(d)
-        fs = jvm_path.getFileSystem(s._jsc.hadoopConfiguration())
-        if not fs.exists(jvm_path):
-            return None
-        allb = s.read.option("basePath", d).parquet(d).filter(F.col("batch_id") < before)
-        latest = allb.agg(F.max("batch_id").alias("b")).collect()[0]["b"]
-        if latest is None:
-            return None
-        return allb.filter(F.col("batch_id") == latest).drop("batch_id")
-
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         from ..plans.events import daily_totals
 
         s = batch_df.sparkSession
         part = daily_totals(
             batch_df.withColumn("ts", F.col("ts").cast("timestamp"))
         )
-        prev = _latest(s, daily_dir, epoch_id)
+        prev = read_latest(s, daily_dir, before=epoch_id)
         merged = part.unionByName(prev) if prev is not None else part
         merged = merged.groupBy("event_type", "day").agg(
             F.sum("day_total").cast("decimal(12,2)").alias("day_total")
         )
-        merged.write.mode("overwrite").parquet(f"{daily_dir}/batch_id={epoch_id}")
+        write_epoch(merged, daily_dir, epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _batch
     )
-
-
-def _read_daily_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    daily_dir = f"{state_dir}/daily"
-    allb = spark.read.option("basePath", daily_dir).parquet(daily_dir)
-    latest = allb.agg(F.max("batch_id").alias("b")).collect()[0]["b"]
-    return allb.filter(F.col("batch_id") == latest).drop("batch_id")
 
 
 def read_seasonality(spark: SparkSession, state_dir: str) -> DataFrame:
     """e22-shaped view of the daily-totals stream state."""
     from ..plans.events import seasonality_from_daily
 
-    return seasonality_from_daily(_read_daily_state(spark, state_dir))
+    return seasonality_from_daily(read_latest(spark, f"{state_dir}/daily"))
 
 
 def read_cusum(spark: SparkSession, state_dir: str) -> DataFrame:
     """e23-shaped view of the daily-totals stream state."""
     from ..plans.events import cusum_from_daily
 
-    return cusum_from_daily(_read_daily_state(spark, state_dir))
+    return cusum_from_daily(read_latest(spark, f"{state_dir}/daily"))
 
 
 def start_histogram_stream(
@@ -943,35 +791,18 @@ def start_histogram_stream(
     micro-batch bins its rows against FIXED edges (``mn + i*width``,
     chosen up front — e.g. from a historical scan; a value outside the
     range clamps to an edge bin) and writes its partial ``(bin, cnt)``
-    grid under ``batch_id=N`` with overwrite, the same exactly-once
-    discipline as the rollup stream: a replayed epoch rewrites its own
-    partial instead of double-counting. The histogram is a mergeable
+    grid to an additive ``streaming/epochs`` store. The histogram is a mergeable
     sketch, so read-side SUM over all partials equals the batch
     histogram of the union — no raw rows are retained, state is
     O(nbins) per drained micro-batch regardless of stream volume.
     """
     from ..operators.sketch import histogram_bins
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
     def _partial(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            histogram_bins(batch_df, value_col, mn, width, nbins)
-            .write.mode("overwrite")
-            .parquet(f"{state_dir}/batch_id={epoch_id}")
-        )
+        write_epoch(histogram_bins(batch_df, value_col, mn, width, nbins), state_dir, epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_partial)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
     )
 
 
@@ -985,26 +816,17 @@ def start_kmv_stream(
     max_files_per_trigger: int = 1,
 ) -> StreamingQuery:
     """Streaming twin of the x09 KMV distinct sketch over document
-    tokens: each micro-batch computes its per-source K-smallest
-    distinct token-hash set (``operators/sketch.kmv_sketch``) and
-    writes that partial under ``batch_id=N`` with overwrite — the same
-    exactly-once discipline as the histogram stream (a replayed epoch
-    rewrites its own partial). KMV is a MERGEABLE sketch: the K
-    smallest of a union equals the K smallest of the union of
-    per-shard K-smallest sets, so the read side folds partials without
-    raw rows; state is O(K) rows per (source, drained batch)."""
+    tokens: each micro-batch computes its per-source K-smallest distinct
+    token-hash set (``operators/sketch.kmv_sketch``) and writes that
+    partial to an additive ``streaming/epochs`` store. KMV is a
+    MERGEABLE sketch: the K smallest of a union equals the K smallest of
+    the union of per-shard K-smallest sets, so the read side folds
+    partials without raw rows; state is O(K) rows per (source, drained
+    batch)."""
     from ..functions.text import tokens
     from ..operators.sketch import kmv_hash, kmv_sketch
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
     def _partial(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         hv = (
             batch_df.select(
                 "source", F.explode(tokens(F.col("text"))).alias("tok")
@@ -1012,15 +834,10 @@ def start_kmv_stream(
             .select("source", kmv_hash(F.col("tok")).alias("hv"))
             .distinct()
         )
-        kmv_sketch(hv, ["source"], k).write.mode("overwrite").parquet(
-            f"{state_dir}/batch_id={epoch_id}"
-        )
+        write_epoch(kmv_sketch(hv, ["source"], k), state_dir, epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_partial)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
     )
 
 
@@ -1033,42 +850,27 @@ def start_ams_stream(
     max_files_per_trigger: int = 1,
 ) -> StreamingQuery:
     """Streaming twin of the x10 AMS F2 sketch over document tokens:
-    each micro-batch reduces its token stream to per-token counts,
-    folds them through the SAME ``plans/graph_sketch.ams_zvector``
-    core the batch query uses, and writes the 9-row ``(i, zi)``
-    partial under ``batch_id=N`` with overwrite — the exactly-once
-    discipline of the KMV/histogram stores (a replayed epoch rewrites
-    its own partial, never double-counts). Z_i is ADDITIVE: the union
+    each micro-batch reduces its token stream to per-token counts, folds
+    them through the SAME ``plans/graph_sketch.ams_zvector`` core the
+    batch query uses, and writes the 9-row ``(i, zi)`` partial to an
+    additive ``streaming/epochs`` store. Z_i is ADDITIVE: the union
     stream's Z equals the element-wise sum of per-batch Z, all exact
-    int64, so stream-vs-batch parity is exact equality, not a
-    tolerance check. State is 9 integers per drained micro-batch
-    regardless of stream volume."""
+    int64, so stream-vs-batch parity is exact equality, not a tolerance
+    check. State is 9 integers per drained micro-batch regardless of
+    stream volume."""
     from ..functions.text import tokens
     from ..plans.graph_sketch import ams_zvector
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
     def _partial(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         per_tok = (
             batch_df.select(F.explode(tokens(F.col("text"))).alias("token"))
             .groupBy("token")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         )
-        ams_zvector(per_tok).write.mode("overwrite").parquet(
-            f"{state_dir}/batch_id={epoch_id}"
-        )
+        write_epoch(ams_zvector(per_tok), state_dir, epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_partial)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
     )
 
 
@@ -1143,43 +945,28 @@ def start_count_sketch_stream(
     schema,
     max_files_per_trigger: int = 1,
 ) -> StreamingQuery:
-    """Streaming twin of the x12 Count-Sketch over document tokens:
-    each micro-batch reduces its token stream to per-token counts,
-    folds them through the SAME ``plans/graph_sketch.cs_grid`` core
-    the batch query uses, and writes the (d, bucket, s) grid partial
-    under ``batch_id=N`` with overwrite — the exactly-once discipline
-    of the KMV/AMS stores (a replayed epoch rewrites its own partial,
-    never double-counts). The grid is ADDITIVE: the union stream's
-    grid equals the element-wise (d, bucket) sum of per-batch grids,
-    all exact int64, so stream-vs-batch parity is exact equality.
-    State is at most depth*width integers per drained micro-batch
-    regardless of stream volume."""
+    """Streaming twin of the x12 Count-Sketch over document tokens: each
+    micro-batch reduces its token stream to per-token counts, folds them
+    through the SAME ``plans/graph_sketch.cs_grid`` core the batch query
+    uses, and writes the (d, bucket, s) grid partial to an additive
+    ``streaming/epochs`` store. The grid is ADDITIVE: the union stream's
+    grid equals the element-wise (d, bucket) sum of per-batch grids, all
+    exact int64, so stream-vs-batch parity is exact equality. State is
+    at most depth*width integers per drained micro-batch regardless of
+    stream volume."""
     from ..functions.text import tokens
     from ..plans.graph_sketch import cs_grid
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
     def _partial(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         per_tok = (
             batch_df.select(F.explode(tokens(F.col("text"))).alias("token"))
             .groupBy("token")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         )
-        cs_grid(per_tok).write.mode("overwrite").parquet(
-            f"{state_dir}/batch_id={epoch_id}"
-        )
+        write_epoch(cs_grid(per_tok), state_dir, epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_partial)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
     )
 
 
@@ -1215,27 +1002,18 @@ def start_linear_counting_stream(
     max_files_per_trigger: int = 1,
 ) -> StreamingQuery:
     """Streaming twin of the x13 linear-counting bitmap over document
-    tokens: each micro-batch reduces its tokens to the DISTINCT
-    (source, bucket) hit set on the same portable hash the batch query
-    uses, written under ``batch_id=N`` with overwrite (the KMV/AMS/
-    Count-Sketch store discipline). The bitmap's merge is set UNION —
-    folding the per-batch hit sets with DISTINCT reproduces the batch
-    bitmap exactly, so stream-vs-batch parity is exact set equality.
-    State is at most sources*m rows per drained micro-batch however
-    large the stream."""
+    tokens: each micro-batch reduces its tokens to the DISTINCT (source,
+    bucket) hit set on the same portable hash the batch query uses,
+    written to an additive ``streaming/epochs`` store. The bitmap's
+    merge is set UNION — folding the per-batch hit sets with DISTINCT
+    reproduces the batch bitmap exactly, so stream-vs-batch parity is
+    exact set equality. State is at most sources*m rows per drained
+    micro-batch however large the stream."""
     from ..functions.text import tokens
     from ..operators.sketch import portable_hash
     from ..plans.graph_sketch import _X13_M
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
     def _partial(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         hit = (
             batch_df.select(
                 "source", F.explode(tokens(F.col("text"))).alias("token")
@@ -1246,13 +1024,10 @@ def start_linear_counting_stream(
             )
             .distinct()
         )
-        hit.write.mode("overwrite").parquet(f"{state_dir}/batch_id={epoch_id}")
+        write_epoch(hit, state_dir, epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_partial)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
     )
 
 
@@ -1355,9 +1130,8 @@ def start_dgim_stream(
     Unlike the KMV/AMS/Count-Sketch/linear-counting stores (mergeable
     partials folded at read time), DGIM state EVOLVES sequentially —
     expiry depends on arrival order — so each batch writes the FULL
-    per-key snapshot under ``batch_id=N`` (tiny: <= 2*(log2 W)+2
-    buckets per key) and reads only the latest snapshot strictly
-    before its epoch (replay-safe, the semantic-store discipline).
+    per-key snapshot as a chained ``streaming/epochs`` store (tiny:
+    <= 2*(log2 W)+2 buckets per key).
     Arrivals are ordered by (ts, event_id) and numbered from the
     key's persisted ``n_seen``, so the fold is a pure function of the
     stream prefix: delivering the same events in 1 batch or 5 yields
@@ -1366,33 +1140,11 @@ def start_dgim_stream(
     events group by key; the driver never sees an event."""
     import pandas as pd
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
     state_schema = (
         f"{key_col} string, size bigint, newest_pos bigint, n_seen bigint"
     )
 
-    def _latest_state(s: SparkSession, epoch: int) -> DataFrame | None:
-        jvm_path = s._jvm.org.apache.hadoop.fs.Path(state_dir)
-        fs = jvm_path.getFileSystem(s._jsc.hadoopConfiguration())
-        if not fs.exists(jvm_path):
-            return None
-        st = (
-            s.read.option("basePath", state_dir)
-            .parquet(state_dir)
-            .filter(F.col("batch_id") < epoch)
-        )
-        mx = st.agg(F.max("batch_id").alias("m")).collect()[0]["m"]
-        if mx is None:
-            return None
-        return st.filter(F.col("batch_id") == mx).drop("batch_id")
-
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         s = batch_df.sparkSession
         events = batch_df.select(
             F.col(key_col).alias("k"),
@@ -1406,7 +1158,7 @@ def start_dgim_stream(
                  F.lit(0).cast("bigint").alias("size"),
                  F.lit(0).cast("bigint").alias("newest_pos"),
                  F.lit(0).cast("bigint").alias("n_seen"))
-        prior = _latest_state(s, epoch_id)
+        prior = read_latest(s, state_dir, before=epoch_id)
         if prior is not None:
             prior_rows = prior.select(
                 F.col(key_col).alias("k"),
@@ -1420,8 +1172,6 @@ def start_dgim_stream(
             merged = events.unionByName(prior_rows)
         else:
             merged = events
-
-        out_schema = state_schema
 
         def fold(pdf: pd.DataFrame) -> pd.DataFrame:
             key = pdf["k"].iloc[0]
@@ -1449,16 +1199,10 @@ def start_dgim_stream(
                 }
             )
 
-        new_state = merged.groupBy("k").applyInPandas(fold, out_schema)
-        new_state.write.mode("overwrite").parquet(
-            f"{state_dir}/batch_id={epoch_id}"
-        )
+        write_epoch(merged.groupBy("k").applyInPandas(fold, state_schema), state_dir, epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _batch
     )
 
 
@@ -1468,10 +1212,8 @@ def read_dgim_estimates(
 ) -> DataFrame:
     """Per-key DGIM window-count estimates from the latest snapshot:
     (key, n_seen, n_buckets, estimate)."""
-    st = spark.read.option("basePath", state_dir).parquet(state_dir)
-    mx = st.agg(F.max("batch_id").alias("m")).collect()[0]["m"]
-    latest = st.filter(F.col("batch_id") == mx).drop("batch_id")
-    rows = latest.collect()  # O(keys * log^2 W) rows — state, never data
+    # O(keys * log^2 W) rows — state, never data
+    rows = read_latest(spark, state_dir).collect()
     by_key: dict = {}
     for r in rows:
         by_key.setdefault(r[key_col], {"buckets": [], "n_seen": r["n_seen"]})
@@ -1544,19 +1286,15 @@ def start_misra_gries_stream(
     Like the DGIM store (and unlike the mergeable KMV/AMS/Count-Sketch/
     linear-counting folds), the MG summary EVOLVES sequentially — a
     decrement depends on what arrived before — so each batch persists
-    the full per-key snapshot under ``batch_id=N`` (<= k rows per key)
-    and folds arrivals ordered by (ts, event_id) from the persisted
-    ``n_seen``: the state is a pure function of the stream prefix, and
-    split-vs-one-batch delivery is bit-identical (parity-tested). The
-    fold runs DISTRIBUTED via applyInPandas — the driver never sees an
-    event, only the O(keys x k) snapshot at read time."""
+    the full per-key snapshot as a chained ``streaming/epochs`` store
+    (<= k rows per key) and folds arrivals ordered by (ts, event_id)
+    from the persisted ``n_seen``: the state is a pure function of the
+    stream prefix, and split-vs-one-batch delivery is bit-identical
+    (parity-tested). The fold runs DISTRIBUTED via applyInPandas — the
+    driver never sees an event, only the O(keys x k) snapshot at read
+    time."""
     import pandas as pd
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
     # k is persisted WITH the state: the error bound floor(n/(k+1)) is a
     # property of the store as written, so readers must derive it from
     # the snapshot rather than trust a caller-supplied k that can drift
@@ -1564,24 +1302,7 @@ def start_misra_gries_stream(
         f"{key_col} string, item string, cnt bigint, n_seen bigint, k int"
     )
 
-    def _latest_state(s: SparkSession, epoch: int) -> DataFrame | None:
-        jvm_path = s._jvm.org.apache.hadoop.fs.Path(state_dir)
-        fs = jvm_path.getFileSystem(s._jsc.hadoopConfiguration())
-        if not fs.exists(jvm_path):
-            return None
-        st = (
-            s.read.option("basePath", state_dir)
-            .parquet(state_dir)
-            .filter(F.col("batch_id") < epoch)
-        )
-        mx = st.agg(F.max("batch_id").alias("m")).collect()[0]["m"]
-        if mx is None:
-            return None
-        return st.filter(F.col("batch_id") == mx).drop("batch_id")
-
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         s = batch_df.sparkSession
         events = (
             batch_df.select(
@@ -1609,7 +1330,7 @@ def start_misra_gries_stream(
                 F.lit(0).cast("bigint").alias("n_seen"),
             )
         )
-        prior = _latest_state(s, epoch_id)
+        prior = read_latest(s, state_dir, before=epoch_id)
         if prior is not None:
             prior_rows = prior.select(
                 F.col(key_col).alias("kk"),
@@ -1655,56 +1376,26 @@ def start_misra_gries_stream(
                 }
             )
 
-        new_state = merged.groupBy("kk").applyInPandas(fold, state_schema)
-        new_state.write.mode("overwrite").parquet(f"{state_dir}/batch_id={epoch_id}")
+        write_epoch(merged.groupBy("kk").applyInPandas(fold, state_schema), state_dir, epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _batch
     )
 
 
 def read_misra_gries_summary(
-    spark: SparkSession, state_dir: str, k: int | None = None,
-    key_col: str = "event_type",
+    spark: SparkSession, state_dir: str, key_col: str = "event_type"
 ) -> DataFrame:
     """Latest per-key MG summary: (key, item, mg_count, n_seen,
     err_bound) where true_count ∈ [mg_count, mg_count + err_bound] and
-    err_bound = floor(n_seen / (k + 1)). k is read from the persisted
-    state rows (the writer stamps it), so a caller cannot silently
-    report a wrong err_bound by passing a k that differs from the one
-    the store was built with; the parameter remains only as a fallback
-    for pre-k snapshots and is ignored when the column is present."""
-    # mergeSchema: a store upgraded in place has old batch_id partitions
-    # WITHOUT the stamped k column and new ones WITH it; without schema
-    # merge Spark may infer from a pre-k footer and silently take the
-    # fallback path (or surface null k) even though the latest snapshot
-    # is stamped.
-    st = (
-        spark.read.option("basePath", state_dir)
-        .option("mergeSchema", "true")
-        .parquet(state_dir)
-    )
-    mx = st.agg(F.max("batch_id").alias("m")).collect()[0]["m"]
-    latest = st.filter(F.col("batch_id") == mx)
-    if "k" in latest.columns:
-        k_expr = F.col("k")
-    else:  # legacy snapshot without the stamped column
-        k_expr = F.lit(8 if k is None else k)
-    return (
-        latest.filter(F.col("cnt") > 0)
-        .select(
-            key_col,
-            "item",
-            F.col("cnt").alias("mg_count"),
-            "n_seen",
-            F.expr("n_seen").cast("bigint").alias("_n"),
-            k_expr.cast("bigint").alias("_k"),
-        )
-        .withColumn("err_bound", F.expr("_n div (_k + 1)"))
-        .drop("_n", "_k")
+    err_bound = floor(n_seen / (k + 1)), with k read from the k the
+    writer stamps on every state row."""
+    return read_latest(spark, state_dir).filter(F.col("cnt") > 0).select(
+        key_col,
+        "item",
+        F.col("cnt").alias("mg_count"),
+        "n_seen",
+        F.expr("n_seen div (k + 1)").alias("err_bound"),
     )
 
 
@@ -1723,34 +1414,21 @@ def start_sample_quantile_stream(
     """Streaming twin of the x15 sampling idea as a FIXED-SIZE store:
     each micro-batch reduces its rows to the per-group bottom-k rows by
     scrambled row-key hash (``operators/sketch.bottomk_sample``) and
-    writes that partial under ``batch_id=N`` with overwrite — the
-    KMV/AMS store discipline (a replayed epoch rewrites its own
-    partial). The bottom-k row sample is MERGEABLE exactly like KMV:
-    bottom-k of a union == bottom-k of the union of per-shard bottom-k
-    sets, so the read side folds k-row partials, never raw rows, and
-    state is O(k) rows per (group, drained batch) regardless of stream
-    volume. k rides IN the state rows (round-8 Misra-Gries ADVICE:
-    never a reader parameter that can drift from the writer's)."""
+    writes that partial to an additive ``streaming/epochs`` store. The
+    bottom-k row sample is MERGEABLE exactly like KMV: bottom-k of a
+    union == bottom-k of the union of per-shard bottom-k sets, so the
+    read side folds k-row partials, never raw rows, and state is O(k)
+    rows per (group, drained batch) regardless of stream volume. k rides
+    IN the state rows (round-8 Misra-Gries ADVICE: never a reader
+    parameter that can drift from the writer's)."""
     from ..operators.sketch import bottomk_sample
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
     def _partial(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        bottomk_sample(batch_df, group_col, key_col, value_col, k).write.mode(
-            "overwrite"
-        ).parquet(f"{state_dir}/batch_id={epoch_id}")
+        sample = bottomk_sample(batch_df, group_col, key_col, value_col, k)
+        write_epoch(sample, state_dir, epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_partial)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
     )
 
 
@@ -1796,8 +1474,8 @@ def start_priority_sample_stream(
     """Streaming twin of the x16 priority sample as store #6: each
     micro-batch reduces its rows to the per-group top-(k+1) priorities
     (``operators/sketch.priority_sample`` — the SAME core x16 runs)
-    and writes that partial under ``batch_id=N`` with overwrite. The
-    k+1-row summary is MERGEABLE exactly like bottom-k: the top-(k+1)
+    and writes that partial to an additive ``streaming/epochs`` store.
+    The k+1-row summary is MERGEABLE exactly like bottom-k: the top-(k+1)
     of a union equals the top-(k+1) of the union of per-shard
     top-(k+1) sets, and row k+1 of the MERGED sample is the global
     tau the estimator needs — so the read side reproduces the one-pass
@@ -1805,24 +1483,12 @@ def start_priority_sample_stream(
     per (group, drained batch); k rides IN the state rows."""
     from ..operators.sketch import priority_sample
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
     def _partial(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        priority_sample(batch_df, group_col, key_col, weight_col, k).write.mode(
-            "overwrite"
-        ).parquet(f"{state_dir}/batch_id={epoch_id}")
+        sample = priority_sample(batch_df, group_col, key_col, weight_col, k)
+        write_epoch(sample, state_dir, epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_partial)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
     )
 
 
@@ -1952,9 +1618,8 @@ def start_cms_pair_stream(
     micro-batch builds ONE count-min grid partial PER SIDE (the rows of
     each ``sides`` event type, keyed by ``key_col``) through the SAME
     ``operators/sketch.cms_build_portable`` core the batch queries use,
-    and writes it under ``side=<label>/batch_id=N`` with overwrite —
-    the exactly-once discipline of the KMV/AMS/Count-Sketch stores (a
-    replayed epoch rewrites its own partial, never double-counts).
+    and writes it to the additive ``streaming/epochs`` store
+    ``side=<label>``.
 
     The CMS grid is ADDITIVE (bucket-wise exact int64 sums), so the
     folded stream grid EQUALS the batch grid over the union of drained
@@ -1967,28 +1632,16 @@ def start_cms_pair_stream(
     statistics exist."""
     from ..operators.sketch import cms_build_portable
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
     def _partial(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         for etype, label in sides:
             side = batch_df.filter(F.col(type_col) == etype).select(
                 F.col(key_col).cast("string").alias("k")
             )
-            cms_build_portable(side, "k", depth, width).write.mode(
-                "overwrite"
-            ).parquet(f"{state_dir}/side={label}/batch_id={epoch_id}")
+            grid = cms_build_portable(side, "k", depth, width)
+            write_epoch(grid, f"{state_dir}/side={label}", epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_partial)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
     )
 
 
@@ -2100,24 +1753,15 @@ def start_steered_join_stream(
     No ANALYZE, no table statistics, no scan of the static side beyond
     the one the join itself needs.
 
-    Exactly-once: each epoch writes ``out_dir/batch_id=N`` with
-    overwrite (a replayed epoch rewrites its own output), and the
-    chosen strategy is stamped on every row (``join_strategy``) so the
-    decision is part of the audited output, not a log line. The grid
-    is re-read per epoch — a concurrent ingest growing the build side
-    flips the decision at the next micro-batch, which is the point of
-    steering from live state."""
+    Exactly-once: each epoch writes ``out_dir`` in the
+    ``streaming/epochs`` layout, and the chosen strategy is stamped on
+    every row (``join_strategy``) so the decision is part of the
+    audited output, not a log line. The grid is re-read per epoch — a
+    concurrent ingest growing the build side flips the decision at the
+    next micro-batch, which is the point of steering from live state."""
     from ..operators.sketch import cms_steered_join_with_strategy
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
     def _join(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         grid = read_cms_pair_state(spark, state_dir, build_side)
         joined, strategy = cms_steered_join_with_strategy(
             batch_df,
@@ -2127,15 +1771,10 @@ def start_steered_join_stream(
             row_bytes=row_bytes,
             threshold_bytes=threshold_bytes,
         )
-        joined.withColumn("join_strategy", F.lit(strategy)).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/batch_id={epoch_id}")
+        write_epoch(joined.withColumn("join_strategy", F.lit(strategy)), out_dir, epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_join)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _join
     )
 
 
@@ -2181,15 +1820,7 @@ def start_snapshot_sink_stream(
     the rewrite."""
     from ..operators.layout import _fs, snapshot_compact, snapshot_history, snapshot_upsert
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
     def _commit(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         sess = batch_df.sparkSession
         fs, jPath = _fs(sess, table_dir)
         ledger = jPath(f"{table_dir}/_epoch.{epoch_id}")
@@ -2204,9 +1835,6 @@ def start_snapshot_sink_stream(
             if latest["n_files"] > auto_compact_files:
                 snapshot_compact(sess, table_dir)
 
-    return (
-        stream.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _commit
     )
