@@ -68,14 +68,15 @@ HEADLINE = [
     "d03_minhash_dedupe",
     "d04_embedding_neardup",
     "d06_semdedup",
-    # d07 immediately after d06: both share cache_key="d06", so the
-    # IVF centroids built for d06 are reused instead of rebuilt
+    # d07 immediately after d06: both build the IVF index over the
+    # same vectors plan, so the cached_ivf_index entry built for d06
+    # is reused instead of rebuilt
     "d07_semdedup_recall",
     "t29_segment_dedup",
     "s02_cosine_topk",
     "s05_ivf_cosine_topk",
     # s11 immediately after s05: shares the session-cached IVF index
-    # (cache_key=sf_dir), so only the PQ train/encode is new cost
+    # (same embeddings plan), so only the PQ train/encode is new cost
     "s11_ivfpq_topk",
     "a01_asof_join",
     # round-4 continuation additions
@@ -360,7 +361,7 @@ def _run_names(spark, queries, names, sf_dir) -> tuple[dict[str, float], dict[st
     verdict): ``spark.catalog.clearCache()`` between runs evicts every
     in-memory persist, so each timed run re-runs its own persisted
     subtrees — but shared frames on the per-process SCRATCH-PARQUET
-    tier (operators/dedup._cached) survive clearCache by design: run 1
+    tier (frames.tier) survive clearCache by design: run 1
     pays the full frame build + parquet write, runs 2+ reload a narrow
     parquet scan. The recorded best-of-N is therefore the TIER-WARM
     steady state (what a long-lived session that materialized its

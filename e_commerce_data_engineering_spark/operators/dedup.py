@@ -10,16 +10,10 @@ The final exact-Jaccard verification touches candidates only.
 
 from __future__ import annotations
 
-import atexit
-import hashlib
-import os
-import shutil
-import tempfile
-import threading
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import tier
 from ..functions.text import shingles_zip, tokens
 from .layout import fan_out
 
@@ -34,223 +28,52 @@ def shingles_of(text: Column, n: int = 3) -> Column:
     return F.array_distinct(shingles_zip(tokens(text), n))
 
 
-# Session-scoped shared frames: the d-family queries (LSH pairs, greedy
-# dedupe, CC dedupe) all start from the same shingle + signature build —
-# the expensive half of every run. Keyed by (applicationId, caller key,
-# params) so a full-inventory sweep builds them once, not once per
-# query. At 100 TB the equivalent is writing the signature table out
-# once and reading it from every consumer. Each value is the FULL list
-# of frames the build persisted — primary first, then any inner
-# materialization barriers (e.g. _shingle_frame's tokens step) — so
-# eviction releases everything the build pinned, not just the frame it
-# returned.
-_FRAME_CACHE: dict[tuple, list[DataFrame]] = {}
-
-# Scratch-parquet tier under the in-memory tier: the primary frame of
-# every keyed build is ALSO written once to local scratch parquet, and
-# the frame handed to consumers is the narrow read-back of those files.
-# Why: ``spark.catalog.clearCache()`` (the bench runs it before every
-# timed run; any tenant can call it) evicts the persist markers, and
-# before round 12 the only recovery was RE-RUNNING the build — for the
-# signature frames that means the 32/64-permutation MinHash HOF tower,
-# the most expensive plan in the repo and the documented victim of
-# JVM-process aging (32-40 s vs a 6-8 s band past ~170 executed plans;
-# see bench.py). With the disk tier the rebuild is a parquet scan of
-# one narrow frame — cheap in ANY JVM state. This is also the honest
-# 100 TB shape: a production pipeline writes the signature/shingle
-# table out once and every consumer reads it; nobody re-hashes the
-# corpus per query. Maps full_key -> (path, schema); the schema rides
-# along so an empty frame (zero part files) still reads back typed.
-_DISK_PATHS: dict[tuple, tuple[str, "object"]] = {}
-_SCRATCH_ROOT: str | None = None
-
-# Per-key build locks (ADVICE r12): _cached is called from every query
-# family's plan builder, and a caller may legitimately build plans from
-# several driver threads (guide §2.6 overlapping-jobs pattern). Without
-# a lock two threads could both miss, double-run the expensive build,
-# and race the overwrite-parquet write to the SAME scratch path — the
-# second writer can delete part files the first one's read-back already
-# resolved. One lock per full_key serializes build/reload per entry
-# while leaving unrelated entries concurrent.
-_KEY_LOCKS: dict[tuple, threading.Lock] = {}
-_KEY_LOCKS_GUARD = threading.Lock()
+def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    return fan_out(df).select(F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_tk"))
 
 
-def _key_lock(full_key: tuple) -> threading.Lock:
-    with _KEY_LOCKS_GUARD:
-        lock = _KEY_LOCKS.get(full_key)
-        if lock is None:
-            lock = _KEY_LOCKS[full_key] = threading.Lock()
-        return lock
-
-
-def _scratch_dir(full_key: tuple) -> str:
-    """Per-process scratch directory for one cache entry (content-
-    addressed by the key hash; removed at interpreter exit)."""
-    global _SCRATCH_ROOT
-    if _SCRATCH_ROOT is None:
-        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="spark_graft_frames_")
-        atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
-    return os.path.join(
-        _SCRATCH_ROOT, hashlib.md5(repr(full_key).encode()).hexdigest()
-    )
-
-
-def _check_frames(frames) -> list[DataFrame]:
-    # Explicit check (not assert: it must survive python -O). A build
-    # returning a bare DataFrame would make frames[0] a Column —
-    # DataFrame.__getitem__ — and fail far downstream instead of here.
-    if not isinstance(frames, list):
-        raise TypeError(
-            f"build() must return [primary, *aux] persisted frames, got {type(frames).__name__}"
-        )
-    return frames
-
-
-def _frames_live(frames: list[DataFrame]) -> bool:
-    """True iff every frame the build persisted still carries a live
-    persist marker. ``spark.catalog.clearCache()`` (bench.py runs it
-    before every query) evicts the CacheManager entries WITHOUT this
-    dict noticing — handing the stale frames back would make a
-    consensus query (d21) recompute the shared token/shingle lineage
-    once per family instead of once total (measured: 50.6 s official
-    vs 6.6-15.6 s solo in round 10). Rebuilding on a dead marker
-    restores the sharing under any cache-clearing context."""
-    try:
-        return all(
-            f.storageLevel.useMemory or f.storageLevel.useDisk for f in frames
-        )
-    except Exception:  # session stopped / frame invalid -> rebuild
-        return False
-
-
-def _cached(df: DataFrame, key: tuple | None, build) -> DataFrame:
-    """``build()`` returns ``[primary, *aux]`` persisted frames.
-
-    Two-tier cache: live persisted frames are handed back directly; a
-    clearCache-evicted entry whose scratch parquet survives is RELOADED
-    from disk (narrow scan) instead of re-running the build; only a
-    true miss executes ``build()`` — which then writes the primary to
-    scratch parquet so every later recovery is a scan."""
-    if key is None:
-        return _check_frames(build())[0]
-    spark = df.sparkSession
-    full_key = (spark.sparkContext.applicationId, *key)
-    with _key_lock(full_key):
-        cached = _FRAME_CACHE.get(full_key)
-        if cached is not None and _frames_live(cached):
-            return cached[0]
-        _FRAME_CACHE.pop(full_key, None)
-        disk = _DISK_PATHS.get(full_key)
-        if disk is not None and os.path.isdir(disk[0]):
-            path, schema = disk
-            reloaded = spark.read.schema(schema).parquet(path).persist()
-            _FRAME_CACHE[full_key] = [reloaded]
-            return reloaded
-        frames = _check_frames(build())
-        path = _scratch_dir(full_key)
-        try:
-            frames[0].write.mode("overwrite").parquet(path)
-        except Exception:
-            # scratch volume unavailable (read-only tmp, disk full): keep
-            # the memory-tier behavior — correctness never depends on disk
-            _FRAME_CACHE[full_key] = frames
-            return frames[0]
-        frames[0].unpersist()
-        primary = spark.read.schema(frames[0].schema).parquet(path).persist()
-        _DISK_PATHS[full_key] = (path, frames[0].schema)
-        _FRAME_CACHE[full_key] = [primary, *frames[1:]]
-        return primary
-
-
-def clear_frame_cache(cache_key: str | None = None) -> int:
-    """Evict cached shingle/signature frames (all, or just the entries
-    whose caller key is ``cache_key``), unpersisting each — including
-    the builds' inner barrier frames — the dedup-family twin of
-    ``similarity.clear_ivf_cache``: keeps executor storage bounded in
-    long sessions that sweep many corpora. Returns the number of cache
-    entries evicted."""
-    evict = [k for k in _FRAME_CACHE if cache_key is None or cache_key in k]
-    n = 0
-    for k in evict:
-        for frame in _FRAME_CACHE.pop(k):
-            try:
-                frame.unpersist()
-            except Exception:  # frame's session may already be stopped
-                pass
-        n += 1
-    for k in [k for k in _DISK_PATHS if cache_key is None or cache_key in k]:
-        path, _ = _DISK_PATHS.pop(k)
-        shutil.rmtree(path, ignore_errors=True)
-    return n
-
-
-def token_frame(
-    df: DataFrame, id_col: str, text_col: str, cache_key: str | None = None
-) -> DataFrame:
-    """(_id, _tk) persisted tokens frame — the SHARED first stage of
+def token_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(_id, _tk) tiered tokens frame — the SHARED first stage of
     every text-dedup family (minhash shingles, simhash votes,
     winnowing k-grams all start from the same whitespace tokens).
-    Cached under its own key so a consensus query (d21) that runs
-    three families tokenizes the corpus ONCE, while each family run
-    standalone still builds exactly this frame. Input is fanned out
-    first: one small parquet file must not become one task doing all
-    the hashing."""
-
-    def build():
-        return [
-            fan_out(df)
-            .select(F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_tk"))
-            .persist()
-        ]
-
-    key = ("tokens", cache_key, id_col, text_col) if cache_key else None
-    return _cached(df, key, build)
+    A tier entry of its own (``frames.tier``) so a consensus query
+    (d21) that runs three families tokenizes the corpus ONCE, while
+    each family run standalone still builds exactly this frame. Input
+    is fanned out first: one small parquet file must not become one
+    task doing all the hashing."""
+    return tier(_tokens, df, id_col=id_col, text_col=text_col)
 
 
-def _shingle_frame(
-    df: DataFrame, id_col: str, text_col: str, n: int, cache_key: str | None = None
-):
-    """(_id, _sh) persisted frame of distinct shingles, built in two
+def _shingles(tok: DataFrame, n: int) -> DataFrame:
+    return tok.select(
+        "_id", F.array_distinct(shingles_zip(F.col("_tk"), n)).alias("_sh")
+    ).filter(F.size("_sh") > 0)
+
+
+def _shingle_frame(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(_id, _sh) tiered frame of distinct shingles, built in two
     materialized steps (tokens, then zip_with window) so per-row cost
     is one tokenize + O(n) array passes — not the O(n*len) inlined
     recompute Catalyst's projection collapse would otherwise produce.
-    The tokens stage comes from ``token_frame`` (own cache entry), so
-    the other dedup families can share it."""
-
-    def build():
-        base = token_frame(df, id_col, text_col, cache_key)
-        return [
-            base.select(
-                "_id", F.array_distinct(shingles_zip(F.col("_tk"), n)).alias("_sh")
-            )
-            .filter(F.size("_sh") > 0)
-            .persist()
-        ]
-
-    key = ("shingles", cache_key, id_col, text_col, n) if cache_key else None
-    return _cached(df, key, build)
+    The tokens stage is ``token_frame`` (own tier entry), so the other
+    dedup families can share it."""
+    return tier(_shingles, token_frame(df, id_col, text_col), n=n)
 
 
-def _signature_frame(
-    base: DataFrame, num_hashes: int, cache_key: str | None = None
-) -> DataFrame:
-    """(_id, _sh, _sig) persisted MinHash signatures over a shingle
+def _minhash_signatures(base: DataFrame, num_hashes: int) -> DataFrame:
+    return base.select(
+        "_id", "_sh", minhash_signature(F.col("_sh"), num_hashes).alias("_sig")
+    )
+
+
+def _signature_frame(base: DataFrame, num_hashes: int) -> DataFrame:
+    """(_id, _sh, _sig) tiered MinHash signatures over a shingle
     frame. Materialized BEFORE any self-join: every join branch would
     otherwise re-plan (and re-codegen) the 64-perm HOF expression —
     and Catalyst's projection collapse would inline it into every band
     lambda (16× recompute per row, interpreted — 300 s for 5 k docs vs
     3 s materialized)."""
-
-    def build():
-        return [
-            base.select(
-                "_id", "_sh", minhash_signature(F.col("_sh"), num_hashes).alias("_sig")
-            ).persist()
-        ]
-
-    key = ("sig", cache_key, num_hashes) if cache_key else None
-    return _cached(base, key, build)
+    return tier(_minhash_signatures, base, num_hashes=num_hashes)
 
 
 # ---------------------------------------------------------------------------
@@ -296,7 +119,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.5,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via banded MinHash-LSH with exact-Jaccard
     verification → (id_a, id_b, jaccard).
@@ -309,13 +131,13 @@ def minhash_lsh_pairs(
     d01's declared result IS this frame, and tiering final results
     would cross from intermediate caching into result caching. The
     expensive shared stages (token/shingle/signature frames) keep
-    their scratch-tier entries via ``cache_key``; consumers that
+    their ``frames.tier`` entries; consumers that
     iterate over the pairs (d05's connected components) persist their
     own derived frames.
     """
     assert num_hashes % bands == 0
     return _minhash_lsh_pairs_build(
-        df, id_col, text_col, num_hashes, bands, shingle_n, jaccard_threshold, cache_key
+        df, id_col, text_col, num_hashes, bands, shingle_n, jaccard_threshold
     )
 
 
@@ -327,11 +149,9 @@ def _minhash_lsh_pairs_build(
     bands: int,
     shingle_n: int,
     jaccard_threshold: float,
-    cache_key: str | None,
 ) -> DataFrame:
     r = num_hashes // bands
-    base = _shingle_frame(df, id_col, text_col, shingle_n, cache_key)
-    sig = _signature_frame(base, num_hashes, cache_key)
+    sig = _signature_frame(_shingle_frame(df, id_col, text_col, shingle_n), num_hashes)
 
     banded = sig.select(
         "_id",
@@ -388,36 +208,34 @@ def portable_signature_frame(
     text_col: str,
     num_hashes: int,
     shingle_n: int,
-    cache_key: str | None,
 ) -> DataFrame:
-    """(_id, _sh, _sig) persisted engine-portable MinHash signatures:
+    """(_id, _sh, _sig) tiered engine-portable MinHash signatures:
     permutation k of the base Horner hash h is ``(h·(2k+1) + k) mod P``
     — exact int64 arithmetic DuckDB replays bit-for-bit. Shared by the
-    d09 pair pipeline and the d14 S-curve audit (same cache key →
-    built once per corpus sweep)."""
+    d09 pair pipeline and the d14 S-curve audit (one ``frames.tier``
+    entry → built once per corpus sweep); materialized before the
+    self-join (the d01 inlining lesson)."""
+    base = _shingle_frame(df, id_col, text_col, shingle_n)
+    return tier(_portable_signatures, base, num_hashes=num_hashes)
+
+
+def _portable_signatures(base: DataFrame, num_hashes: int) -> DataFrame:
     from .sketch import _P1, portable_hash
 
-    base = _shingle_frame(df, id_col, text_col, shingle_n, cache_key)
-
-    def build_sig():
-        hashed = base.select(
-            "_id",
-            "_sh",
-            F.transform("_sh", lambda s: portable_hash(s)).alias("_hs"),
-        )
-        sig_col = F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda k: F.aggregate(
-                F.col("_hs"),
-                F.lit(_P1).cast("bigint"),
-                lambda acc, h: F.least(acc, (h * (k * 2 + 1) + k) % F.lit(_P1)),
-            ),
-        )
-        # materialized before the self-join (the d01 inlining lesson)
-        return [hashed.select("_id", "_sh", sig_col.alias("_sig")).persist()]
-
-    key = ("sig_portable", cache_key, num_hashes, shingle_n) if cache_key else None
-    return _cached(base, key, build_sig)
+    hashed = base.select(
+        "_id",
+        "_sh",
+        F.transform("_sh", lambda s: portable_hash(s)).alias("_hs"),
+    )
+    sig_col = F.transform(
+        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
+        lambda k: F.aggregate(
+            F.col("_hs"),
+            F.lit(_P1).cast("bigint"),
+            lambda acc, h: F.least(acc, (h * (k * 2 + 1) + k) % F.lit(_P1)),
+        ),
+    )
+    return hashed.select("_id", "_sh", sig_col.alias("_sig"))
 
 
 def portable_banded_frame(sig: DataFrame, bands: int, r: int) -> DataFrame:
@@ -448,7 +266,6 @@ def minhash_lsh_pairs_portable(
     bands: int = 8,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.5,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """``minhash_lsh_pairs`` on the engine-portable hash family — the
     hash-checked oracle twin of d01's xxhash64 pipeline (same shingle →
@@ -470,7 +287,7 @@ def minhash_lsh_pairs_portable(
     """
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    sig = portable_signature_frame(df, id_col, text_col, num_hashes, shingle_n, cache_key)
+    sig = portable_signature_frame(df, id_col, text_col, num_hashes, shingle_n)
     banded = portable_banded_frame(sig, bands, r)
     a = banded.select(F.col("_id").alias("id_a"), "_band", "_bsig")
     b = banded.select(F.col("_id").alias("id_b"), "_band", "_bsig")
@@ -518,47 +335,39 @@ def anchored_candidate_pairs(
     text_col: str,
     shingle_n: int = 3,
     max_df: int = 20,
-    cache_key: str | None = None,
 ) -> DataFrame:
-    """Persisted distinct ``(id_a, id_b)`` pairs sharing at least one
+    """Tiered distinct ``(id_a, id_b)`` pairs sharing at least one
     RARE shingle hash (document frequency in [2, max_df] — the t40
     anchor cap, bounding the self-join by df² per shingle, never
     corpus²). The shared ground-truth pair set of the d14/d15
     calibration audits: both consume it more than once (Jaccard
-    scoring + banding catch check), so it is materialized and tracked
-    in ``_FRAME_CACHE`` (evict via ``clear_frame_cache``)."""
+    scoring + banding catch check), so it is a ``frames.tier`` entry
+    (evict via ``frames.clear_frame_cache``)."""
+    base = _shingle_frame(df, id_col, text_col, shingle_n)
+    return tier(_anchored_pairs, base, max_df=max_df)
+
+
+def _anchored_pairs(base: DataFrame, max_df: int) -> DataFrame:
     from .sketch import portable_hash
 
-    base = _shingle_frame(df, id_col, text_col, shingle_n, cache_key)
-
-    def build():
-        px = base.select(
-            "_id",
-            F.explode(F.transform("_sh", lambda s: portable_hash(s))).alias("_h"),
-        ).distinct()
-        freq = (
-            px.groupBy("_h")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter((F.col("_df") >= 2) & (F.col("_df") <= max_df))
-            .select("_h")
-        )
-        pxf = px.join(freq, "_h", "left_semi")
-        cand = (
-            pxf.select(F.col("_id").alias("id_a"), "_h")
-            .join(pxf.select(F.col("_id").alias("id_b"), "_h"), "_h")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-            .persist()
-        )
-        return [cand]
-
-    key = (
-        ("anchored-pairs", cache_key, id_col, text_col, shingle_n, max_df)
-        if cache_key
-        else None
+    px = base.select(
+        "_id",
+        F.explode(F.transform("_sh", lambda s: portable_hash(s))).alias("_h"),
+    ).distinct()
+    freq = (
+        px.groupBy("_h")
+        .agg(F.count(F.lit(1)).alias("_df"))
+        .filter((F.col("_df") >= 2) & (F.col("_df") <= max_df))
+        .select("_h")
     )
-    return _cached(df, key, build)
+    pxf = px.join(freq, "_h", "left_semi")
+    return (
+        pxf.select(F.col("_id").alias("id_a"), "_h")
+        .join(pxf.select(F.col("_id").alias("id_b"), "_h"), "_h")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
 
 
 def minhash_dedupe(
@@ -568,7 +377,6 @@ def minhash_dedupe(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 3,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Greedy LSH dedup WITHOUT pair enumeration → surviving rows.
 
@@ -582,8 +390,7 @@ def minhash_dedupe(
     """
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    base = _shingle_frame(df, id_col, text_col, shingle_n, cache_key)
-    sig = _signature_frame(base, num_hashes, cache_key)
+    sig = _signature_frame(_shingle_frame(df, id_col, text_col, shingle_n), num_hashes)
     banded = sig.select(
         "_id",
         F.posexplode(
@@ -660,12 +467,22 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
+def _token_hashes(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    return fan_out(df).select(
+        F.col(id_col).alias("_id"),
+        F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t)).alias("_hs"),
+    )
+
+
+def _simhashes(hashed: DataFrame) -> DataFrame:
+    return hashed.select("_id", simhash_from_hashes(F.col("_hs")).alias("_sim"))
+
+
 def simhash_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) ≤ max_hamming → (id_a, id_b,
     hamming). Blocking: split the 64-bit hash into max_hamming+1
@@ -679,22 +496,11 @@ def simhash_pairs(
     assert n_chunks <= 64, "max_hamming must leave at least 1 bit per chunk"
     # even bit split covering all 64 bits: chunk c = bits [64c/n, 64(c+1)/n)
     bounds = [(64 * c // n_chunks, 64 * (c + 1) // n_chunks) for c in range(n_chunks)]
+    # the hashed tokens are a tier entry of their own: a barrier so the
+    # 64 votes read a materialized array, not 64 inlined tokenizers
+    hashed = tier(_token_hashes, df, id_col=id_col, text_col=text_col)
+    sigs = tier(_simhashes, hashed)
 
-    def build():
-        hashed = (
-            fan_out(df)
-            .select(
-                F.col(id_col).alias("_id"),
-                F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t)).alias("_hs"),
-            )
-            .persist()
-        )
-        sim = hashed.select(
-            "_id", simhash_from_hashes(F.col("_hs")).alias("_sim")
-        ).persist()
-        return [sim, hashed]
-
-    sigs = _cached(df, ("simhash", cache_key, id_col, text_col) if cache_key else None, build)
     def chunk(lo: int, hi: int):
         c = F.shiftright(F.col("_sim"), lo)
         # full-width chunk (max_hamming=0) needs no mask — and its mask
@@ -871,7 +677,6 @@ def minhash_dedupe_cc(
     bands: int = 16,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.5,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Full transitive dedup: LSH pairs → verified Jaccard edges →
     connected components → keep the min-id doc per component (plus all
@@ -880,7 +685,7 @@ def minhash_dedupe_cc(
     share no bucket.
     """
     pairs = minhash_lsh_pairs(
-        df, id_col, text_col, num_hashes, bands, shingle_n, jaccard_threshold, cache_key
+        df, id_col, text_col, num_hashes, bands, shingle_n, jaccard_threshold
     ).select("id_a", "id_b")
     comp = connected_components(pairs)
     keepers_in_comp = comp.groupBy("label").agg(F.min("id").alias(id_col)).select(id_col)
@@ -901,7 +706,6 @@ def semdedup(
     nlist: int = 16,
     cos_threshold: float = 0.35,
     seed: int = 42,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Semantic dedup over an embedding column, SemDeDup-style (Abbas et
     al. 2023): k-means-cluster the space, find near-duplicate pairs only
@@ -921,8 +725,6 @@ def semdedup(
     keep the member FARTHEST from its cluster centroid (lowest
     centroid-cosine; deterministic min-id tiebreak).
     """
-    from .similarity import cached_ivf_index, cosine, ivf_index, l2_norm
-
     # Scope AQE's cached-plan re-partitioning to THIS operator, and only
     # in the SMALL-INPUT regime: with few vectors the cost is a ~10-job x
     # 32-task scheduling floor, and letting AQE coalesce the tiny
@@ -935,9 +737,7 @@ def semdedup(
     # compute-dense joins (PPJoin) collapse under it — see session.py.
     n = vectors.count()
     if n > _SEMDEDUP_AQE_CACHE_MAX_ROWS:
-        return _semdedup_inner(
-            vectors, id_col, vec_col, nlist, cos_threshold, seed, cache_key
-        )
+        return _semdedup_inner(vectors, id_col, vec_col, nlist, cos_threshold, seed)
     sess = vectors.sparkSession
     _aqe_key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
     try:
@@ -946,9 +746,7 @@ def semdedup(
         _aqe_prev = None
     sess.conf.set(_aqe_key, "true")
     try:
-        return _semdedup_inner(
-            vectors, id_col, vec_col, nlist, cos_threshold, seed, cache_key
-        )
+        return _semdedup_inner(vectors, id_col, vec_col, nlist, cos_threshold, seed)
     finally:
         if _aqe_prev is None:
             sess.conf.unset(_aqe_key)
@@ -963,18 +761,10 @@ def _semdedup_inner(
     nlist: int,
     cos_threshold: float,
     seed: int,
-    cache_key: str | None,
 ) -> DataFrame:
-    from .similarity import cached_ivf_index, cosine, ivf_index, l2_norm
+    from .similarity import cached_ivf_index, const_array, cosine, l2_norm
 
-    if cache_key is not None:
-        assigned, centroids = cached_ivf_index(
-            vectors, nlist, id_col, vec_col, seed, cache_key
-        )
-    else:
-        assigned, centroids = ivf_index(vectors, nlist, id_col, vec_col, seed)
-
-    from .similarity import const_array
+    assigned, centroids = cached_ivf_index(vectors, nlist, id_col, vec_col, seed)
 
     cent_arr = F.array(*[const_array(c) for c in centroids])
     base = (
@@ -1114,35 +904,26 @@ def _positional_shingle_frame(
     id_col: str,
     text_col: str,
     w: int,
-    cache_key: str | None,
 ) -> DataFrame:
-    """(_id, _pos, _h) persisted frame of POSITIONED w-token shingle
+    """(_id, _pos, _h) tiered frame of POSITIONED w-token shingle
     hashes (1-based position). Persisted because every consumer reads
     it at least three times (document-frequency pass + both sides of
     the anchored self-join) and Catalyst's projection collapse would
     otherwise inline tokenize+shingle+md5 into each read — the same
-    recompute trap ``_shingle_frame`` exists to avoid. Tracked in
-    ``_FRAME_CACHE`` (evict via ``clear_frame_cache``)."""
+    recompute trap ``_shingle_frame`` exists to avoid. A
+    ``frames.tier`` entry (evict via ``frames.clear_frame_cache``)."""
+    return tier(_positional_shingles, df, id_col=id_col, text_col=text_col, w=w)
 
-    def build():
-        toks = (
-            fan_out(df)
-            .select(F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_tk"))
-            .filter(F.size("_tk") >= w)
-        )
-        sh = (
-            toks.select(
-                "_id", F.posexplode(shingles_zip(F.col("_tk"), w)).alias("_pos0", "_s")
-            )
-            .select(
-                "_id", (F.col("_pos0") + 1).alias("_pos"), F.md5(F.col("_s")).alias("_h")
-            )
-            .persist()
-        )
-        return [sh]
 
-    key = ("pos-shingles", cache_key, id_col, text_col, w) if cache_key else None
-    return _cached(df, key, build)
+def _positional_shingles(df: DataFrame, id_col: str, text_col: str, w: int) -> DataFrame:
+    toks = (
+        fan_out(df)
+        .select(F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_tk"))
+        .filter(F.size("_tk") >= w)
+    )
+    return toks.select(
+        "_id", F.posexplode(shingles_zip(F.col("_tk"), w)).alias("_pos0", "_s")
+    ).select("_id", (F.col("_pos0") + 1).alias("_pos"), F.md5(F.col("_s")).alias("_h"))
 
 
 def dup_span_runs(
@@ -1151,7 +932,6 @@ def dup_span_runs(
     text_col: str,
     w: int = 8,
     max_df: int = 20,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Shared token RUNS across doc pairs → one row per maximal run:
     ``(doc_a, doc_b, run_shingles, j0)`` with ``doc_a < doc_b``,
@@ -1173,13 +953,11 @@ def dup_span_runs(
     SCALING.md, where the harness scales the cap with the replication
     factor).
 
-    ``cache_key`` (recommended: the corpus path) shares the persisted
-    positional-shingle frame across invocations — the t40/t41 pair
-    reads it once instead of shingling the corpus per query. Without
-    it the frame is still persisted for the three reads within one
-    invocation but is not session-cached.
+    The positional-shingle frame is a ``frames.tier`` entry, so the
+    t40/t41 pair reads it once instead of shingling the corpus per
+    query.
     """
-    sh = _positional_shingle_frame(df, id_col, text_col, w, cache_key)
+    sh = _positional_shingle_frame(df, id_col, text_col, w)
     freq = (
         sh.groupBy("_h")
         .agg(F.countDistinct("_id").alias("_df"))

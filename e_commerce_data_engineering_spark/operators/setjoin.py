@@ -14,8 +14,39 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import tier
 from ..functions.text import tokens
 from .layout import fan_out
+
+
+def _rarest_first_sets(
+    df: DataFrame, id_col: str, text_col: str, groups: tuple[str, ...]
+) -> DataFrame:
+    base = (
+        fan_out(df)
+        .select(
+            F.col(id_col).alias("_id"),
+            *groups,
+            F.array_distinct(
+                F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t))
+            ).alias("_ts"),
+        )
+        .filter(F.size("_ts") > 0)
+    )
+    tok = base.select("_id", *groups, F.explode("_ts").alias("_tok"))
+    freq = tok.groupBy("_tok").agg(F.count("*").alias("_freq"))
+    # rarest-first total order per doc: sort (freq, token-hash)
+    # structs, then strip back to token hashes
+    return (
+        tok.join(freq, "_tok")
+        .groupBy("_id", *groups)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("_freq", "_tok"))),
+                lambda s: s["_tok"],
+            ).alias("_ts")
+        )
+    )
 
 
 def jaccard_similarity_join(
@@ -24,7 +55,6 @@ def jaccard_similarity_join(
     text_col: str,
     threshold: float,
     group_cols: list[str] | None = None,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """All pairs with token-set Jaccard >= threshold → (id_a, id_b,
     jaccard). Exact (verified), corpus-wide (no blocking key needed).
@@ -48,51 +78,13 @@ def jaccard_similarity_join(
     # r12 (guide §2.4): the rarest-first ordered-set frame feeds the
     # prefix fanout (both inverted-index join sides) AND both exact-
     # verify set joins — 4 subtrees whose lazy persists raced and
-    # re-ran the tokenize + frequency-sort build per consumer. With a
-    # cache_key it rides the scratch-parquet frame tier (built once
-    # per process); without one the persists keep the old behavior.
-    def build_ordered():
-        base = (
-            fan_out(df)
-            .select(
-                F.col(id_col).alias("_id"),
-                *groups,
-                F.array_distinct(
-                    F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t))
-                ).alias("_ts"),
-            )
-            .filter(F.size("_ts") > 0)
-            .persist()
-        )
-        tok = base.select("_id", *groups, F.explode("_ts").alias("_tok"))
-        freq = tok.groupBy("_tok").agg(F.count("*").alias("_freq"))
-        # rarest-first total order per doc: sort (freq, token-hash)
-        # structs, then strip back to token hashes
-        return [
-            tok.join(freq, "_tok")
-            .groupBy("_id", *groups)
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("_freq", "_tok"))),
-                    lambda s: s["_tok"],
-                ).alias("_ts")
-            )
-            .persist(),
-            base,
-        ]
-
-    from .dedup import _cached
-
-    # threshold deliberately NOT in the key (ADVICE r12): the rarest-
-    # first ordered build is threshold-independent, so two queries over
-    # the same corpus at different thresholds share the frame instead
-    # of rebuilding it.
-    key = (
-        ("ppjoin-ordered", cache_key, id_col, text_col, tuple(groups))
-        if cache_key
-        else None
+    # re-ran the tokenize + frequency-sort build per consumer. It is a
+    # frames.tier entry (built once per process). The build does not
+    # take the threshold, so two queries over the same corpus at
+    # different thresholds share the frame instead of rebuilding it.
+    ordered = tier(
+        _rarest_first_sets, df, id_col=id_col, text_col=text_col, groups=tuple(groups)
     )
-    ordered = _cached(df, key, build_ordered)
     n = F.size("_ts")
     # epsilon-guarded ceil: 0.8*45 floats to 36.000000000000001 and a
     # naive ceil would shorten the prefix below the safe bound (losing

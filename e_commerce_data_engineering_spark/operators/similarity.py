@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from .. import frames
+
 
 def const_array(values, element_type: str = "double") -> Column:
     """Plan-literal (possibly nested) double array, shipped as ONE json
@@ -288,12 +290,15 @@ def ivf_index(
     return assigned, centroids
 
 
-# (applicationId, cache_key, nlist, seed) -> (persisted assigned frame, centroids).
-# The index is the expensive half of IVF (an assignment pass + bounded
-# driver collects); probes are cheap. Caching it per session is the
-# in-memory analog of writing the assigned table out partitioned-by-cell
-# (write_ivf_index) — build once, probe many.
-_IVF_CACHE: dict[tuple, tuple[DataFrame, list[list[float]]]] = {}
+# frames.key of ivf_index over the vectors plan -> (vectors, persisted
+# assigned frame, centroids). The index is the expensive half of IVF (an
+# assignment pass + bounded driver collects); probes are cheap. Caching
+# it per session is the in-memory analog of writing the assigned table
+# out partitioned-by-cell (write_ivf_index) — build once, probe many.
+# Keyed like the frame tier, so every query over the same vectors plan
+# (d06 and d07; s05 and s11) shares one index and no other corpus can
+# reach it.
+_IVF_CACHE: dict[tuple, tuple[DataFrame, DataFrame, list[list[float]]]] = {}
 
 
 def cached_ivf_index(
@@ -302,37 +307,35 @@ def cached_ivf_index(
     id_col: str,
     vec_col: str,
     seed: int,
-    cache_key: str,
     rebuild: bool = False,
 ) -> tuple[DataFrame, list[list[float]]]:
-    key = (vectors.sparkSession.sparkContext.applicationId, cache_key, nlist, seed)
-    if rebuild and key in _IVF_CACHE:
-        _IVF_CACHE.pop(key)[0].unpersist()
-    if key in _IVF_CACHE:
-        # A spark.catalog.clearCache() in the caller's context (bench.py
-        # runs one per query) evicts the persist marker without this
-        # dict noticing; re-persist so consumers don't silently
-        # recompute the assignment pass per probe (dedup._frames_live
-        # is the same guard for the text-dedup frames).
-        sl = _IVF_CACHE[key][0].storageLevel
-        if not (sl.useMemory or sl.useDisk):
-            _IVF_CACHE[key][0].persist()
-    if key not in _IVF_CACHE:
+    key = frames.key(
+        ivf_index, (vectors,), dict(nlist=nlist, id_col=id_col, vec_col=vec_col, seed=seed)
+    )
+    hit = _IVF_CACHE.get(key)
+    if hit is not None and (rebuild or not frames.same_inputs((hit[0],), (vectors,))):
+        _IVF_CACHE.pop(key)[1].unpersist()
+        hit = None
+    if hit is None:
         assigned, centroids = ivf_index(vectors, nlist, id_col, vec_col, seed)
-        _IVF_CACHE[key] = (assigned.persist(), centroids)
-    return _IVF_CACHE[key]
+        hit = _IVF_CACHE[key] = (vectors, assigned.persist(), centroids)
+    elif not (hit[1].storageLevel.useMemory or hit[1].storageLevel.useDisk):
+        # a clearCache() in the caller's context (bench.py runs one per
+        # query) evicted the persist: re-persist so consumers don't
+        # recompute the assignment pass per probe
+        hit[1].persist()
+    return hit[1], hit[2]
 
 
-def clear_ivf_cache(cache_key: str | None = None) -> int:
-    """Evict cached IVF indexes (all, or just ``cache_key``'s entries),
-    unpersisting their frames — keeps long sessions' executor storage
-    bounded when many keys accumulate. Returns the number evicted."""
-    evict = [
-        k for k in _IVF_CACHE if cache_key is None or k[1] == cache_key
-    ]
-    for k in evict:
-        _IVF_CACHE.pop(k)[0].unpersist()
-    return len(evict)
+def clear_ivf_cache() -> int:
+    """Evict every cached IVF index, unpersisting its frame — keeps
+    long sessions' executor storage bounded when many corpora
+    accumulate. Returns the number evicted."""
+    n = len(_IVF_CACHE)
+    for _, assigned, _ in _IVF_CACHE.values():
+        assigned.unpersist()
+    _IVF_CACHE.clear()
+    return n
 
 
 def write_ivf_index(
@@ -416,27 +419,18 @@ def ivf_cosine_topk(
     vec_col: str = "embedding",
     seed: int = 42,
     index: tuple[DataFrame, list[list[float]]] | None = None,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Approximate top-k via IVF probing: score only vectors whose cell
     is one of the query's nprobe nearest cells, exact re-rank inside.
 
     Recall vs brute force rises with nprobe (nprobe=nlist is exact).
     Scale: the index (cell-assigned vectors + centroids) is built ONCE
-    — pass ``index`` from read_ivf_index/build, or ``cache_key`` to
-    reuse a per-session build — and probes touch nprobe/nlist of the
+    — pass ``index`` from read_ivf_index/build, or let the per-session
+    ``cached_ivf_index`` build it — and probes touch nprobe/nlist of the
     corpus; the centroid argmin is O(nlist*dim) per row of plan-literal
     arithmetic. Rebuilding per query call is the anti-pattern (a full
     assignment pass per probe batch)."""
-    if index is not None:
-        assigned, centroids = index
-    elif cache_key is not None:
-        assigned, centroids = cached_ivf_index(
-            candidates, nlist, id_col, vec_col, seed, cache_key
-        )
-    else:
-        assigned, centroids = ivf_index(candidates, nlist, id_col, vec_col, seed)
-        assigned = assigned.persist()
+    assigned, centroids = index or cached_ivf_index(candidates, nlist, id_col, vec_col, seed)
 
     # nprobe nearest cells per query: explode centroid distances, rank
     q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("_qv")).persist()
@@ -783,7 +777,6 @@ def ivfpq_topk(
     vec_col: str = "embedding",
     seed: int = 42,
     index: tuple[DataFrame, list[list[float]]] | None = None,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """IVF-PQ search (Jégou et al. 2011, §IV's IVFADC layout): IVF cell
     pruning composed with PQ compression. The scan table is (id, cell,
@@ -801,15 +794,7 @@ def ivfpq_topk(
     (pq_topk); residual encoding is the known refinement when cells
     are tight. Recall floor vs the exact baseline is asserted in
     tests/test_operators.py."""
-    if index is not None:
-        assigned, centroids = index
-    elif cache_key is not None:
-        assigned, centroids = cached_ivf_index(
-            candidates, nlist, id_col, vec_col, seed, cache_key
-        )
-    else:
-        assigned, centroids = ivf_index(candidates, nlist, id_col, vec_col, seed)
-        assigned = assigned.persist()
+    assigned, centroids = index or cached_ivf_index(candidates, nlist, id_col, vec_col, seed)
 
     # the compressed scan table: cell id + PQ codes, materialized (the
     # d01 lesson: never let Catalyst inline the argmin encode into the

@@ -9,9 +9,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..frames import tier
 from ..operators.asof import asof_join_backward
 from ..operators.dedup import (
-    _cached,
     minhash_dedupe,
     minhash_lsh_pairs,
     minhash_lsh_pairs_portable,
@@ -114,7 +114,7 @@ def q22_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d01_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return minhash_lsh_pairs(
-        d, "doc_id", "text", num_hashes=64, bands=16, jaccard_threshold=0.5, cache_key=sf_dir
+        d, "doc_id", "text", num_hashes=64, bands=16, jaccard_threshold=0.5
     )
 
 
@@ -186,7 +186,6 @@ def d09_portable_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_hashes=_D09_K,
         bands=_D09_BANDS,
         jaccard_threshold=0.5,
-        cache_key=sf_dir,
     )
     return pairs.select(
         "id_a",
@@ -308,10 +307,10 @@ def d14_lsh_scurve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    sig = portable_signature_frame(d, "doc_id", "text", _D09_K, 3, cache_key=sf_dir)
+    sig = portable_signature_frame(d, "doc_id", "text", _D09_K, 3)
     banded = portable_banded_frame(sig, _D09_BANDS, _D09_R)
     cand = anchored_candidate_pairs(
-        d, "doc_id", "text", shingle_n=3, max_df=D14_MAX_DF, cache_key=sf_dir
+        d, "doc_id", "text", shingle_n=3, max_df=D14_MAX_DF
     )
     sh = sig.select("_id", "_sh")
     inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
@@ -437,9 +436,9 @@ def d15_minhash_estimator_calibration(spark: SparkSession, sf_dir: str) -> DataF
     from ..operators.dedup import anchored_candidate_pairs, portable_signature_frame
 
     d = load_table(spark, sf_dir, "documents")
-    sig = portable_signature_frame(d, "doc_id", "text", _D09_K, 3, cache_key=sf_dir)
+    sig = portable_signature_frame(d, "doc_id", "text", _D09_K, 3)
     cand = anchored_candidate_pairs(
-        d, "doc_id", "text", shingle_n=3, max_df=D14_MAX_DF, cache_key=sf_dir
+        d, "doc_id", "text", shingle_n=3, max_df=D14_MAX_DF
     )
     both = sig.select("_id", "_sh", "_sig")
     inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
@@ -499,7 +498,7 @@ def d15_minhash_estimator_calibration(spark: SparkSession, sf_dir: str) -> DataF
 )
 def d03_minhash_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    kept = minhash_dedupe(d, "doc_id", "text", cache_key=sf_dir)
+    kept = minhash_dedupe(d, "doc_id", "text")
     return kept.groupBy("lang").agg(F.count("*").alias("n_kept"))
 
 
@@ -516,7 +515,7 @@ def d05_cc_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import minhash_dedupe_cc
 
     d = load_table(spark, sf_dir, "documents")
-    kept = minhash_dedupe_cc(d, "doc_id", "text", cache_key=sf_dir)
+    kept = minhash_dedupe_cc(d, "doc_id", "text")
     return kept.groupBy("lang").agg(F.count("*").alias("n_kept"))
 
 
@@ -527,7 +526,7 @@ def d05_cc_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d02_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    return simhash_pairs(d, "doc_id", "text", max_hamming=3, cache_key=sf_dir)
+    return simhash_pairs(d, "doc_id", "text", max_hamming=3)
 
 
 @query(
@@ -549,7 +548,7 @@ def s04_lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="IVF approximate cosine top-k: KMeans cells + nprobe-nearest-"
     "cell probing, exact re-rank inside probed cells — the partition-"
     "pruning ANN scale path (operators/similarity.ivf_cosine_topk). "
-    "The index is built once per session (cache_key) — the in-memory "
+    "The index is built once per session (cached_ivf_index) — the in-memory "
     "analog of write_ivf_index's partitioned-by-cell table; probes "
     "never pay the assignment pass again.",
 )
@@ -558,7 +557,7 @@ def s05_ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    return ivf_cosine_topk(e, q, k=5, nlist=16, nprobe=6, cache_key=sf_dir)
+    return ivf_cosine_topk(e, q, k=5, nlist=16, nprobe=6)
 
 
 # (applicationId, sf_dir) -> trained PQ codebooks. Bounded driver state
@@ -623,8 +622,7 @@ def s11_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _PQ_CODEBOOKS[key] = pq_train(e, dim=64, m_subs=8, k_codes=16, seed=42)
     q = e.filter(F.col("vec_id") < 5)
     return ivfpq_topk(
-        e, q, _PQ_CODEBOOKS[key], k=10, nlist=16, nprobe=8, rerank=100,
-        cache_key=sf_dir,
+        e, q, _PQ_CODEBOOKS[key], k=10, nlist=16, nprobe=8, rerank=100
     ).select("q_id", "vec_id", fround(F.col("cos_sim"), 6).alias("cos_sim"), "rn")
 
 
@@ -970,7 +968,7 @@ def d10_portable_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import token_frame
 
     d = load_table(spark, sf_dir, "documents")
-    return _d10_pairs_from_tokens(token_frame(d, "doc_id", "text", cache_key=sf_dir))
+    return _d10_pairs_from_tokens(token_frame(d, "doc_id", "text"))
 
 
 def _d10_pairs_from_tokens(tok: DataFrame) -> DataFrame:
@@ -1284,6 +1282,28 @@ MM_PAIR_ID_OFFSET = 1000
 M08_MAX_HAM = 3  # pigeonhole: Hamming <= 3 guarantees >= 1 equal band
 
 
+def _real_asset_pairs(n_assets: int, factor: int, id_offset: int) -> DataFrame:
+    """The generated assets plus their upscaled copies. Built from
+    params (local rows never plan the same way twice, so they cannot
+    be a tier input)."""
+    from ..operators.multimodal import make_real_assets, upscale_assets
+
+    assets = make_real_assets(SparkSession.active(), n_assets).select(
+        "asset_id", "modality", "content", "meta"
+    )
+    return assets.unionByName(upscale_assets(assets, factor=factor, id_offset=id_offset))
+
+
+def _m08_fingerprints(**params) -> DataFrame:
+    from ..operators.multimodal import image_ahash
+
+    return image_ahash(_real_asset_pairs(**params)).select(
+        "asset_id",
+        F.conv(F.substring("ahash_bits", 1, 32), 2, 10).cast("bigint").alias("hi"),
+        F.conv(F.substring("ahash_bits", 33, 32), 2, 10).cast("bigint").alias("lo"),
+    )
+
+
 @query(
     "m08_image_neardup_pairs",
     oracle=f"""
@@ -1360,33 +1380,14 @@ M08_MAX_HAM = 3  # pigeonhole: Hamming <= 3 guarantees >= 1 equal band
     "band join is equi (candidates ~ bucket collisions, not n²).",
 )
 def m08_image_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import image_ahash, make_real_assets, upscale_assets
-
-    assets = make_real_assets(spark, MM_PAIR_N_ASSETS).select(
-        "asset_id", "modality", "content", "meta"
-    )
-    both = assets.unionByName(
-        upscale_assets(assets, factor=MM_PAIR_UPSCALE, id_offset=MM_PAIR_ID_OFFSET)
-    )
     # r12 (guide §2.4): the decoded aHash frame feeds both band-join
     # sides — the lazy persist let them race and run the PNG decode
     # twice inside one job. Scratch-tier build (240 rows).
-    fp = _cached(
-        both,
-        ("m08-fp", MM_PAIR_N_ASSETS, MM_PAIR_UPSCALE),
-        lambda: [
-            image_ahash(both)
-            .select(
-                "asset_id",
-                F.conv(F.substring("ahash_bits", 1, 32), 2, 10)
-                .cast("bigint")
-                .alias("hi"),
-                F.conv(F.substring("ahash_bits", 33, 32), 2, 10)
-                .cast("bigint")
-                .alias("lo"),
-            )
-            .persist()
-        ],
+    fp = tier(
+        _m08_fingerprints,
+        n_assets=MM_PAIR_N_ASSETS,
+        factor=MM_PAIR_UPSCALE,
+        id_offset=MM_PAIR_ID_OFFSET,
     )
     bands = fp.select(
         "asset_id",
@@ -1611,6 +1612,16 @@ M09_N_ASSETS = 120
 M09_MIN_SHARED = 3  # pairs must share at least this many landmark hashes
 
 
+def _m09_landmarks(n_assets: int) -> DataFrame:
+    from ..operators.multimodal import audio_fingerprint, make_real_assets, rescale_audio
+
+    assets = make_real_assets(SparkSession.active(), n_assets).select(
+        "asset_id", "modality", "content", "meta"
+    )
+    both = assets.unionByName(rescale_audio(assets, gain=0.4, id_offset=1000))
+    return audio_fingerprint(both).distinct()
+
+
 @query(
     "m09_audio_neardup_pairs",
     oracle=None,  # real STFT peak landmarks — no SQL twin (the audio
@@ -1635,24 +1646,10 @@ M09_MIN_SHARED = 3  # pairs must share at least this many landmark hashes
     "per clip; the pair join shuffles on fp_hash.",
 )
 def m09_audio_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import (
-        audio_fingerprint,
-        make_real_assets,
-        rescale_audio,
-    )
-
-    assets = make_real_assets(spark, M09_N_ASSETS).select(
-        "asset_id", "modality", "content", "meta"
-    )
-    both = assets.unionByName(rescale_audio(assets, gain=0.4, id_offset=1000))
     # r12 (guide §2.4): the landmark fingerprints feed both pair-join
     # sides — un-materialized, the real WAV decode + STFT ran twice
-    # inside one job. Scratch-tier build keyed by the asset params.
-    fp = _cached(
-        both,
-        ("m09-fp", M09_N_ASSETS),
-        lambda: [audio_fingerprint(both).distinct().persist()],
-    )
+    # inside one job. Scratch-tier build from the asset params.
+    fp = tier(_m09_landmarks, n_assets=M09_N_ASSETS)
     a = fp.select(F.col("asset_id").alias("id_a"), "fp_hash")
     b = fp.select(F.col("asset_id").alias("id_b"), F.col("fp_hash").alias("_h2"))
     pairs = (
@@ -1924,9 +1921,9 @@ def d18_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import anchored_candidate_pairs, portable_signature_frame
 
     d = load_table(spark, sf_dir, "documents")
-    sig = portable_signature_frame(d, "doc_id", "text", _D09_K, 3, cache_key=sf_dir)
+    sig = portable_signature_frame(d, "doc_id", "text", _D09_K, 3)
     cand = anchored_candidate_pairs(
-        d, "doc_id", "text", shingle_n=3, max_df=D14_MAX_DF, cache_key=sf_dir
+        d, "doc_id", "text", shingle_n=3, max_df=D14_MAX_DF
     )
     sh = sig.select("_id", "_sh")
     inter = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("bigint")
@@ -2051,8 +2048,7 @@ def d18_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rollup.",
 )
 def d19_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions import text as X
-    from ..operators.dedup import _cached, token_frame
+    from ..operators.dedup import token_frame
 
     d = load_table(spark, sf_dir, "documents")
 
@@ -2069,19 +2065,19 @@ def d19_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scratch-parquet frame tier so its three consumers — two of them
     # concurrently-started broadcast builds — read one materialized
     # frame instead of racing to rebuild it (the s29 lesson).
-    def build_h():
-        tf = token_frame(d, "doc_id", "text", cache_key=sf_dir)
+    def build_h(tf: DataFrame, d: DataFrame) -> DataFrame:
+        from ..functions import text as X
+
         src = d.select(F.col("doc_id").alias("_id"), "source")
-        return [
+        return (
             tf.filter(F.size("_tk") >= 3)
             .select("_id", X.min_shingle_fingerprint(F.col("_tk")).alias("hh"))
             .join(F.broadcast(src), "_id")
             .select("source", "hh")
             .distinct()
-            .persist()
-        ]
+        )
 
-    h = _cached(d, ("d19-source-fp", sf_dir), build_h)
+    h = tier(build_h, token_frame(d, "doc_id", "text"), d)
     per = h.groupBy("source").agg(F.count(F.lit(1)).cast("bigint").alias("n_distinct"))
     a = h.select(F.col("source").alias("source_a"), "hh")
     b = h.select(F.col("source").alias("source_b"), F.col("hh").alias("_h2"))
@@ -2434,6 +2430,14 @@ M13_BANDS = 7  # 7 x 9-bit bands over the 63-bit phash
 M13_MAX_HAM = 6  # pigeonhole: Hamming <= 6 guarantees >= 1 equal band
 
 
+def _m13_fingerprints(**params) -> DataFrame:
+    from ..operators.multimodal import image_phash
+
+    return image_phash(_real_asset_pairs(**params)).select(
+        "asset_id", F.conv(F.col("phash_bits"), 2, 10).cast("bigint").alias("fp")
+    )
+
+
 @query(
     "m13_phash_neardup_pairs",
     oracle=f"""
@@ -2512,29 +2516,15 @@ M13_MAX_HAM = 6  # pigeonhole: Hamming <= 6 guarantees >= 1 equal band
     "bucket collisions, not n^2).",
 )
 def m13_phash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import image_phash, make_real_assets, upscale_assets
-
-    assets = make_real_assets(spark, MM_PAIR_N_ASSETS).select(
-        "asset_id", "modality", "content", "meta"
-    )
-    both = assets.unionByName(
-        upscale_assets(assets, factor=MM_PAIR_UPSCALE, id_offset=MM_PAIR_ID_OFFSET)
-    )
     # r12 (guide §2.4): the decoded pHash frame feeds BOTH band-join
     # sides — the lazy persist let them race and run the real PNG/JPEG
     # decode pipeline twice inside one job. Scratch-tier build (240
-    # rows), keyed by the generated-asset params.
-    fp = _cached(
-        both,
-        ("m13-fp", MM_PAIR_N_ASSETS, MM_PAIR_UPSCALE),
-        lambda: [
-            image_phash(both)
-            .select(
-                "asset_id",
-                F.conv(F.col("phash_bits"), 2, 10).cast("bigint").alias("fp"),
-            )
-            .persist()
-        ],
+    # rows) from the generated-asset params.
+    fp = tier(
+        _m13_fingerprints,
+        n_assets=MM_PAIR_N_ASSETS,
+        factor=MM_PAIR_UPSCALE,
+        id_offset=MM_PAIR_ID_OFFSET,
     )
     bands = fp.select(
         "asset_id",
@@ -2638,7 +2628,6 @@ _D22_Q = 1_000_000.0  # 1e-6 tf-idf weight quantization
     "(doc, shingle)-grain rollups with map-side combine.",
 )
 def d22_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions import text as X
     from ..operators.dedup import token_frame
 
     d = load_table(spark, sf_dir, "documents")
@@ -2646,22 +2635,20 @@ def d22_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12 (guide §2.4): the tf rollup fed n/idf/w (3 subtrees) and the
     # weight frame fed nrm + both posting-join sides (3 more) — the
     # shingle explode re-ran per consumer. The weight frame now builds
-    # ONCE on the scratch tier from the shared d-family token frame;
-    # tf persists for the build's own three consumers.
-    def build_w():
-        tkf = token_frame(d, "doc_id", "text", cache_key=sf_dir)
+    # ONCE on the scratch tier from the shared d-family token frame.
+    def build_w(tkf: DataFrame) -> DataFrame:
+        from ..functions import text as X
+
         toks = tkf.filter(F.size("_tk") >= 3).select(
             F.col("_id").alias("doc_id"), F.col("_tk").alias("ts")
         )
         sh = toks.select(
             "doc_id", F.explode(X.shingles_zip(F.col("ts"), 3)).alias("s")
         )
-        tf = sh.groupBy("doc_id", "s").agg(
-            F.count(F.lit(1)).cast("bigint").alias("tf")
-        ).persist()
+        tf = sh.groupBy("doc_id", "s").agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
         n = tf.agg(F.count_distinct("doc_id").cast("bigint").alias("n"))
         idf = tf.groupBy("s").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-        return [
+        return (
             tf.join(idf, "s")
             .filter((F.col("df") >= D22_DF_MIN) & (F.col("df") <= D22_DF_MAX))
             .crossJoin(F.broadcast(n))
@@ -2677,11 +2664,9 @@ def d22_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("wq"),
             )
-            .persist(),
-            tf,
-        ]
+        )
 
-    w = _cached(d, ("d22-w", sf_dir), build_w)
+    w = tier(build_w, token_frame(d, "doc_id", "text"))
     nrm = w.groupBy("doc_id").agg(
         F.sum(F.col("wq") * F.col("wq")).cast("bigint").alias("nq")
     )

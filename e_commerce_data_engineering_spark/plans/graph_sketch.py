@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..frames import tier
 from ..operators.sketch import sql_portable_bucket
 from ..sources.tables import load_table
 from .money import fround, sql_fround
@@ -1282,30 +1283,19 @@ _G07_Q = "1000000000.0"  # 1e-9 quantization of 1/ln(deg) AA terms
     "TakeOrdered for the cut.",
 )
 def g07_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _cached
-
     li = load_table(spark, sf_dir, "lineitem")
 
     # r12 (guide §2.4): the df-capped bipartite edge list feeds the
     # wedge self-join (both sides) AND the supplier-degree rollup —
     # un-persisted, the lineitem distinct + degree-cap join re-ran once
-    # per consumer (6.2 s solo at sf0.1). One keyed build on the
-    # scratch-parquet tier; the inner distinct is persisted for the
-    # build's own two consumers (degree rollup + cap join) and released
-    # with the entry.
-    def build_ef():
-        e = (
-            li.select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
-            .distinct()
-            .persist()
-        )
+    # per consumer (6.2 s solo at sf0.1). One build on the
+    # scratch-parquet tier.
+    def build_ef(li: DataFrame) -> DataFrame:
+        e = li.select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")).distinct()
         dp = e.groupBy("p").agg(F.count(F.lit(1)).cast("bigint").alias("deg_p"))
-        return [
-            e.join(dp, "p").filter(F.col("deg_p") <= _G07_DF_CAP).persist(),
-            e,
-        ]
+        return e.join(dp, "p").filter(F.col("deg_p") <= _G07_DF_CAP)
 
-    ef = _cached(li, ("g07-edges", sf_dir), build_ef)
+    ef = tier(build_ef, li)
     ds = ef.groupBy("s").agg(F.count(F.lit(1)).cast("bigint").alias("deg_s"))
     q9 = float(_G07_Q)
     a = ef.select(F.col("p"), F.col("s").alias("s_a"), F.col("deg_p"))
@@ -1820,6 +1810,18 @@ def _x12_sign_sql(d: int) -> str:
     return f"(1 - 2 * (({sql_portable_hash('token', _X12_SIGN_MULTS[d])}) % 2))"
 
 
+def _x12_token_counts(d: DataFrame) -> DataFrame:
+    from ..functions.text import tokens
+    from ..operators.layout import fan_out
+
+    return (
+        fan_out(d)
+        .select(F.explode(tokens(F.col("text"))).alias("token"))
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+    )
+
+
 @query(
     "x12_count_sketch",
     oracle=f"""
@@ -1885,10 +1887,6 @@ def _x12_sign_sql(d: int) -> str:
     "streaming twin stores per-batch grids and folds them read-side.",
 )
 def x12_count_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-    from ..operators.dedup import _cached
-    from ..operators.layout import fan_out
-
     d = load_table(spark, sf_dir, "documents")
     # r13 (guide §2.4): per_tok fed the grid build AND the exact top-k
     # sort, and exact fed the probe list AND the final join — the
@@ -1896,27 +1894,13 @@ def x12_count_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Both ride the scratch tier now (per_tok is THE per-token count
     # table an ingest pipeline materializes; exact is 10 rows), and the
     # tokenize fans out first (one parquet file must not mean one task).
-    per_tok = _cached(
-        d,
-        ("x12-pertok", sf_dir),
-        lambda: [
-            fan_out(d)
-            .select(F.explode(tokens(F.col("text"))).alias("token"))
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-            .persist()
-        ],
-    )
+    per_tok = tier(_x12_token_counts, d)
     grid = cs_grid(per_tok)
-    exact = _cached(
-        d,
-        ("x12-exact", sf_dir),
-        lambda: [
-            per_tok.select("token", F.col("cnt").alias("exact_cnt"))
-            .orderBy(F.col("exact_cnt").desc(), "token")
-            .limit(TOP_TOKENS)
-            .persist()
-        ],
+    exact = tier(
+        lambda per_tok: per_tok.select("token", F.col("cnt").alias("exact_cnt"))
+        .orderBy(F.col("exact_cnt").desc(), "token")
+        .limit(TOP_TOKENS),
+        per_tok,
     )
     est = cs_estimates(grid, exact.select("token"))
     return exact.join(est, "token").select(
@@ -2359,22 +2343,22 @@ G11_TOP = 20
     "cuts without a global sort.",
 )
 def g11_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _cached
-
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
 
     # r12 (guide §2.4): the capped purchase universe feeds the degree
     # rollup AND both pair-join sides — un-materialized, the
     # lineitem⋈orders distinct + basket-cap join re-ran once per
-    # consumer (3×). One keyed build on the scratch-parquet tier; the
-    # inner distinct persists for the build's own two consumers.
-    def build_cof():
-        co = (
-            li.join(o, li["l_orderkey"] == o["o_orderkey"])
+    # consumer (3×). One build on the scratch-parquet tier, over the
+    # inner distinct — a tier entry of its own, read by the build's two
+    # consumers.
+    def build_cof(li: DataFrame, o: DataFrame) -> DataFrame:
+        co = tier(
+            lambda li, o: li.join(o, li["l_orderkey"] == o["o_orderkey"])
             .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
-            .distinct()
-            .persist()
+            .distinct(),
+            li,
+            o,
         )
         keep = (
             co.groupBy("c")
@@ -2382,9 +2366,9 @@ def g11_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("_bsz") <= G11_BASKET_CAP)
             .select("c")
         )
-        return [co.join(keep, "c").persist(), co]
+        return co.join(keep, "c")
 
-    cof = _cached(li, ("g11-cof", sf_dir), build_cof)
+    cof = tier(build_cof, li, o)
     deg = cof.groupBy("p").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     a = cof.select("c", F.col("p").alias("p1"))
     b = cof.select(F.col("c").alias("_c2"), F.col("p").alias("p2"))
@@ -2576,26 +2560,19 @@ def g13_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # HITS step (4 subtrees) and a2 feeds both the authority readout
     # and the h2 step — lazy persists raced and re-ran the
     # lineitem⋈orders distinct per consumer. Scratch-tier builds.
-    from ..operators.dedup import _cached
-
-    e = _cached(
+    e = tier(
+        lambda li, o: li.join(o, li["l_orderkey"] == o["o_orderkey"])
+        .select(F.col("l_suppkey").alias("s"), F.col("o_custkey").alias("c"))
+        .distinct(),
         li,
-        ("g13-edges", sf_dir),
-        lambda: [
-            li.join(o, li["l_orderkey"] == o["o_orderkey"])
-            .select(F.col("l_suppkey").alias("s"), F.col("o_custkey").alias("c"))
-            .distinct()
-            .persist()
-        ],
+        o,
     )
     a0 = e.groupBy("c").agg(F.count(F.lit(1)).cast("bigint").alias("a"))
     h1 = e.join(a0, "c").groupBy("s").agg(F.sum("a").cast("bigint").alias("h"))
-    a2 = _cached(
-        li,
-        ("g13-a2", sf_dir),
-        lambda: [
-            e.join(h1, "s").groupBy("c").agg(F.sum("h").cast("bigint").alias("a")).persist()
-        ],
+    a2 = tier(
+        lambda e, h1: e.join(h1, "s").groupBy("c").agg(F.sum("h").cast("bigint").alias("a")),
+        e,
+        h1,
     )
     h2 = e.join(a2, "c").groupBy("s").agg(F.sum("a").cast("bigint").alias("h"))
     # TakeOrderedAndProject cut FIRST; the single-partition rank window

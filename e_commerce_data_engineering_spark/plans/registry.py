@@ -145,7 +145,7 @@ _PRIORITY: tuple[str, ...] = (
     "e52_funnel_conversion",
     # Plan-changed this round (VERDICT r11 #1b): the shared token/
     # shingle/signature frames now write-through to scratch parquet
-    # (operators/dedup._cached disk tier), so every d-family consumer's
+    # (the frames.tier disk tier), so every d-family consumer's
     # physical plan changed (values unchanged). Re-record officially,
     # bench tails first.
     "d18_minhash_band_tuning",

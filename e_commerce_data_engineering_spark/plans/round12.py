@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..frames import tier
 from ..functions.text import tokens
 from ..operators.sketch import _P1, portable_hash, sql_portable_hash
 from ..sources.tables import load_table
@@ -34,6 +35,13 @@ _Q12 = "1000000000000.0"  # 1e-12 quantization (the g02 discipline)
 _G17_SEEDS = ("s1", "s2", "s3")
 _G17_SEED_SQL = ", ".join(f"'{s}'" for s in _G17_SEEDS)
 _G17_TOPK = 15
+
+
+def _symmetric_edges(p: DataFrame, n_parts: int) -> DataFrame:
+    """Both directions of every (src, dst) edge, hash-clustered on src
+    (the g17/g18/g19 tier build)."""
+    both = p.unionAll(p.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    return both.repartition(n_parts, "src")
 
 
 @query(
@@ -119,17 +127,8 @@ def g17_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet frame tier — its three consumers start concurrently
     # inside one composed plan and a LAZY persist let them race and
     # each rebuild the lineitem⋈orders distinct (guide §2.4).
-    from ..operators.dedup import _cached
-
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    e = _cached(
-        li,
-        ("g17-edges", sf_dir),
-        lambda: [
-            p.unionAll(p.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-            .repartition(n_parts, "src")
-            .persist()
-        ],
+    e = tier(
+        _symmetric_edges, p, n_parts=max(spark.sparkContext.defaultParallelism, 8)
     )
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     seeds = spark.createDataFrame([(s,) for s in _G17_SEEDS], "node string")
@@ -489,20 +488,14 @@ def x23_linear_counting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shingle_postings(d: DataFrame, sh: DataFrame, sf_dir: str) -> DataFrame:
+def _shingle_postings(sh: DataFrame) -> DataFrame:
     """(_id, s) exploded shingle postings — the shared narrow form the
     d24/s34 posting-grain verifies join on (one row per distinct
     (doc, shingle); _sh is already per-doc distinct, so no dedup
-    shuffle is needed). Scratch-tiered once per corpus: at 100 TB this
-    IS the posting table an ingest pipeline materializes beside the
-    shingle sets."""
-    from ..operators.dedup import _cached
-
-    return _cached(
-        d,
-        ("d-postings", sf_dir, 3),
-        lambda: [sh.select("_id", F.explode("_sh").alias("s")).persist()],
-    )
+    shuffle is needed). Tiered once per corpus (``frames.tier``): at
+    100 TB this IS the posting table an ingest pipeline materializes
+    beside the shingle sets."""
+    return sh.select("_id", F.explode("_sh").alias("s"))
 
 
 # ---------------------------------------------------------------------------
@@ -565,8 +558,8 @@ _D24_CAND_SQL = f"""
     "resemblance for exactly this case). The 0.8 threshold is the "
     "exact integer predicate 5*n_inter >= 4*|side| (no float in the "
     "decision); candidate generation is the df-bounded anchored join "
-    "shared with d14/d18 (same cache key -> the scratch-parquet "
-    "frames are reused, not rebuilt). Scale: pair space is df²-"
+    "shared with d14/d18 (the same frames.tier entries -> the scratch-"
+    "parquet frames are reused, not rebuilt). Scale: pair space is df²-"
     "bounded per rare anchor; the directional ratios are per-pair "
     "arithmetic on three ints.",
 )
@@ -585,10 +578,8 @@ def d24_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # where the arrays cross the pair shuffle once. Posting grain wins
     # only for SELECTIVE candidate sets (the r12 LSH-banded verify);
     # density decides, and this one is measured.
-    sh = _shingle_frame(d, "doc_id", "text", 3, cache_key=sf_dir)
-    cand = anchored_candidate_pairs(
-        d, "doc_id", "text", shingle_n=3, max_df=D14_MAX_DF, cache_key=sf_dir
-    )
+    sh = _shingle_frame(d, "doc_id", "text", 3)
+    cand = anchored_candidate_pairs(d, "doc_id", "text", shingle_n=3, max_df=D14_MAX_DF)
     ni = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("bigint")
     sized = (
         cand.join(sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sh_a")), "id_a")
@@ -687,7 +678,7 @@ _S34_Q = "1000000.0"  # 1e-6 idf quantization
     "candidate set.",
 )
 def s34_idf_soft_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _cached, _shingle_frame, anchored_candidate_pairs
+    from ..operators.dedup import _shingle_frame, anchored_candidate_pairs
 
     d = load_table(spark, sf_dir, "documents")
     q = float(_S34_Q)
@@ -701,20 +692,17 @@ def s34_idf_soft_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (10.8 vs 3.2 s solo at sf0.1): the anchored candidate set is
     # dense, so candidates x |A| posting rows dwarf one array+map
     # payload per pair. Density decides; both variants were measured.
-    sh = _shingle_frame(d, "doc_id", "text", 3, cache_key=sf_dir)
-    cand = anchored_candidate_pairs(
-        d, "doc_id", "text", shingle_n=3, max_df=D14_MAX_DF, cache_key=sf_dir
-    )
+    sh = _shingle_frame(d, "doc_id", "text", 3)
+    cand = anchored_candidate_pairs(d, "doc_id", "text", shingle_n=3, max_df=D14_MAX_DF)
 
     # corpus-level artifacts a pipeline materializes once (the idf
     # table is the classic ingest-time side product): scratch-parquet
-    # cached like the shingle frame they derive from. The postings
-    # frame is shared with d24 (same key).
-    px = _shingle_postings(d, sh, sf_dir)
+    # tiered like the shingle frame they derive from.
+    px = tier(_shingle_postings, sh)
 
-    def build_idf():
+    def build_idf(sh: DataFrame, px: DataFrame, q: float) -> DataFrame:
         nd = sh.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        return [
+        return (
             px.groupBy("s")
             .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
             .crossJoin(F.broadcast(nd))
@@ -727,40 +715,26 @@ def s34_idf_soft_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("idfq"),
             )
-            .persist()
-        ]
+        )
 
-    idf = _cached(d, ("s34-idf", sf_dir), build_idf)
+    idf = tier(build_idf, sh, px, q=q)
     # weighted postings (_id, s, idfq): built once, feeds the per-doc
     # idf mass AND the per-doc weighted shingle map below
-    pxw = _cached(
-        d, ("s34-postings-w", sf_dir), lambda: [px.join(idf, "s").persist()]
-    )
+    pxw = tier(lambda px, idf: px.join(idf, "s"), px, idf)
     # per-doc idf mass: consumed from two subtrees (wa and wb joins) —
     # tiered so the posting rollup runs once, not once per side
-    wdoc = _cached(
-        d,
-        ("s34-wdoc", sf_dir),
-        lambda: [
-            pxw.groupBy("_id").agg(F.sum("idfq").cast("bigint").alias("w")).persist()
-        ],
+    wdoc = tier(
+        lambda pxw: pxw.groupBy("_id").agg(F.sum("idfq").cast("bigint").alias("w")), pxw
     )
     # per-doc shingle -> idfq map: the join payload that lets the pair
     # stage compute |A∩B| and Σ idfq(A∩B) in one local fold (guide
     # §4.1 built-ins / §2.3 shuffle-fewer-bytes: the map crosses the
     # pair shuffle once; nothing pair-grain is exploded or re-joined)
-    mw = _cached(
-        d,
-        ("s34-docmap", sf_dir),
-        lambda: [
-            pxw.groupBy("_id")
-            .agg(
-                F.map_from_entries(
-                    F.collect_list(F.struct("s", "idfq"))
-                ).alias("_m")
-            )
-            .persist()
-        ],
+    mw = tier(
+        lambda pxw: pxw.groupBy("_id").agg(
+            F.map_from_entries(F.collect_list(F.struct("s", "idfq"))).alias("_m")
+        ),
+        pxw,
     )
     zero = F.lit(0).cast("bigint")
     n_inter = F.aggregate(

@@ -15,11 +15,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..frames import tier
 from ..functions.text import tokens
 from ..sources.tables import load_table
 from .money import fround, sql_fround
 from .registry import query
 from .graph_sketch import _G03_EDGES_SQL
+from .round12 import _symmetric_edges
 from .similarity import EMBEDDING_DIM, N_QUERY_VECS
 
 _Q12 = "1000000000000.0"  # 1e-12 term quantization (the g02 discipline)
@@ -223,25 +225,21 @@ def _g18_sql_level(k: int, prev: str, out: str) -> str:
     )"""
 
 
-def _g18_peel_level(cur: DataFrame, k: int, n_parts: int) -> list[DataFrame]:
+def _g18_peel_level(cur: DataFrame, k: int, n_parts: int) -> DataFrame:
     """One ascending-k peel: restrict the half-edge frame to nodes of
-    degree >= k via two LeftSemi probes of the alive set. Returns the
-    [level frame, alive frame] pair for the scratch tier (alive is
-    persisted for the build's own two semi-join probes)."""
+    degree >= k via two LeftSemi probes of the alive set (a tier
+    build)."""
     alive = (
         cur.groupBy("src")
         .count()
         .filter(F.col("count") >= k)
         .select(F.col("src").alias("node"))
-        .persist()
     )
-    return [
+    return (
         cur.join(alive, cur["src"] == alive["node"], "left_semi")
         .join(alive, cur["dst"] == alive["node"], "left_semi")
         .repartition(n_parts, "src")
-        .persist(),
-        alive,
-    ]
+    )
 
 
 @query(
@@ -305,28 +303,12 @@ def g18_core_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the next level's alive rollup, both semi-join probes, the
     # census) race and re-expand the whole unrolled prefix (a ~350-
     # exchange pre-execution plan); the tier materializes each level
-    # exactly once per process, and the alive frame is persisted for
-    # the build's own two semi-join probes.
-    from ..operators.dedup import _cached
-
+    # exactly once per process.
     n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    e = _cached(
-        li,
-        ("g18-edges", sf_dir),
-        lambda: [
-            p.unionAll(p.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-            .repartition(n_parts, "src")
-            .persist()
-        ],
-    )
+    cur = tier(_symmetric_edges, p, n_parts=n_parts)
     levels = []
-    cur = e
     for k in _G18_LEVELS:
-        cur = _cached(
-            li,
-            ("g18-level", k, sf_dir),
-            lambda cur=cur, k=k: _g18_peel_level(cur, k, n_parts),
-        )
+        cur = tier(_g18_peel_level, cur, k=k, n_parts=n_parts)
         levels.append(
             cur.groupBy(F.substring("src", 1, 1).alias("kind")).agg(
                 F.countDistinct("src").alias("n_nodes"),
@@ -1006,6 +988,28 @@ _G19_LPA_CTES = """
 """
 
 
+def _lpa_round(e2: DataFrame, labels: DataFrame) -> DataFrame:
+    nb = labels.select(F.col("node").alias("_nb"), F.col("lbl").alias("_nb_lbl"))
+    counts = (
+        e2.join(nb, e2["dst"] == nb["_nb"])
+        .groupBy(F.col("src").alias("node"), F.col("_nb_lbl").alias("lbl"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    )
+    w = W.partitionBy("node").orderBy(F.col("c").desc(), F.col("lbl"))
+    return (
+        counts.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("node", "lbl")
+    )
+
+
+def _g19_labels(e2: DataFrame, l0: DataFrame, n_parts: int) -> DataFrame:
+    # repartition-by-node (the g17/g18 lesson: a bare persist pins the
+    # windows' 200-partition output; node-hashed output feeds both
+    # label joins exchange-free)
+    return _lpa_round(e2, _lpa_round(e2, l0)).repartition(n_parts, "node")
+
+
 @query(
     "g19_community_modularity",
     oracle=f"""
@@ -1074,18 +1078,8 @@ def g19_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12 (guide §2.4): the edge frame feeds both LPA rounds AND the
     # final label join (4 subtrees) — scratch-tier build so the
     # lineitem⋈orders distinct runs once per process.
-    from ..operators.dedup import _cached
-
     n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    e2 = _cached(
-        li,
-        ("g19-edges", sf_dir),
-        lambda: [
-            base.union(base.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-            .repartition(n_parts, "src")
-            .persist()
-        ],
-    )
+    e2 = tier(_symmetric_edges, base, n_parts=n_parts)
     l0 = sup.select(
         F.concat(F.lit("s"), F.col("s_suppkey")).alias("node"),
         F.col("s_nationkey").cast("bigint").alias("lbl"),
@@ -1096,29 +1090,9 @@ def g19_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def lpa_round(labels: DataFrame) -> DataFrame:
-        nb = labels.select(F.col("node").alias("_nb"), F.col("lbl").alias("_nb_lbl"))
-        counts = (
-            e2.join(nb, e2["dst"] == nb["_nb"])
-            .groupBy(F.col("src").alias("node"), F.col("_nb_lbl").alias("lbl"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        )
-        w = W.partitionBy("node").orderBy(F.col("c").desc(), F.col("lbl"))
-        return (
-            counts.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("node", "lbl")
-        )
-
-    # repartition-by-node before persist (the g17/g18 lesson: a bare
-    # persist pins the windows' 200-partition output; node-hashed cache
-    # output feeds both label joins exchange-free); scratch-tiered so
-    # the two label-join sides read one materialized frame
-    l2 = _cached(
-        li,
-        ("g19-labels", sf_dir),
-        lambda: [lpa_round(lpa_round(l0)).repartition(n_parts, "node").persist()],
-    )
+    # scratch-tiered so the two label-join sides read one materialized
+    # frame
+    l2 = tier(_g19_labels, e2, l0, n_parts=n_parts)
     ls = l2.select(F.col("node").alias("sn"), F.col("lbl").alias("src_lbl"))
     ld = l2.select(F.col("node").alias("dn"), F.col("lbl").alias("dst_lbl"))
     lab = (
@@ -1228,10 +1202,8 @@ def d25_symspell_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides and the decorated candidate frame fed the truth filter AND
     # the candidate count — un-materialized, the deletion-neighborhood
     # explode and the pair pipeline each ran twice. One scratch-tier
-    # build; the variant frame persists for the build's own two sides.
-    from ..operators.dedup import _cached
-
-    def build_cand():
+    # build.
+    def build_cand(cust: DataFrame) -> DataFrame:
         v = cust.select(
             "id",
             F.explode(
@@ -1242,7 +1214,7 @@ def d25_symspell_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "substring(name, i + 1, 999))))"
                 )
             ).alias("var"),
-        ).persist()
+        )
         a = v.select(F.col("id").alias("id_a"), "var")
         b = v.select(F.col("id").alias("id_b"), F.col("var").alias("_var"))
         pairs = (
@@ -1258,15 +1230,13 @@ def d25_symspell_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("id").alias("_ib"), F.col("name").alias("nb"),
             F.col("nk").alias("nkb"), F.col("seg").alias("segb"),
         )
-        return [
+        return (
             pairs.join(ca, pairs["id_a"] == ca["_ia"])
             .join(cb, pairs["id_b"] == cb["_ib"])
             .select("id_a", "id_b", "na", "nb", "nka", "nkb", "sega", "segb")
-            .persist(),
-            v,
-        ]
+        )
 
-    cand = _cached(cust, ("d25-cand", sf_dir), build_cand)
+    cand = tier(build_cand, cust)
     truth = cand.filter(F.levenshtein("na", "nb") <= 1)
     blocked = ((F.col("nka") == F.col("nkb")) & (F.col("sega") == F.col("segb"))).cast(
         "int"

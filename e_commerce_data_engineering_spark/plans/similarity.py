@@ -16,6 +16,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..frames import tier
+from ..operators.layout import fan_out
 from ..sources.tables import load_table
 from .money import fround, sql_fround
 from .registry import query
@@ -237,7 +239,7 @@ def d06_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = fan_out(load_table(spark, sf_dir, "embeddings"))
     return semdedup(
-        e, "vec_id", "embedding", nlist=16, cos_threshold=NEARDUP_COS, cache_key="d06"
+        e, "vec_id", "embedding", nlist=16, cos_threshold=NEARDUP_COS
     )
 
 
@@ -292,7 +294,7 @@ def d07_semdedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(dot_d(F.col("u_a"), F.col("u_b")) >= NEARDUP_COS)
         .select("id_a", "id_b")
     )
-    assigned, _ = cached_ivf_index(e, 16, "vec_id", "embedding", 42, cache_key="d06")
+    assigned, _ = cached_ivf_index(e, 16, "vec_id", "embedding", 42)
     cells = assigned.select("vec_id", "_cell")
     labeled = pairs.join(
         cells.select(F.col("vec_id").alias("id_a"), F.col("_cell").alias("_ca")), "id_a"
@@ -975,11 +977,7 @@ def _sql_norm_prefix(a: str, dim: int) -> str:
     "scoring with full-vector re-rank.",
 )
 def s13_mrl_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _cached
-    from ..operators.layout import fan_out
-
     e = load_table(spark, sf_dir, "embeddings")
-    trunc = lambda col: F.slice(col, 1, MRL_DIM)  # noqa: E731
 
     # r13 (guide §2.4): `pairs` — the only corpus-proportional pass
     # (two dot/norm folds per (probe, candidate) row) — fed the exact
@@ -989,14 +987,15 @@ def s13_mrl_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (pairs is probe-grain bounded: N_QUERY_VECS x corpus narrow
     # rows; tr is 5 x TOP_K rows), and the candidate scan fans out
     # first (one parquet file must not mean a one-task scorer).
-    def build_pairs():
+    def build_pairs(e: DataFrame) -> DataFrame:
+        trunc = lambda col: F.slice(col, 1, MRL_DIM)  # noqa: E731
         q = e.filter(F.col("vec_id") < N_QUERY_VECS).select(
             F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
         )
         c = fan_out(e).select(
             F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
         )
-        return [
+        return (
             F.broadcast(q)
             .crossJoin(c)
             .filter(F.col("q_id") != F.col("c_id"))
@@ -1015,27 +1014,19 @@ def s13_mrl_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 ).alias("cos_trunc"),
             )
-            .persist()
-        ]
+        )
 
-    pairs = _cached(e, ("s13-pairs", sf_dir), build_pairs)
+    pairs = tier(build_pairs, e)
     ex = pairs.withColumn(
         "rn_e",
         F.row_number().over(W.partitionBy("q_id").orderBy(F.col("cos_full").desc(), "c_id")),
     ).filter(F.col("rn_e") <= TOP_K)
-    tr = _cached(
-        e,
-        ("s13-tr", sf_dir),
-        lambda: [
-            pairs.withColumn(
-                "rn_t",
-                F.row_number().over(
-                    W.partitionBy("q_id").orderBy(F.col("cos_trunc").desc(), "c_id")
-                ),
-            )
-            .filter(F.col("rn_t") <= TOP_K)
-            .persist()
-        ],
+    tr = tier(
+        lambda pairs: pairs.withColumn(
+            "rn_t",
+            F.row_number().over(W.partitionBy("q_id").orderBy(F.col("cos_trunc").desc(), "c_id")),
+        ).filter(F.col("rn_t") <= TOP_K),
+        pairs,
     )
     qsum = lambda col: F.sum(quantized(col)).cast("double") / _Q / TOP_K  # noqa: E731
     trunc_avg = tr.groupBy("q_id").agg(qsum(F.col("cos_full")).alias("trunc_full_avg"))
@@ -1246,15 +1237,8 @@ def _pq_encd(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fanned out, built once per process, narrow reload after any
     clearCache — the 'encoded vectors table' a production IVFADC
     serving path reads, never recomputes per query."""
-    from ..operators.dedup import _cached
-    from ..operators.layout import fan_out
-
     e_raw = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return _cached(
-        e_raw,
-        ("pq-encd", sf_dir),
-        lambda: [_pq_encd_build(fan_out(e_raw)).persist()],
-    )
+    return tier(lambda e: _pq_encd_build(fan_out(e)), e_raw)
 
 
 def _pq_encd_build(e: DataFrame) -> DataFrame:
@@ -1292,15 +1276,8 @@ def _ivf_ranked_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     the centroid-distance crossJoin ran on ONE task (single-split
     scan) once per consuming subtree (cell assignment + probe list =
     2x per query). Built once per process, fanned out."""
-    from ..operators.dedup import _cached
-    from ..operators.layout import fan_out
-
     e_raw = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return _cached(
-        e_raw,
-        ("ivf-ranked-cells", sf_dir),
-        lambda: [_ivf_ranked_cells_build(fan_out(e_raw)).persist()],
-    )
+    return tier(lambda e: _ivf_ranked_cells_build(fan_out(e)), e_raw)
 
 
 def _ivf_ranked_cells_build(e: DataFrame) -> DataFrame:
@@ -2103,7 +2080,10 @@ def s22_ann_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("vec_id", "m", "code")
     )
-    nps = spark.createDataFrame([(p,) for p in S22_NPROBES], "np int")
+    # grid axes as Range+explode, not createDataFrame: local rows never
+    # plan the same way twice, so the frontier grid's tier entry would
+    # never hit (frames.tier)
+    nps = spark.range(1).select(F.explode(F.array(*map(F.lit, S22_NPROBES))).alias("np"))
     probes = (
         ranked_cells.filter(F.col("vec_id") < N_QUERY_VECS)
         .crossJoin(F.broadcast(nps))
@@ -2153,7 +2133,7 @@ def s22_ann_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= TOP_K)
         .select("q_id", "c_id", F.lit(1).alias("_t"))
     )
-    kss = spark.createDataFrame([(k,) for k in S22_SHORTLISTS], "ks int")
+    kss = spark.range(1).select(F.explode(F.array(*map(F.lit, S22_SHORTLISTS))).alias("ks"))
     cells = (
         rankd.crossJoin(F.broadcast(kss))
         .join(F.broadcast(truth), ["q_id", "c_id"], "left")
@@ -2173,23 +2153,16 @@ def s22_ann_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dominance self-join (both sides) AND the final readout — a lazy
     # persist let the three subtrees race and re-run the whole ADC grid
     # pipeline each; the scratch tier materializes it exactly once.
-    from ..operators.dedup import _cached
-
-    agg = _cached(
+    agg = tier(
+        lambda cells: cells.groupBy("np", "ks").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_q"),
+            F.sum("found").cast("bigint").alias("sum_found"),
+            F.sum("n_scored").cast("bigint").alias("total_scored"),
+            F.sum(F.least(F.col("ks").cast("bigint"), F.col("n_scored")))
+            .cast("bigint")
+            .alias("total_reranked"),
+        ),
         cells,
-        ("s22-agg", sf_dir),
-        lambda: [
-            cells.groupBy("np", "ks")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_q"),
-                F.sum("found").cast("bigint").alias("sum_found"),
-                F.sum("n_scored").cast("bigint").alias("total_scored"),
-                F.sum(F.least(F.col("ks").cast("bigint"), F.col("n_scored")))
-                .cast("bigint")
-                .alias("total_reranked"),
-            )
-            .persist()
-        ],
     )
     a = agg.select(
         "np", "ks", "sum_found", (F.col("total_scored") + F.col("total_reranked")).alias("cost")
@@ -2550,13 +2523,22 @@ def _s25_gram(e: DataFrame) -> DataFrame:
     )
 
 
+def _s25_renormalized(v: DataFrame) -> DataFrame:
+    """(i, vd) -> (i, u bigint), renormalized to the 1e-6 grid."""
+    m = v.agg(F.max(F.abs(F.col("vd"))).alias("m"))
+    return v.crossJoin(F.broadcast(m)).select(
+        "i",
+        F.floor(F.col("vd") / F.col("m") * 1_000_000.0 + F.lit(0.5)).cast("bigint").alias("u"),
+    )
+
+
 def _s25_power_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Spark twin of ``_SQL_S25_CTES``: (u1, u2) frames of (i, u) — the
     1e-6-integer-grid power iterates over the exact integer covariance.
 
     r12 optimization (guide §1.2/§2.4): the covariance frame and both
     power iterates ride the scratch-parquet frame tier
-    (operators/dedup._cached — the d18/d21/s27 pattern). Before, the
+    (frames.tier — the d18/d21/s27 pattern). Before, the
     composed s25/s26 plans consumed the lazily-persisted `s` from four
     subtrees (v1, the _step join, and the broadcast max/vec builds),
     which raced to materialize it and re-ran the 4096-per-row outer-
@@ -2565,60 +2547,31 @@ def _s25_power_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Data
     are dim²/dim rows (4096/64) regardless of corpus size — the
     "model artifact" a production ABTT pipeline computes once per
     corpus snapshot and every consumer reads."""
-    from ..operators.dedup import _cached
-    from ..operators.layout import fan_out
-
     e = load_table(spark, sf_dir, "embeddings")
+    # fan_out (guide §2.5 input skew): the embeddings parquet is ONE
+    # small file -> one scan task, so the 4096-per-row outer-product
+    # explode (the only data-proportional pass here) ran on a single
+    # core. On a real multi-split table fan_out is a no-op.
+    s = tier(lambda e: _s25_gram(fan_out(e)), e)
 
-    def build_s() -> list[DataFrame]:
-        # fan_out (guide §2.5 input skew): the embeddings parquet is ONE
-        # small file -> one scan task, so the 4096-per-row outer-product
-        # explode (the only data-proportional pass here) ran on a single
-        # core. On a real multi-split table fan_out is a no-op.
-        return [_s25_gram(fan_out(e)).persist()]
+    # v1 = S . ones, renormalized (u1); v2 = S . u1, renormalized (u2).
+    # Both iterates are EMBEDDING_DIM-row frames consumed from several
+    # subtrees of the s25/s26 plans (join sides, broadcast ua/uu
+    # builds) — tiered like `s` so each is computed once per process.
+    def build_u1(s: DataFrame) -> DataFrame:
+        return _s25_renormalized(s.groupBy("i").agg(F.sum("s").cast("double").alias("vd")))
 
-    s = _cached(e, ("s25-gram", sf_dir), build_s)
-
-    def _step(vec: DataFrame) -> DataFrame:
-        # vec: (j, u bigint) -> (i, u bigint), renormalized to the 1e-6 grid
-        v = (
+    def build_u2(s: DataFrame, u1: DataFrame) -> DataFrame:
+        vec = u1.select(F.col("i").alias("j"), "u")
+        return _s25_renormalized(
             s.join(F.broadcast(vec), "j")
             .groupBy("i")
             .agg(F.sum(F.col("s") * F.col("u").cast("decimal(38,0)")).alias("_v"))
             .select("i", F.col("_v").cast("double").alias("vd"))
         )
-        m = v.agg(F.max(F.abs(F.col("vd"))).alias("m"))
-        return v.crossJoin(F.broadcast(m)).select(
-            "i",
-            F.floor(F.col("vd") / F.col("m") * 1_000_000.0 + F.lit(0.5))
-            .cast("bigint")
-            .alias("u"),
-        )
 
-    # v1 = S . ones, renormalized (u1); v2 = S . u1, renormalized (u2).
-    # Both iterates are EMBEDDING_DIM-row frames consumed from several
-    # subtrees of the s25/s26 plans (join sides, broadcast ua/uu
-    # builds) — cached like `s` so each is computed once per process.
-    def build_u1() -> list[DataFrame]:
-        v1 = s.groupBy("i").agg(F.sum("s").cast("double").alias("vd"))
-        m1 = v1.agg(F.max(F.abs(F.col("vd"))).alias("m"))
-        return [
-            v1.crossJoin(F.broadcast(m1))
-            .select(
-                "i",
-                F.floor(F.col("vd") / F.col("m") * 1_000_000.0 + F.lit(0.5))
-                .cast("bigint")
-                .alias("u"),
-            )
-            .persist()
-        ]
-
-    u1 = _cached(e, ("s25-u1", sf_dir), build_u1)
-
-    def build_u2() -> list[DataFrame]:
-        return [_step(u1.select(F.col("i").alias("j"), "u")).persist()]
-
-    u2 = _cached(e, ("s25-u2", sf_dir), build_u2)
+    u1 = tier(build_u1, s)
+    u2 = tier(build_u2, s, u1)
     return u1, u2
 
 
@@ -2946,144 +2899,126 @@ def _s27_frames(spark: SparkSession, sf_dir: str):
     reads the trajectory; s29 grades it against the relevance-only
     top-k on the same frames.
 
-    Round 12: all three ride the scratch-parquet frame cache
-    (operators/dedup._cached — the d18/d21 fix applied here, VERDICT
-    r11 #3): the broadcast-probe scoring scan and the unrolled greedy
-    loop execute ONCE per (process, corpus); a clearCache-evicted
-    rerun reloads three narrow parquet frames instead of re-racing the
-    whole pipeline (s29's 5x solo band read 7.1-21.3 s at sf0.1 before
-    this — duplicate concurrent materialization of the shared persists
+    Round 12: all three ride the scratch-parquet frame tier
+    (frames.tier — the d18/d21 fix applied here, VERDICT r11 #3): the
+    broadcast-probe scoring scan and the unrolled greedy loop execute
+    ONCE per (process, corpus); a clearCache-evicted rerun reloads
+    three narrow parquet frames instead of re-racing the whole
+    pipeline (s29's 5x solo band read 7.1-21.3 s at sf0.1 before this
+    — duplicate concurrent materialization of the shared persists
     inside one job — and ~1-2 s steady after)."""
-    from ..operators.dedup import _cached
-
     e = load_table(spark, sf_dir, "embeddings")
-    def build_shortlist():
-        q = e.filter(F.col("vec_id") < N_QUERY_VECS).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-        )
-        c = e.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"))
-        cos = dot(F.col("q_emb"), F.col("c_emb")) / (
-            l2_norm(F.col("q_emb")) * l2_norm(F.col("c_emb"))
-        )
-        scored = (
-            F.broadcast(q)
-            .crossJoin(c)
-            .filter(F.col("q_id") != F.col("c_id"))
-            .select(
-                "q_id",
-                "c_id",
-                "c_emb",
-                F.floor(cos * 1_000_000.0 + F.lit(0.5)).cast("bigint").alias("rel_q"),
-            )
-        )
-        return [
-            scored.withColumn(
-                "rn",
-                F.row_number().over(
-                    W.partitionBy("q_id").orderBy(F.col("rel_q").desc(), "c_id")
-                ),
-            )
-            .filter(F.col("rn") <= _S27_SHORTLIST)
-            .drop("rn")
-            # N_QUERY_VECS hash partitions on q_id: every downstream
-            # window, groupBy, and join in the greedy loop clusters on
-            # q_id (or a superset), so this single tiny exchange
-            # replaces ~4 unrolled iterations x 3 ops worth of
-            # spark.sql.shuffle.partitions-wide exchanges (measured
-            # 35.8s -> ~8s at sf0.01 on a vanilla 200-partition
-            # session).
-            .repartition(N_QUERY_VECS, "q_id")
-            .persist()
-        ]
-
-    shortlist = _cached(e, ("s27-shortlist", sf_dir), build_shortlist)
-
-    def build_prs():
-        a = shortlist.select(
-            "q_id", F.col("c_id").alias("a_id"), F.col("c_emb").alias("a_emb")
-        )
-        b = shortlist.select(
-            "q_id", F.col("c_id").alias("b_id"), F.col("c_emb").alias("b_emb")
-        )
-        sim = dot(F.col("a_emb"), F.col("b_emb")) / (
-            l2_norm(F.col("a_emb")) * l2_norm(F.col("b_emb"))
-        )
-        return [
-            a.join(b, "q_id")
-            .filter(F.col("a_id") != F.col("b_id"))
-            .select(
-                "q_id",
-                "a_id",
-                "b_id",
-                F.floor(sim * 1_000_000.0 + F.lit(0.5)).cast("bigint").alias("sim_q"),
-            )
-            .persist()
-        ]
-
-    prs = _cached(e, ("s27-prs", sf_dir), build_prs)
+    shortlist = tier(_s27_shortlist, e)
+    prs = tier(_s27_pairwise, shortlist)
     base = shortlist.select("q_id", "c_id", "rel_q")
-
-    def build_selected():
-        sel = (
-            base.withColumn(
-                "rn",
-                F.row_number().over(
-                    W.partitionBy("q_id").orderBy(F.col("rel_q").desc(), "c_id")
-                ),
-            )
-            .filter(F.col("rn") == 1)
-            .select(
-                "q_id",
-                "c_id",
-                "rel_q",
-                F.lit(1).cast("int").alias("pick_rank"),
-                (7 * F.col("rel_q")).alias("mmr10_q"),
-            )
-        )
-        selected = sel
-        picks = []
-        for i in range(2, _S27_PICKS + 1):
-            seen = selected.select("q_id", F.col("c_id").alias("b_id"))
-            # max similarity from each shortlist member to the selected set
-            ms = (
-                prs.join(F.broadcast(seen), ["q_id", "b_id"])
-                .groupBy("q_id", F.col("a_id").alias("c_id"))
-                .agg(F.max("sim_q").alias("maxsim_q"))
-            )
-            remaining = base.join(
-                seen.withColumnRenamed("b_id", "c_id"), ["q_id", "c_id"], "left_anti"
-            )
-            cand = remaining.join(ms, ["q_id", "c_id"])
-            pick = (
-                cand.withColumn("score", 7 * F.col("rel_q") - 3 * F.col("maxsim_q"))
-                .withColumn(
-                    "rn",
-                    F.row_number().over(
-                        W.partitionBy("q_id").orderBy(F.col("score").desc(), "c_id")
-                    ),
-                )
-                .filter(F.col("rn") == 1)
-                .select(
-                    "q_id",
-                    "c_id",
-                    "rel_q",
-                    F.lit(i).cast("int").alias("pick_rank"),
-                    F.col("score").alias("mmr10_q"),
-                )
-                # one row per probe; persisted so later iterations'
-                # `seen` (and the final union) reuse it instead of
-                # re-executing every earlier pick's join+window subplan
-                # — the unrolled lineage is otherwise quadratic in
-                # _S27_PICKS. Returned as aux frames so eviction
-                # releases them with the trajectory.
-                .persist()
-            )
-            picks.append(pick)
-            selected = selected.unionByName(pick)
-        return [selected.persist(), *picks]
-
-    selected = _cached(e, ("s27-selected", sf_dir), build_selected)
+    selected = tier(_s27_trajectory, base, prs)
     return base, prs, selected
+
+
+def _s27_shortlist(e: DataFrame) -> DataFrame:
+    q = e.filter(F.col("vec_id") < N_QUERY_VECS).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    )
+    c = e.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"))
+    cos = dot(F.col("q_emb"), F.col("c_emb")) / (
+        l2_norm(F.col("q_emb")) * l2_norm(F.col("c_emb"))
+    )
+    scored = (
+        F.broadcast(q)
+        .crossJoin(c)
+        .filter(F.col("q_id") != F.col("c_id"))
+        .select(
+            "q_id",
+            "c_id",
+            "c_emb",
+            F.floor(cos * 1_000_000.0 + F.lit(0.5)).cast("bigint").alias("rel_q"),
+        )
+    )
+    return (
+        scored.withColumn(
+            "rn",
+            F.row_number().over(W.partitionBy("q_id").orderBy(F.col("rel_q").desc(), "c_id")),
+        )
+        .filter(F.col("rn") <= _S27_SHORTLIST)
+        .drop("rn")
+        # N_QUERY_VECS hash partitions on q_id: every downstream
+        # window, groupBy, and join in the greedy loop clusters on
+        # q_id (or a superset), so this single tiny exchange
+        # replaces ~4 unrolled iterations x 3 ops worth of
+        # spark.sql.shuffle.partitions-wide exchanges (measured
+        # 35.8s -> ~8s at sf0.01 on a vanilla 200-partition
+        # session).
+        .repartition(N_QUERY_VECS, "q_id")
+    )
+
+
+def _s27_pairwise(shortlist: DataFrame) -> DataFrame:
+    a = shortlist.select("q_id", F.col("c_id").alias("a_id"), F.col("c_emb").alias("a_emb"))
+    b = shortlist.select("q_id", F.col("c_id").alias("b_id"), F.col("c_emb").alias("b_emb"))
+    sim = dot(F.col("a_emb"), F.col("b_emb")) / (
+        l2_norm(F.col("a_emb")) * l2_norm(F.col("b_emb"))
+    )
+    return (
+        a.join(b, "q_id")
+        .filter(F.col("a_id") != F.col("b_id"))
+        .select(
+            "q_id",
+            "a_id",
+            "b_id",
+            F.floor(sim * 1_000_000.0 + F.lit(0.5)).cast("bigint").alias("sim_q"),
+        )
+    )
+
+
+def _s27_trajectory(base: DataFrame, prs: DataFrame) -> DataFrame:
+    selected = (
+        base.withColumn(
+            "rn",
+            F.row_number().over(W.partitionBy("q_id").orderBy(F.col("rel_q").desc(), "c_id")),
+        )
+        .filter(F.col("rn") == 1)
+        .select(
+            "q_id",
+            "c_id",
+            "rel_q",
+            F.lit(1).cast("int").alias("pick_rank"),
+            (7 * F.col("rel_q")).alias("mmr10_q"),
+        )
+    )
+    for i in range(2, _S27_PICKS + 1):
+        # each pick (one row per probe) is a tier entry of its own, so
+        # later iterations' `seen` (and the final union) read it instead
+        # of re-executing every earlier pick's join+window subplan —
+        # the unrolled lineage is otherwise quadratic in _S27_PICKS
+        selected = selected.unionByName(tier(_s27_pick, selected, base, prs, i=i))
+    return selected
+
+
+def _s27_pick(selected: DataFrame, base: DataFrame, prs: DataFrame, i: int) -> DataFrame:
+    seen = selected.select("q_id", F.col("c_id").alias("b_id"))
+    # max similarity from each shortlist member to the selected set
+    ms = (
+        prs.join(F.broadcast(seen), ["q_id", "b_id"])
+        .groupBy("q_id", F.col("a_id").alias("c_id"))
+        .agg(F.max("sim_q").alias("maxsim_q"))
+    )
+    remaining = base.join(seen.withColumnRenamed("b_id", "c_id"), ["q_id", "c_id"], "left_anti")
+    return (
+        remaining.join(ms, ["q_id", "c_id"])
+        .withColumn("score", 7 * F.col("rel_q") - 3 * F.col("maxsim_q"))
+        .withColumn(
+            "rn",
+            F.row_number().over(W.partitionBy("q_id").orderBy(F.col("score").desc(), "c_id")),
+        )
+        .filter(F.col("rn") == 1)
+        .select(
+            "q_id",
+            "c_id",
+            "rel_q",
+            F.lit(i).cast("int").alias("pick_rank"),
+            F.col("score").alias("mmr10_q"),
+        )
+    )
 
 
 # ---------------------------------------------------------------------------

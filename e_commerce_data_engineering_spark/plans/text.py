@@ -143,7 +143,7 @@ def t05_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.setjoin import jaccard_similarity_join
 
     d = load_table(spark, sf_dir, "documents")
-    pairs = jaccard_similarity_join(d, "doc_id", "text", 0.5, group_cols=["source"], cache_key=sf_dir)
+    pairs = jaccard_similarity_join(d, "doc_id", "text", 0.5, group_cols=["source"])
     return pairs.select(
         F.col("id_a").alias("doc_a"),
         F.col("id_b").alias("doc_b"),
@@ -276,7 +276,7 @@ def t09_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.setjoin import jaccard_similarity_join
 
     d = load_table(spark, sf_dir, "documents")
-    pairs = jaccard_similarity_join(d, "doc_id", "text", T09_THRESHOLD, cache_key=sf_dir)
+    pairs = jaccard_similarity_join(d, "doc_id", "text", T09_THRESHOLD)
     return pairs.select("id_a", "id_b", fround(F.col("jaccard"), 4).alias("jaccard"))
 
 
@@ -2355,7 +2355,7 @@ def t40_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import dup_span_runs
 
     d = load_table(spark, sf_dir, "documents")
-    runs = dup_span_runs(d, "doc_id", "text", w=T40_W, max_df=T40_MAX_DF, cache_key=sf_dir)
+    runs = dup_span_runs(d, "doc_id", "text", w=T40_W, max_df=T40_MAX_DF)
     return (
         runs.groupBy("doc_a", "doc_b")
         .agg(
@@ -2435,7 +2435,7 @@ def t41_span_removal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     runs = dup_span_runs(
-        d, "doc_id", "text", w=T40_W, max_df=T40_MAX_DF, cache_key=sf_dir
+        d, "doc_id", "text", w=T40_W, max_df=T40_MAX_DF
     ).filter(F.col("run_shingles") >= T40_MIN_RUN)
     cuts = runs.select(
         F.col("doc_b").alias("doc_id"),

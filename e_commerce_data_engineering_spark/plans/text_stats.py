@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..frames import tier
 from ..functions import text as X
 from ..sources.tables import load_table
 from .money import fround, sql_fround
@@ -541,7 +542,7 @@ def t54_token_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 _T55_PK = 32  # d17's prefix block width, reused for stage 2
 
 
-def _t55_chain(d: DataFrame, cache_key: str | None = None) -> dict:
+def _t55_chain(d: DataFrame) -> dict:
     """The t55 waterfall stage chain as a shared stage (t55 reports
     stage economics; t62 audits WHICH docs each stage removes):
     returns s0 and the three removal frames, each (doc_id, len).
@@ -553,59 +554,49 @@ def _t55_chain(d: DataFrame, cache_key: str | None = None) -> dict:
     measured 3.8 s (t62) / 2.6 s (t55) solo at sf0.1 before, with the
     exact-hash + prefix self-join + shingle-md5 chain re-running per
     consumer."""
-    from ..operators.dedup import _cached
-
     s0 = d.select("doc_id", "text", F.length("text").cast("bigint").alias("len"))
-    h = F.md5(F.col("text").cast("binary"))
-    key = (lambda *parts: (*parts, cache_key)) if cache_key else (lambda *parts: None)
 
-    def build_ex_rm():
+    def build_ex_rm(s0: DataFrame) -> DataFrame:
+        h = F.md5(F.col("text").cast("binary"))
         ex_keep = s0.groupBy(h.alias("h")).agg(F.min("doc_id").alias("keeper"))
-        return [
+        return (
             s0.select("doc_id", "len", h.alias("_h"))
             .join(ex_keep, F.col("_h") == ex_keep["h"])
             .filter(F.col("doc_id") > F.col("keeper"))
             .select("doc_id", "len")
-            .persist()
-        ]
+        )
 
-    ex_rm = _cached(d, key("t55-ex-rm"), build_ex_rm)
+    ex_rm = tier(build_ex_rm, s0)
 
-    def build_pre_rm():
-        # s1 feeds its own self-join (two scan sides): persist for the
-        # build's two consumers, released with the entry
-        s1 = s0.join(ex_rm.select("doc_id"), "doc_id", "left_anti").persist()
+    def build_pre_rm(s0: DataFrame, ex_rm: DataFrame) -> DataFrame:
+        s1 = s0.join(ex_rm.select("doc_id"), "doc_id", "left_anti")
         blk = F.substring("text", 1, _T55_PK)
         a = s1.select("doc_id", "len", "text", blk.alias("blk"))
         b = s1.select(
             F.col("len").alias("_len2"), F.col("text").alias("_t2"), blk.alias("_blk2")
         )
-        return [
+        return (
             a.join(b, (a["blk"] == b["_blk2"]) & (a["len"] < b["_len2"]))
             .filter(F.col("_t2").startswith(F.col("text")))
             .select("doc_id", "len")
             .distinct()
-            .persist(),
-            s1,
-        ]
+        )
 
-    pre_rm = _cached(d, key("t55-pre-rm"), build_pre_rm)
+    pre_rm = tier(build_pre_rm, s0, ex_rm)
 
-    def build_fp():
+    def build_fp(s0: DataFrame, ex_rm: DataFrame, pre_rm: DataFrame) -> DataFrame:
         s2 = (
             s0.join(ex_rm.select("doc_id"), "doc_id", "left_anti")
             .join(pre_rm.select("doc_id"), "doc_id", "left_anti")
         )
         toks = X.tokens(F.col("text"))
-        return [
-            s2.filter(F.size(toks) >= 3)
-            .select("doc_id", "len", X.min_shingle_fingerprint(toks).alias("f"))
-            .persist()
-        ]
+        return s2.filter(F.size(toks) >= 3).select(
+            "doc_id", "len", X.min_shingle_fingerprint(toks).alias("f")
+        )
 
     # the shingle-md5 map is the expensive leaf and feeds both the
     # keeper rollup and the removal join — tier-materialized once
-    fp = _cached(d, key("t55-fp"), build_fp)
+    fp = tier(build_fp, s0, ex_rm, pre_rm)
     fp_keep = fp.groupBy("f").agg(F.min("doc_id").alias("keeper"))
     fp_rm = fp.join(fp_keep, "f").filter(F.col("doc_id") > F.col("keeper")).select(
         "doc_id", "len"
@@ -696,7 +687,7 @@ def _t55_chain(d: DataFrame, cache_key: str | None = None) -> dict:
 )
 def t55_dedup_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    chain = _t55_chain(d, cache_key=sf_dir)
+    chain = _t55_chain(d)
     s0, ex_rm, pre_rm, fp_rm = (
         chain["s0"], chain["ex_rm"], chain["pre_rm"], chain["fp_rm"]
     )
@@ -1597,7 +1588,7 @@ def t61_ttr_by_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t62_dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    chain = _t55_chain(d, cache_key=sf_dir)
+    chain = _t55_chain(d)
     qbp = _t58_qbp(d).select("doc_id", "qbp")
     ex_ids = chain["ex_rm"].select("doc_id").withColumn("_f1", F.lit(1))
     pre_ids = chain["pre_rm"].select("doc_id").withColumn("_f2", F.lit(1))
@@ -1619,21 +1610,16 @@ def t62_dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r12: the 4-row fate rollup is consumed by the kept-baseline
     # broadcast AND the final readout — tier-materialized once
-    from ..operators.dedup import _cached
-
-    g = _cached(
-        d,
-        ("t62-fates", sf_dir),
-        lambda: [
-            labeled.join(qbp, "doc_id")
-            .groupBy("fate")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                F.sum("qbp").cast("bigint").alias("sq"),
-                F.sum("len").cast("bigint").alias("sl"),
-            )
-            .persist()
-        ],
+    g = tier(
+        lambda labeled, qbp: labeled.join(qbp, "doc_id")
+        .groupBy("fate")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.sum("qbp").cast("bigint").alias("sq"),
+            F.sum("len").cast("bigint").alias("sl"),
+        ),
+        labeled,
+        qbp,
     )
     kept = g.filter(F.col("fate") == "kept").select(
         F.col("sq").alias("ksq"), F.col("n_docs").alias("kn")
@@ -1913,7 +1899,7 @@ def d20_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import token_frame
 
     d = load_table(spark, sf_dir, "documents")
-    tok = token_frame(d, "doc_id", "text", cache_key=sf_dir)
+    tok = token_frame(d, "doc_id", "text")
     return _d20_pairs_from_tokens(tok)
 
 
@@ -2635,8 +2621,6 @@ def t69_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t71_lm_quality_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from ..operators.dedup import _cached
-
     d = load_table(spark, sf_dir, "documents")
     # r12 (guide §2.4): the KN chain (bigram explode + vocab joins)
     # feeds the fence grid, the t06 restriction, AND the bucket join —
@@ -2645,29 +2629,23 @@ def t71_lm_quality_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chain once per consumer (5.3 s solo at sf0.1). Both keyed frames
     # now ride the scratch-parquet frame tier: built once per process,
     # reloaded as a narrow scan after any clearCache.
-    lmk = _cached(
+    lmk = tier(
+        lambda d: _kn_doc_bits(d).select(
+            "doc_id", F.expr("(kn_bits div nb) div 10000").alias("lk")
+        ),
         d,
-        ("t71-lmk", sf_dir),
-        lambda: [
-            _kn_doc_bits(d)
-            .select("doc_id", F.expr("(kn_bits div nb) div 10000").alias("lk"))
-            .persist()
-        ],
     )
-    q = _cached(
-        d,
-        ("t71-q", sf_dir),
-        lambda: [
-            t06_quality_score(spark, sf_dir)
-            .select(
-                "doc_id",
-                F.expr(
-                    "CAST(FLOOR(quality * 10000.0 + 0.5) AS BIGINT) div 100"
-                ).alias("qk"),
-            )
-            .join(lmk.select("doc_id"), "doc_id")
-            .persist()
-        ],
+    # t06's plan is built inside the build (keyed by sf_dir), not
+    # passed in: constructing it costs ~0.2 s, which a hit should not pay
+    q = tier(
+        lambda lmk, sf_dir: t06_quality_score(lmk.sparkSession, sf_dir)
+        .select(
+            "doc_id",
+            F.expr("CAST(FLOOR(quality * 10000.0 + 0.5) AS BIGINT) div 100").alias("qk"),
+        )
+        .join(lmk.select("doc_id"), "doc_id"),
+        lmk,
+        sf_dir=sf_dir,
     )
 
     def fences(keyed: DataFrame, key: str) -> DataFrame:
@@ -2937,16 +2915,15 @@ def t73_charset_anomaly_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 _T74_Q = 1_000_000_000.0  # 1e-9 quantization of each -p·ln p term
 
 
-def _char_bigram_counts(d: DataFrame, sf_dir: str) -> DataFrame:
+def _char_bigram_counts(d: DataFrame) -> DataFrame:
     """Shared (lang, bigram) -> count frame behind t74 (entropy) and
     t76 (JS distance): the char-bigram explode is the only corpus-
     proportional pass either query makes, and each consumed it from
     3-4 plan subtrees (marginals, entropy terms, both self-join
     sides). r12: one build per process on the scratch-parquet tier
     (guide §2.4); output is alphabet²-bounded per language."""
-    from ..operators.dedup import _cached
 
-    def build():
+    def build(d: DataFrame) -> DataFrame:
         bg = d.filter(F.length("text") >= 2).select(
             "lang",
             F.explode(
@@ -2956,11 +2933,9 @@ def _char_bigram_counts(d: DataFrame, sf_dir: str) -> DataFrame:
                 )
             ).alias("b"),
         )
-        return [
-            bg.groupBy("lang", "b").agg(F.count(F.lit(1)).cast("bigint").alias("cnt")).persist()
-        ]
+        return bg.groupBy("lang", "b").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
 
-    return _cached(d, ("char-bigrams", sf_dir), build)
+    return tier(build, d)
 
 
 @query(
@@ -3025,7 +3000,7 @@ def _char_bigram_counts(d: DataFrame, sf_dir: str) -> DataFrame:
 )
 def t74_char_bigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    c2 = _char_bigram_counts(d, sf_dir)
+    c2 = _char_bigram_counts(d)
     t = c2.groupBy("lang").agg(
         F.sum("cnt").cast("bigint").alias("tot"),
         F.count(F.lit(1)).cast("bigint").alias("v2"),
@@ -3254,7 +3229,7 @@ def t75_uncertainty_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t76_lang_bigram_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    c = _char_bigram_counts(d, sf_dir)
+    c = _char_bigram_counts(d)
     t = c.groupBy("lang").agg(F.sum("cnt").cast("bigint").alias("tot"))
     p = c.join(t, "lang").select(
         "lang", "b", (F.col("cnt").cast("double") / F.col("tot")).alias("p")

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..frames import tier
 from ..sources.tables import load_table
 from .money import dfrac, dmoney, fround, money_sum, sql_fround, sql_money_sum
 from .registry import query
@@ -3650,27 +3651,20 @@ def q127_croston_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("z"))
     )
-    wb = W.partitionBy("brand").orderBy("didx")
     # r12 (guide §2.4): the occurrence frame feeds BOTH sides of the
     # lag-kernel self-join — un-materialized, the 600k-row join +
     # daily rollup + window ran twice per run. Scratch-tier build
     # (brand × active-day grain, small).
-    from ..operators.dedup import _cached
+    def build_occ(daily: DataFrame) -> DataFrame:
+        wb = W.partitionBy("brand").orderBy("didx")
+        return daily.filter(F.col("z") > 0).select(
+            "brand",
+            "z",
+            F.row_number().over(wb).cast("bigint").alias("rn"),
+            (F.col("didx") - F.lag("didx").over(wb)).cast("bigint").alias("p"),
+        )
 
-    occ = _cached(
-        li,
-        ("q127-occ", sf_dir),
-        lambda: [
-            daily.filter(F.col("z") > 0)
-            .select(
-                "brand",
-                "z",
-                F.row_number().over(wb).cast("bigint").alias("rn"),
-                (F.col("didx") - F.lag("didx").over(wb)).cast("bigint").alias("p"),
-            )
-            .persist()
-        ],
-    )
+    occ = tier(build_occ, daily)
     t = occ.select("brand", "z", "rn", "p")
     s = occ.select(
         F.col("brand").alias("_b"),

@@ -906,21 +906,20 @@ def test_ivf_cache_eviction_unpersists(spark):
             (F.col("id") % 7).cast("double"), (F.col("id") % 3).cast("double")
         ).alias("embedding"),
     )
-    a1, _ = cached_ivf_index(vecs, 4, "vec_id", "embedding", 1, cache_key="evict-test")
+    a1, _ = cached_ivf_index(vecs, 4, "vec_id", "embedding", 1)
     a1.count()
     assert a1.storageLevel.useMemory
     # rebuild replaces the entry (old frame unpersisted; storageLevel is
     # plan-keyed so it cannot distinguish a1 from the identically-planned
     # a2 — the post-clear check below covers the unpersist)
-    a2, _ = cached_ivf_index(
-        vecs, 4, "vec_id", "embedding", 1, cache_key="evict-test", rebuild=True
-    )
+    a2, _ = cached_ivf_index(vecs, 4, "vec_id", "embedding", 1, rebuild=True)
     assert a2 is not a1
-    n = clear_ivf_cache("evict-test")
+    held = len(_IVF_CACHE)
+    n = clear_ivf_cache()
     # cache manager now holds nothing for this plan: both report uncached
-    assert n == 1
+    assert n == held >= 1
     assert not a1.storageLevel.useMemory and not a2.storageLevel.useMemory
-    assert not any(k[1] == "evict-test" for k in _IVF_CACHE)
+    assert not _IVF_CACHE
 
 
 def test_jpeg_roundtrip_error_bound():
@@ -1200,14 +1199,14 @@ def test_chi2_matches_pure_python(spark):
 
 def test_dedup_frame_cache_eviction_unpersists(spark):
     """clear_frame_cache must drop and unpersist the shared shingle/
-    signature frames (the dedup-family twin of clear_ivf_cache)."""
+    signature frames and delete their scratch parquet (the frame-tier
+    twin of clear_ivf_cache)."""
+    import os
+
     from pyspark.sql import functions as F
 
-    from e_commerce_data_engineering_spark.operators.dedup import (
-        _FRAME_CACHE,
-        _shingle_frame,
-        clear_frame_cache,
-    )
+    from e_commerce_data_engineering_spark import frames
+    from e_commerce_data_engineering_spark.operators import dedup
 
     docs = spark.range(30).select(
         F.col("id").alias("doc_id"),
@@ -1215,45 +1214,34 @@ def test_dedup_frame_cache_eviction_unpersists(spark):
             " ", *[F.concat(F.lit(f"w{i}"), (F.col("id") % 5)) for i in range(6)]
         ).alias("text"),
     )
-    frame = _shingle_frame(docs, "doc_id", "text", 3, cache_key="evict-frame-test")
+    frame = dedup._shingle_frame(docs, "doc_id", "text", 3)
     frame.count()
     assert frame.storageLevel.useMemory
-    keys = [k for k in _FRAME_CACHE if "evict-frame-test" in k]
-    before = len(keys)
-    # the shingle build pins its tokens stage as a projection-collapse
-    # barrier; since round 10 that frame is its OWN cache entry
-    # ("tokens", ...) shared by the simhash/winnowing families (d21),
-    # and eviction must release it too, or storage grows by one
-    # tokenized corpus per swept corpus (round-4 ADVICE)
-    assert before >= 2, "expected separate tokens + shingles entries"
-    assert any(k[1] == "tokens" for k in keys)
-    tracked = [f for k in keys for f in _FRAME_CACHE[k]]
-    assert all(f.storageLevel.useMemory for f in tracked)
-    n = clear_frame_cache("evict-frame-test")
-    assert n == before
-    assert not any("evict-frame-test" in k for k in _FRAME_CACHE)
+    # the shingle build reads its tokens stage as a projection-collapse
+    # barrier; since round 10 that frame is its OWN tier entry shared
+    # by the simhash/winnowing families (d21), and eviction must
+    # release it too, or storage grows by one tokenized corpus per
+    # swept corpus (round-4 ADVICE)
+    tok = dedup.token_frame(docs, "doc_id", "text")
+    tracked = [
+        frames._ENTRIES[frames.key(dedup._tokens, (docs,), dict(id_col="doc_id", text_col="text"))],
+        frames._ENTRIES[frames.key(dedup._shingles, (tok,), dict(n=3))],
+    ]
+    assert tracked[1].frame is frame
+    assert all(e.frame.storageLevel.useMemory and os.path.isdir(e.path) for e in tracked)
+    held = len(frames._ENTRIES)
+    n = frames.clear_frame_cache()
+    assert n == held >= 2
+    assert not frames._ENTRIES
     assert not frame.storageLevel.useMemory
-    assert all(not f.storageLevel.useMemory for f in tracked)
-
-
-def test_cached_rejects_bare_dataframe(spark):
-    """_cached's [primary, *aux] contract is an explicit TypeError, not
-    an assert — it must hold under python -O, where a build returning a
-    bare DataFrame would silently yield frames[0] == a Column (round-5
-    ADVICE)."""
-    from e_commerce_data_engineering_spark.operators.dedup import _cached
-
-    df = spark.range(3)
-    with pytest.raises(TypeError, match=r"\[primary, \*aux\]"):
-        _cached(df, None, lambda: df)
-    with pytest.raises(TypeError, match=r"\[primary, \*aux\]"):
-        _cached(df, ("bad-contract-test",), lambda: df)
+    assert all(not e.frame.storageLevel.useMemory for e in tracked)
+    assert not any(os.path.exists(e.path) for e in tracked)
 
 
 def test_ivf_cache_rebuild_unpersists_predecessor(spark):
     """cached_ivf_index(rebuild=True) and clear_ivf_cache must unpersist
-    the superseded assigned frame — a long-lived session re-keying the
-    index must not pin stale frames (round-4 verdict task)."""
+    the superseded assigned frame — a long-lived session rebuilding or
+    sweeping indexes must not pin stale frames (round-4 verdict task)."""
     import random
 
     from pyspark.sql import functions as F
@@ -1264,27 +1252,34 @@ def test_ivf_cache_rebuild_unpersists_predecessor(spark):
         clear_ivf_cache,
     )
 
+    from pyspark.sql import DataFrame
+
     rng = random.Random(7)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(40)]
     vecs = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    first, _ = cached_ivf_index(vecs, 4, "vec_id", "embedding", 1, cache_key="evict-ivf-test")
+    first, _ = cached_ivf_index(vecs, 4, "vec_id", "embedding", 1)
     first.count()
     assert first.storageLevel.useMemory
-    # rebuild from DIFFERENT data: storageLevel lookups are by logical
-    # plan, so an identical rebuild would alias the successor's cache
-    # entry and mask a leak of the predecessor
+    # storageLevel lookups are by logical plan, so the identically
+    # planned successor would alias the predecessor's cache entry and
+    # mask a leak: watch the predecessor's own unpersist instead
+    unpersisted = []
+    first.unpersist = lambda *a, **k: unpersisted.append(DataFrame.unpersist(first, *a, **k))
+    second, _ = cached_ivf_index(vecs, 4, "vec_id", "embedding", 1, rebuild=True)
+    second.count()
+    assert unpersisted, "rebuild must unpersist the predecessor"
+    assert second is not first and second.storageLevel.useMemory
+    assert all(hit[1] is not first for hit in _IVF_CACHE.values())
+    # a different corpus gets an entry of its own, never the first's
     rows2 = rows + [(40, [0.1, 0.2, 0.3, 0.4])]
     vecs2 = spark.createDataFrame(rows2, "vec_id bigint, embedding array<double>")
-    second, _ = cached_ivf_index(
-        vecs2, 4, "vec_id", "embedding", 1, cache_key="evict-ivf-test", rebuild=True
-    )
-    second.count()
-    assert not first.storageLevel.useMemory, "rebuild must unpersist the predecessor"
-    assert second.storageLevel.useMemory
-    n = clear_ivf_cache("evict-ivf-test")
-    assert n == 1
-    assert not second.storageLevel.useMemory
-    assert not any(k[1] == "evict-ivf-test" for k in _IVF_CACHE)
+    third, _ = cached_ivf_index(vecs2, 4, "vec_id", "embedding", 1)
+    assert third.count() == 41 and third.storageLevel.useMemory
+    held = len(_IVF_CACHE)
+    n = clear_ivf_cache()
+    assert n == held >= 2
+    assert not second.storageLevel.useMemory and not third.storageLevel.useMemory
+    assert not _IVF_CACHE
 
 
 def test_ahash_jpeg_reencode_near_stable():

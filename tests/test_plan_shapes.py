@@ -492,16 +492,17 @@ def test_d14_ground_truth_is_anchored_equi_join(spark):
     shingle semi join + hash equi-join (the t40 anchor move), and the
     banding catch check is a band/bsig equi-join — nothing cartesian.
     Since round 12 the anchored pair frame is built ONCE and read back
-    from scratch parquet (operators/dedup._cached disk tier), so the
-    semi join is pinned on the RAW build (cache_key=None) while the
-    consumer plan is pinned cartesian-free."""
+    from scratch parquet (the frames.tier disk tier), so the semi join
+    is pinned on the build function called directly while the consumer
+    plan is pinned cartesian-free."""
     from e_commerce_data_engineering_spark.operators.dedup import (
-        anchored_candidate_pairs,
+        _anchored_pairs,
+        _shingle_frame,
     )
     from e_commerce_data_engineering_spark.sources.tables import load_table
 
     d = load_table(spark, SF, "documents")
-    raw = anchored_candidate_pairs(d, "doc_id", "text", cache_key=None)
+    raw = _anchored_pairs(_shingle_frame(d, "doc_id", "text", 3), max_df=20)
     build_plan = raw._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in build_plan, build_plan
     assert "CartesianProduct" not in build_plan, build_plan
@@ -513,7 +514,7 @@ def test_d14_ground_truth_is_anchored_equi_join(spark):
 def test_d15_estimator_audit_shares_anchor_shape(spark):
     """The estimator calibration scores only the anchored candidate
     pairs (d14's rare-shingle anchor machinery, shared through the
-    round-12 scratch-parquet frame cache) — never all pairs."""
+    frames.tier scratch-parquet tier) — never all pairs."""
     plan = plan_of(spark, "d15_minhash_estimator_calibration")
     assert "CartesianProduct" not in plan, plan
 
@@ -1673,7 +1674,7 @@ def test_round12_batch4_shapes(spark):
     li = load_table(spark, SF, "lineitem").select(
         F.col("l_suppkey").alias("src"), F.col("l_orderkey").alias("dst")
     )
-    lvl = _g18_peel_level(li, 2, 8)[0]
+    lvl = _g18_peel_level(li, 2, 8)
     bp = lvl._jdf.queryExecution().explainString(
         lvl._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"

@@ -26,6 +26,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from e_commerce_data_engineering_spark.frames import clear_frame_cache  # noqa: E402
+from e_commerce_data_engineering_spark.operators.similarity import clear_ivf_cache  # noqa: E402
 from e_commerce_data_engineering_spark.session import get_spark  # noqa: E402
 
 BASE_SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -1059,7 +1061,11 @@ def main() -> None:
                 # so the 1x numbers aren't inflated vs later scales
                 spark.catalog.clearCache()
                 fn()
+            # every timed run builds its shared frames: the frame tier
+            # and the IVF index cache would otherwise serve the warm-up's
             spark.catalog.clearCache()
+            clear_frame_cache()
+            clear_ivf_cache()
             rows_out, sec = timed(fn)
             rec = {"op": name, "scale": k, "rows_in": rows_in, "rows_out": rows_out, "sec": sec}
             results.append(rec)
