@@ -136,24 +136,18 @@ def minhash_lsh_pairs(
     own derived frames.
     """
     assert num_hashes % bands == 0
-    return _minhash_lsh_pairs_build(
-        df, id_col, text_col, num_hashes, bands, shingle_n, jaccard_threshold
+    sig = _signature_frame(_shingle_frame(df, id_col, text_col, shingle_n), num_hashes)
+    verified = _banded_pair_counts(sig, _xxhash_banded_frame(sig, bands, num_hashes // bands))
+    jac = F.col("_inter").cast("double") / (F.col("_n_a") + F.col("_n_b") - F.col("_inter"))
+    return verified.filter(jac >= jaccard_threshold).select(
+        "id_a", "id_b", F.round(jac, 4).alias("jaccard")
     )
 
 
-def _minhash_lsh_pairs_build(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-    jaccard_threshold: float,
-) -> DataFrame:
-    r = num_hashes // bands
-    sig = _signature_frame(_shingle_frame(df, id_col, text_col, shingle_n), num_hashes)
-
-    banded = sig.select(
+def _xxhash_banded_frame(sig: DataFrame, bands: int, r: int) -> DataFrame:
+    """(_id, _band, _bucket) band keys over an xxhash64 signature frame:
+    the key is xxhash64 of the band index and the signature slice."""
+    return sig.select(
         "_id",
         F.posexplode(
             F.transform(
@@ -162,29 +156,34 @@ def _minhash_lsh_pairs_build(
             )
         ).alias("_band", "_bucket"),
     )
-    a = banded.select(F.col("_id").alias("id_a"), "_band", "_bucket")
-    b = banded.select(F.col("_id").alias("id_b"), "_band", "_bucket")
+
+
+def _banded_pair_counts(sig: DataFrame, banded: DataFrame) -> DataFrame:
+    """The candidate-and-verify body of both LSH pipelines →
+    (id_a, id_b, _inter, _n_a, _n_b): distinct pairs that share a band
+    key of ``banded`` (every non-``_id`` column), with their exact
+    shingle intersection count and both set sizes from ``sig``.
+
+    POSTING-GRAIN verification (round 12): the intersection count
+    comes from two (id, shingle) equi-joins instead of carrying both
+    full shingle ARRAYS through the candidate shuffle — the array
+    payload (tens of KB per candidate row at production widths) was
+    the measured single-node spill ceiling at x256 (SCALING.md d21
+    note). Posting rows are ~40 bytes, spill incrementally, and the
+    per-pair count partial-aggregates map-side. LSH candidates are
+    selective; the dense anchored set of d24/s34 takes the array shape
+    instead (see ``join_pair_sides``)."""
+    band_key = [c for c in banded.columns if c != "_id"]
     candidates = (
-        a.join(b, ["_band", "_bucket"])
+        banded.withColumnRenamed("_id", "id_a")
+        .join(banded.withColumnRenamed("_id", "id_b"), band_key)
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
-
-    # POSTING-GRAIN verification (round 12): the intersection count
-    # comes from two (id, shingle) equi-joins instead of carrying both
-    # full shingle ARRAYS through the candidate shuffle — the array
-    # payload (tens of KB per candidate row at production widths) was
-    # the measured single-node spill ceiling at x256 (SCALING.md d21
-    # note). Posting rows are ~40 bytes, spill incrementally, and the
-    # per-pair count partial-aggregates map-side. Values are provably
-    # identical: shingles compare as exact strings either way.
     post = sig.select("_id", F.explode("_sh").alias("_s"))
-    sizes = sig.select("_id", F.size("_sh").alias("_n"))
     inter_cnt = (
-        candidates.join(
-            post.select(F.col("_id").alias("id_a"), "_s"), "id_a"
-        )
+        candidates.join(post.withColumnRenamed("_id", "id_a"), "id_a")
         .join(
             post.select(F.col("_id").alias("_idb"), F.col("_s").alias("_s_b")),
             (F.col("id_b") == F.col("_idb")) & (F.col("_s") == F.col("_s_b")),
@@ -192,14 +191,7 @@ def _minhash_lsh_pairs_build(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("_inter"))
     )
-    verified = inter_cnt.join(
-        sizes.select(F.col("_id").alias("id_a"), F.col("_n").alias("_na")), "id_a"
-    ).join(sizes.select(F.col("_id").alias("id_b"), F.col("_n").alias("_nb")), "id_b")
-    union = F.col("_na") + F.col("_nb") - F.col("_inter")
-    jac = F.col("_inter").cast("double") / union
-    return verified.filter(jac >= jaccard_threshold).select(
-        "id_a", "id_b", F.round(jac, 4).alias("jaccard")
-    )
+    return join_pair_sides(inter_cnt, sig.select("_id", F.size("_sh").alias("_n")))
 
 
 def portable_signature_frame(
@@ -286,37 +278,10 @@ def minhash_lsh_pairs_portable(
     family under the driver's hash-checked oracle gate.
     """
     assert num_hashes % bands == 0
-    r = num_hashes // bands
     sig = portable_signature_frame(df, id_col, text_col, num_hashes, shingle_n)
-    banded = portable_banded_frame(sig, bands, r)
-    a = banded.select(F.col("_id").alias("id_a"), "_band", "_bsig")
-    b = banded.select(F.col("_id").alias("id_b"), "_band", "_bsig")
-    candidates = (
-        a.join(b, ["_band", "_bsig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # posting-grain verification — see _minhash_lsh_pairs_build: the
-    # same exact counts without shipping shingle arrays per candidate
-    post = sig.select("_id", F.explode("_sh").alias("_s"))
-    sizes = sig.select("_id", F.size("_sh").alias("_n"))
-    inter_cnt = (
-        candidates.join(
-            post.select(F.col("_id").alias("id_a"), "_s"), "id_a"
-        )
-        .join(
-            post.select(F.col("_id").alias("_idb"), F.col("_s").alias("_s_b")),
-            (F.col("id_b") == F.col("_idb")) & (F.col("_s") == F.col("_s_b")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("_inter"))
-    )
-    verified = inter_cnt.join(
-        sizes.select(F.col("_id").alias("id_a"), F.col("_n").alias("_na")), "id_a"
-    ).join(sizes.select(F.col("_id").alias("id_b"), F.col("_n").alias("_nb")), "id_b")
+    verified = _banded_pair_counts(sig, portable_banded_frame(sig, bands, num_hashes // bands))
     inter = F.col("_inter")
-    union = F.col("_na") + F.col("_nb") - inter
+    union = F.col("_n_a") + F.col("_n_b") - inter
     jac = inter.cast("double") / union
     return verified.filter(jac >= jaccard_threshold).select(
         "id_a",
@@ -370,6 +335,25 @@ def _anchored_pairs(base: DataFrame, max_df: int) -> DataFrame:
     )
 
 
+def join_pair_sides(pairs: DataFrame, sets: DataFrame) -> DataFrame:
+    """``pairs`` (id_a, id_b) with every non-``_id`` column of the
+    per-document frame ``sets`` joined on for each side, suffixed
+    ``_a``/``_b`` (``_sh`` → ``_sh_a``, ``_sh_b``). The verify join of
+    the anchored-pair family (d14, d15, d18, d24, s34): both sides'
+    arrays cross the pair shuffle once and are compared locally, which
+    beats posting-grain joins on that dense candidate set."""
+    cols = [c for c in sets.columns if c != "_id"]
+    for side in ("a", "b"):
+        pairs = pairs.join(
+            sets.select(
+                F.col("_id").alias(f"id_{side}"),
+                *(F.col(c).alias(f"{c}_{side}") for c in cols),
+            ),
+            f"id_{side}",
+        )
+    return pairs
+
+
 def minhash_dedupe(
     df: DataFrame,
     id_col: str,
@@ -389,17 +373,8 @@ def minhash_dedupe(
     deterministic.
     """
     assert num_hashes % bands == 0
-    r = num_hashes // bands
     sig = _signature_frame(_shingle_frame(df, id_col, text_col, shingle_n), num_hashes)
-    banded = sig.select(
-        "_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(b, F.slice(F.col("_sig"), b * r + 1, r)),
-            )
-        ).alias("_band", "_bucket"),
-    ).persist()
+    banded = _xxhash_banded_frame(sig, bands, num_hashes // bands).persist()
     bucket_min = banded.groupBy("_band", "_bucket").agg(F.min("_id").alias("_min_id"))
     keeper_ids = (
         banded.join(bucket_min, ["_band", "_bucket"])

@@ -123,11 +123,13 @@ def run_batch(
         n_invalid = obs_q.get["n"]
     else:
         n_invalid = invalid.count()
+    n_corrupt = corrupt.count()
+    raw.unpersist()  # process_raw's parse cache; every count is taken
 
     return BatchResult(
         total_processed=n_processed,
         invalid_orders=n_invalid,
-        corrupt_lines=corrupt.count(),
+        corrupt_lines=n_corrupt,
         output_path=out_path,
         quarantine_path=quarantine_path,
     )

@@ -302,6 +302,7 @@ def _d14_theory(mid: str) -> str:
 def d14_lsh_scurve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import (
         anchored_candidate_pairs,
+        join_pair_sides,
         portable_banded_frame,
         portable_signature_frame,
     )
@@ -312,13 +313,10 @@ def d14_lsh_scurve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = anchored_candidate_pairs(
         d, "doc_id", "text", shingle_n=3, max_df=D14_MAX_DF
     )
-    sh = sig.select("_id", "_sh")
     inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
     union = F.size("_sh_a") + F.size("_sh_b") - inter
-    jac = (
-        cand.join(sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sh_a")), "id_a")
-        .join(sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_sh_b")), "id_b")
-        .select("id_a", "id_b", (inter.cast("double") / union).alias("j"))
+    jac = join_pair_sides(cand, sig.select("_id", "_sh")).select(
+        "id_a", "id_b", (inter.cast("double") / union).alias("j")
     )
     ba = banded.select(F.col("_id").alias("id_a"), "_band", "_bsig")
     bb = banded.select(F.col("_id").alias("id_b"), "_band", "_bsig")
@@ -433,38 +431,23 @@ def _sql_qmean(expr: str) -> str:
     "d09/d14; the scoring join touches only anchored candidates.",
 )
 def d15_minhash_estimator_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import anchored_candidate_pairs, portable_signature_frame
+    from ..operators.dedup import (
+        anchored_candidate_pairs,
+        join_pair_sides,
+        portable_signature_frame,
+    )
 
     d = load_table(spark, sf_dir, "documents")
     sig = portable_signature_frame(d, "doc_id", "text", _D09_K, 3)
     cand = anchored_candidate_pairs(
         d, "doc_id", "text", shingle_n=3, max_df=D14_MAX_DF
     )
-    both = sig.select("_id", "_sh", "_sig")
     inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
     union = F.size("_sh_a") + F.size("_sh_b") - inter
     agree = F.size(F.filter(F.zip_with("_sig_a", "_sig_b", lambda x, y: x == y), lambda b: b))
-    scored = (
-        cand.join(
-            both.select(
-                F.col("_id").alias("id_a"),
-                F.col("_sh").alias("_sh_a"),
-                F.col("_sig").alias("_sig_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            both.select(
-                F.col("_id").alias("id_b"),
-                F.col("_sh").alias("_sh_b"),
-                F.col("_sig").alias("_sig_b"),
-            ),
-            "id_b",
-        )
-        .select(
-            (inter.cast("double") / union).alias("j"),
-            (agree.cast("double") / _D09_K).alias("est"),
-        )
+    scored = join_pair_sides(cand, sig.select("_id", "_sh", "_sig")).select(
+        (inter.cast("double") / union).alias("j"),
+        (agree.cast("double") / _D09_K).alias("est"),
     )
 
     def qmean(col):
@@ -1918,20 +1901,21 @@ def _d18_sql_chain(var: str, out: str) -> str:
     "broadcast; everything downstream is one 6-group aggregate.",
 )
 def d18_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import anchored_candidate_pairs, portable_signature_frame
+    from ..operators.dedup import (
+        anchored_candidate_pairs,
+        join_pair_sides,
+        portable_signature_frame,
+    )
 
     d = load_table(spark, sf_dir, "documents")
     sig = portable_signature_frame(d, "doc_id", "text", _D09_K, 3)
     cand = anchored_candidate_pairs(
         d, "doc_id", "text", shingle_n=3, max_df=D14_MAX_DF
     )
-    sh = sig.select("_id", "_sh")
     inter = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("bigint")
     union = (F.size("_sh_a") + F.size("_sh_b")).cast("bigint") - inter
-    jac = (
-        cand.join(sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sh_a")), "id_a")
-        .join(sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_sh_b")), "id_b")
-        .select("id_a", "id_b", inter.alias("ni"), union.alias("nu"))
+    jac = join_pair_sides(cand, sig.select("_id", "_sh")).select(
+        "id_a", "id_b", inter.alias("ni"), union.alias("nu")
     )
     cfg = spark.createDataFrame(
         list(D18_CONFIGS), "bands int, rws int, s_star double"

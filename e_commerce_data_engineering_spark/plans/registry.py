@@ -94,10 +94,10 @@ _PRIORITY: tuple[str, ...] = (
     # 50-entry correctness sample — officially re-record them first.
     "d18_minhash_band_tuning",
     "s29_mmr_diversity_gain",
-    # Plan-changed THIS round (r13 optimizations — posting-grain
-    # verify for d24/s34, bucket-grain x23 rollup, tiered x12/s13
-    # frames, x18 left-join degenerate parity, PPJoin ordered-frame
-    # key change for t05/t09): re-record officially.
+    # Plan-changed THIS round (r13 optimizations — array-carry verify
+    # for d24/s34, bucket-grain x23 rollup, tiered x12/s13 frames, x18
+    # left-join degenerate parity, PPJoin ordered-frame key change for
+    # t05/t09): re-record officially.
     "d24_containment_pairs",
     "s34_idf_soft_jaccard",
     "x23_linear_counting",

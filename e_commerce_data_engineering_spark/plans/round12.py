@@ -488,16 +488,6 @@ def x23_linear_counting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shingle_postings(sh: DataFrame) -> DataFrame:
-    """(_id, s) exploded shingle postings — the shared narrow form the
-    d24/s34 posting-grain verifies join on (one row per distinct
-    (doc, shingle); _sh is already per-doc distinct, so no dedup
-    shuffle is needed). Tiered once per corpus (``frames.tier``): at
-    100 TB this IS the posting table an ingest pipeline materializes
-    beside the shingle sets."""
-    return sh.select("_id", F.explode("_sh").alias("s"))
-
-
 # ---------------------------------------------------------------------------
 # d24 — containment (asymmetric-Jaccard) pairs: subset duplication the
 # symmetric Jaccard threshold misses (a doc pasted inside a longer one)
@@ -564,7 +554,7 @@ _D24_CAND_SQL = f"""
     "arithmetic on three ints.",
 )
 def d24_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _shingle_frame, anchored_candidate_pairs
+    from ..operators.dedup import _shingle_frame, anchored_candidate_pairs, join_pair_sides
 
     d = load_table(spark, sf_dir, "documents")
     # r13: this query never reads _sig, so it consumes the shingle
@@ -577,20 +567,17 @@ def d24_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exploding candidates x |A| postings shuffles ~100M narrow rows
     # where the arrays cross the pair shuffle once. Posting grain wins
     # only for SELECTIVE candidate sets (the r12 LSH-banded verify);
-    # density decides, and this one is measured.
+    # density decides, and this one is measured. The note covers s34:
+    # it verifies the same pair set with this same join.
     sh = _shingle_frame(d, "doc_id", "text", 3)
     cand = anchored_candidate_pairs(d, "doc_id", "text", shingle_n=3, max_df=D14_MAX_DF)
     ni = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("bigint")
-    sized = (
-        cand.join(sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sh_a")), "id_a")
-        .join(sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_sh_b")), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            ni.alias("n_inter"),
-            F.size("_sh_a").cast("bigint").alias("n_a"),
-            F.size("_sh_b").cast("bigint").alias("n_b"),
-        )
+    sized = join_pair_sides(cand, sh).select(
+        "id_a",
+        "id_b",
+        ni.alias("n_inter"),
+        F.size("_sh_a").cast("bigint").alias("n_a"),
+        F.size("_sh_b").cast("bigint").alias("n_b"),
     )
     return sized.filter(
         (5 * F.col("n_inter") >= 4 * F.col("n_a"))
@@ -612,6 +599,38 @@ def d24_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _S34_Q = "1000000.0"  # 1e-6 idf quantization
+
+
+def _s34_idf(sh: DataFrame, q: float) -> DataFrame:
+    """(s, idfq): every shingle's idf, quantized to integers once. _sh
+    is per-doc distinct, so a row count per shingle is its df."""
+    nd = sh.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    return (
+        sh.select(F.explode("_sh").alias("s"))
+        .groupBy("s")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
+        .crossJoin(F.broadcast(nd))
+        .select(
+            "s",
+            F.floor(
+                F.log((F.col("n") + F.lit(1.0)) / (F.col("df") + F.lit(1.0))) * q + F.lit(0.5)
+            )
+            .cast("bigint")
+            .alias("idfq"),
+        )
+    )
+
+
+def _s34_idf_mass(sh: DataFrame, idf: DataFrame) -> DataFrame:
+    """(_id, _sh, w): each document's shingle set beside its idf mass
+    (the union term's parts), so one join per pair side brings both."""
+    w = (
+        sh.select("_id", F.explode("_sh").alias("s"))
+        .join(idf, "s")
+        .groupBy("_id")
+        .agg(F.sum("idfq").cast("bigint").alias("w"))
+    )
+    return sh.join(w, "_id")
 
 
 @query(
@@ -674,103 +693,60 @@ _S34_Q = "1000000.0"  # 1e-6 idf quantization
     "integer arithmetic in any order; the union mass is inclusion-"
     "exclusion (w_a + w_b - w_inter), never a second set pass. "
     "Scale: df table is vocab-sized and map-side combinable; the "
+    "pair verify is d24's (both shingle arrays onto the candidate row, "
+    "one hash-based array_intersect, linear in |A|+|B|), and the "
     "intersection explode is pair-grain bounded by the df²-capped "
     "candidate set.",
 )
 def s34_idf_soft_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _shingle_frame, anchored_candidate_pairs
+    from ..operators.dedup import _shingle_frame, anchored_candidate_pairs, join_pair_sides
 
     d = load_table(spark, sf_dir, "documents")
     q = float(_S34_Q)
-    # r13: consumes the shingle frame directly (this query never reads
-    # _sig — the signature tower was built for nothing when s34 ran
-    # solo), and the weighted intersection is now ONE fold per pair
-    # over (A's shingle array x B's shingle->idfq MAP) instead of
-    # exploding the intersection and shuffle-joining it against the
-    # idf table by string (two |Σ intersections|-row exchanges gone).
-    # A posting-grain rewrite was also tried and measured 3x SLOWER
-    # (10.8 vs 3.2 s solo at sf0.1): the anchored candidate set is
-    # dense, so candidates x |A| posting rows dwarf one array+map
-    # payload per pair. Density decides; both variants were measured.
+    # d24's verify plus one weighted rollup: both shingle arrays (each
+    # beside its document's idf mass) join onto the candidate row, the
+    # array-carry shape d24 measured on this dense pair set; their
+    # hash-based array_intersect explodes to the shared shingles, and
+    # one join against the vocab-sized idf table feeds the per-pair
+    # count and idf sum. Linear in |A|+|B| per pair; a pair with an
+    # empty intersection (candidates can share a rare anchor HASH
+    # without sharing a shingle string) explodes to nothing, exactly
+    # like the oracle's wint rollup. Intersecting struct(s, idfq)
+    # arrays instead is O(|A|·|B|): array_intersect hashes primitive
+    # elements only.
     sh = _shingle_frame(d, "doc_id", "text", 3)
     cand = anchored_candidate_pairs(d, "doc_id", "text", shingle_n=3, max_df=D14_MAX_DF)
-
     # corpus-level artifacts a pipeline materializes once (the idf
-    # table is the classic ingest-time side product): scratch-parquet
-    # tiered like the shingle frame they derive from.
-    px = tier(_shingle_postings, sh)
-
-    def build_idf(sh: DataFrame, px: DataFrame, q: float) -> DataFrame:
-        nd = sh.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        return (
-            px.groupBy("s")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-            .crossJoin(F.broadcast(nd))
-            .select(
-                "s",
-                F.floor(
-                    F.log((F.col("n") + F.lit(1.0)) / (F.col("df") + F.lit(1.0))) * q
-                    + F.lit(0.5)
-                )
-                .cast("bigint")
-                .alias("idfq"),
-            )
-        )
-
-    idf = tier(build_idf, sh, px, q=q)
-    # weighted postings (_id, s, idfq): built once, feeds the per-doc
-    # idf mass AND the per-doc weighted shingle map below
-    pxw = tier(lambda px, idf: px.join(idf, "s"), px, idf)
-    # per-doc idf mass: consumed from two subtrees (wa and wb joins) —
-    # tiered so the posting rollup runs once, not once per side
-    wdoc = tier(
-        lambda pxw: pxw.groupBy("_id").agg(F.sum("idfq").cast("bigint").alias("w")), pxw
-    )
-    # per-doc shingle -> idfq map: the join payload that lets the pair
-    # stage compute |A∩B| and Σ idfq(A∩B) in one local fold (guide
-    # §4.1 built-ins / §2.3 shuffle-fewer-bytes: the map crosses the
-    # pair shuffle once; nothing pair-grain is exploded or re-joined)
-    mw = tier(
-        lambda pxw: pxw.groupBy("_id").agg(
-            F.map_from_entries(F.collect_list(F.struct("s", "idfq"))).alias("_m")
-        ),
-        pxw,
-    )
-    zero = F.lit(0).cast("bigint")
-    n_inter = F.aggregate(
-        F.col("_sh_a"),
-        zero,
-        lambda acc, s: acc
-        + F.when(F.element_at(F.col("_mb"), s).isNotNull(), F.lit(1)).otherwise(
-            F.lit(0)
-        ),
-    )
-    wi = F.aggregate(
-        F.col("_sh_a"),
-        zero,
-        lambda acc, s: acc + F.coalesce(F.element_at(F.col("_mb"), s), zero),
-    )
+    # table is the classic ingest-time side product)
+    idf = tier(_s34_idf, sh, q=q)
+    docs = tier(_s34_idf_mass, sh, idf)
     scored = (
-        cand.join(sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sh_a")), "id_a")
-        .join(mw.select(F.col("_id").alias("id_b"), F.col("_m").alias("_mb")), "id_b")
-        .select("id_a", "id_b", n_inter.alias("n_inter"), wi.alias("wi"))
-        # only pairs with a non-empty intersection exist in the
-        # oracle's wint rollup (candidates can share a rare anchor
-        # HASH without sharing a shingle string)
-        .filter(F.col("n_inter") >= 1)
-    )
-    return (
-        scored.join(wdoc.select(F.col("_id").alias("id_a"), F.col("w").alias("wa")), "id_a")
-        .join(wdoc.select(F.col("_id").alias("id_b"), F.col("w").alias("wb")), "id_b")
+        join_pair_sides(cand, docs)
         .select(
             "id_a",
             "id_b",
-            "n_inter",
-            fround(
-                F.col("wi").cast("double") / (F.col("wa") + F.col("wb") - F.col("wi")), 6
-            ).alias("soft_jaccard"),
-            fround(F.col("wi").cast("double") / q, 6).alias("idf_overlap"),
+            "w_a",
+            "w_b",
+            F.explode(F.array_intersect("_sh_a", "_sh_b")).alias("s"),
         )
+        # merge, not broadcast: a broadcast hash table on a string key
+        # holds at least one whole memory page (16 MB on a 2 GB driver)
+        # on the driver for as long as the executed plan stays
+        # reachable; the sort-merge join measured as fast at sf0.1
+        .join(idf.hint("merge"), "s")
+        .groupBy("id_a", "id_b", "w_a", "w_b")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_inter"),
+            F.sum("idfq").cast("bigint").alias("wi"),
+        )
+    )
+    wi = F.col("wi").cast("double")
+    return scored.select(
+        "id_a",
+        "id_b",
+        "n_inter",
+        fround(wi / (F.col("w_a") + F.col("w_b") - F.col("wi")), 6).alias("soft_jaccard"),
+        fround(wi / q, 6).alias("idf_overlap"),
     )
 
 

@@ -139,6 +139,25 @@ def test_scratch_write_failure_keeps_memory_tier(spark, tmp_path, monkeypatch):
     frames.clear_frame_cache()
 
 
+def test_s34_reuses_d24_frames_and_adds_two(spark):
+    """s34 after d24 in one session: the shingle and candidate-pair
+    entries d24 built are reused, and s34 adds only its idf table and
+    per-document idf mass."""
+    from e_commerce_data_engineering_spark.operators import dedup
+    from e_commerce_data_engineering_spark.plans.registry import all_queries
+
+    queries = all_queries()
+    frames.clear_frame_cache()
+    queries["d24_containment_pairs"](spark, SF_SMOKE).count()
+    after_d24 = set(frames._ENTRIES)
+    queries["s34_idf_soft_jaccard"](spark, SF_SMOKE).count()
+    added = [k[1] for k in frames._ENTRIES if k not in after_d24]
+    assert sorted(c.co_name for c in added) == ["_s34_idf", "_s34_idf_mass"]
+    built_by_d24 = {k[1] for k in after_d24}
+    assert {dedup._shingles.__code__, dedup._anchored_pairs.__code__} <= built_by_d24
+    frames.clear_frame_cache()
+
+
 def test_ivf_index_cache_is_per_corpus(spark, tmp_path):
     """d06 over one corpus, then over another in the same session: the
     second run must cluster its own vectors, not reuse the first

@@ -119,6 +119,23 @@ def test_run_batch_metrics_and_partitioned_sink(spark, tmp_path):
     assert glob.glob(str(tmp_path / "quarantine" / "year=2026" / "month=02" / "day=03" / "*.json"))
 
 
+def test_run_batch_frees_parse_cache(spark, tmp_path):
+    """process_raw caches the parsed input; once run_batch has its
+    counts it must leave nothing in the session's cache."""
+    from e_commerce_data_engineering_spark.pipeline import run_batch
+    from e_commerce_data_engineering_spark.sources.generator import generate_orders
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    lines = generate_orders(spark, 10, seed=3).toJSON().collect()
+    (raw / "a.jsonl").write_text("\n".join(lines) + "\nnot json\n")
+
+    spark.catalog.clearCache()
+    res = run_batch(spark, str(raw))
+    assert (res.total_processed, res.corrupt_lines) == (10, 1)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_orc_roundtrip_with_pushdown(spark, tmp_path):
     """ORC source/sink breadth (SURVEY §2.1): values survive a
     parquet→ORC→read round-trip bit-for-bit and predicates reach the

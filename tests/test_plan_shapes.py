@@ -1582,7 +1582,9 @@ def test_round12_batch_shapes(spark):
     BroadcastNestedLoopJoin over histogram-sized input is the intended
     shape — never the session table); x23 is four map-side-combinable
     aggregates; d24/s34 ride the shared anchored-pair machinery (no
-    cartesian); m16 is a shuffle-free narrow Arrow map."""
+    cartesian), and s34 verifies with d24's array_intersect, not a
+    per-pair probe into a per-document map (a linear scan per probe,
+    O(|A|·|B|) per pair); m16 is a shuffle-free narrow Arrow map."""
     for name in (
         "g17_personalized_pagerank",
         "t77_zipf_slope",
@@ -1592,6 +1594,10 @@ def test_round12_batch_shapes(spark):
     ):
         p = plan_of(spark, name)
         assert "CartesianProduct" not in p, (name, p)
+
+    p = plan_of(spark, "s34_idf_soft_jaccard")
+    assert "element_at" not in p and "map_from_entries" not in p, p
+    assert "array_intersect" in p, p
 
     p = plan_of(spark, "m16_audio_rms_zcr")
     assert "CartesianProduct" not in p and ("MapInPandas" in p or "mapInPandas" in p), p

@@ -164,6 +164,10 @@ OP_TABLES = {
     # K-replicated embeddings (probe set fixed, candidate corpus xK)
     "consensus_d21": {"salted_sf"},
     "mmr_gain_s29": {"reg_embeddings"},
+    # the anchored-pair verify pair: s34 answers d24's question with
+    # one extra idf rollup, so its curve should track d24's
+    "containment_d24": {"salted_sf"},
+    "soft_jaccard_s34": {"salted_sf"},
 }
 
 
@@ -971,6 +975,20 @@ def main() -> None:
 
             return d21_dedup_consensus(spark, salted_sf).count()
 
+        def containment_d24():
+            from e_commerce_data_engineering_spark.plans.round12 import (
+                d24_containment_pairs,
+            )
+
+            return d24_containment_pairs(spark, salted_sf).count()
+
+        def soft_jaccard_s34():
+            from e_commerce_data_engineering_spark.plans.round12 import (
+                s34_idf_soft_jaccard,
+            )
+
+            return s34_idf_soft_jaccard(spark, salted_sf).count()
+
         def mmr_gain_s29():
             from e_commerce_data_engineering_spark.plans.similarity import (
                 s29_mmr_diversity_gain,
@@ -1046,6 +1064,8 @@ def main() -> None:
             ("cross_dup_d19", cross_dup_d19, n_salt_docs),
             ("cms_decision_x18", cms_decision_x18, n_reg_li),
             ("consensus_d21", consensus_d21, n_salt_docs),
+            ("containment_d24", containment_d24, n_salt_docs),
+            ("soft_jaccard_s34", soft_jaccard_s34, n_salt_docs),
             ("mmr_gain_s29", mmr_gain_s29, n_reg_em),
             ("sq_bits_s36", sq_bits_s36, n_reg_em),
             ("zorder_q133", zorder_q133, n_reg_li),
