@@ -35,7 +35,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
 from ..operators.dedup import minhash_signature, shingles_of
-from .epochs import read_before, start_file_stream, write_epoch
+from .epochs import fold_epoch, read_before, read_latest, start_file_stream, write_epoch
 
 
 def _banded(sig_frame: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -176,8 +176,9 @@ def start_exact_dedup_stream(
     broadcast, while the hash store grows with the corpus.
 
     State layout (``streaming/epochs`` stores):
-      ``{state_dir}/hashes/batch_id=N`` — accepted (h) rows,
-      ``{state_dir}/bloom/batch_id=N``  — their set bit positions,
+      ``{state_dir}/hashes/batch_id=N`` — accepted (h) rows (log store),
+      ``{state_dir}/bloom/batch_id=N``  — every set bit position so far
+        (snapshot store, at most m rows),
       ``{state_dir}/metrics/batch_id=N`` — one row:
         (n_in, n_batch_unique, n_bloom_negative, n_store_checked,
         n_kept) so the pruning ratio is observable.
@@ -206,9 +207,8 @@ def start_exact_dedup_stream(
         n_in = hashed.count()
         n_batch_unique = batch_unique.count()
 
-        bloom = read_before(s, bloom_store, epoch_id)
-        if bloom is not None:
-            bits = bloom.select("bit").distinct()
+        bits = read_latest(s, bloom_store, before=epoch_id)
+        if bits is not None:
             probed = (
                 _positions(batch_unique)
                 .join(F.broadcast(bits.withColumn("_set", F.lit(1))), "bit", "left")
@@ -231,7 +231,7 @@ def start_exact_dedup_stream(
         )
         write_epoch(out, accepted_dir, epoch_id)
         write_epoch(kept.select("h"), hash_store, epoch_id)
-        write_epoch(_positions(kept).select("bit").distinct(), bloom_store, epoch_id)
+        fold_epoch(_positions(kept).select("bit"), bloom_store, epoch_id, DataFrame.distinct)
         metrics = s.createDataFrame(
             [(n_in, n_batch_unique, n_batch_unique - n_maybe, n_maybe, n_kept)],
             "n_in bigint, n_batch_unique bigint, n_bloom_negative bigint, "

@@ -24,7 +24,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..pipeline import process_raw, with_processing_partitions
 from ..schemas import RAW_ORDER_SCHEMA_PERMISSIVE
-from .epochs import read_latest, start_file_stream, write_epoch
+from .epochs import fold_epoch, read_latest, start_file_stream, sum_by, write_epoch
 
 
 def read_raw_stream(spark: SparkSession, raw_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
@@ -295,25 +295,23 @@ def start_rollup_stream(
     dashboard reads a small aggregate table instead of re-scanning the
     fact stream.
 
-    Exactly-once without transactions: additive merges are NOT
+    Exactly-once without transactions: an additive merge is NOT
     idempotent (a replayed batch would double-count), so each batch
-    writes only its own PARTIAL aggregate to an additive
-    ``streaming/epochs`` store. ``read_rollup`` folds the partials with
-    a final groupBy: partial aggregation is associative/commutative, so
-    the fold equals the aggregate over all raw data ever drained, and
-    stays cheap because each partial is pre-collapsed to the key
-    domain. Periodically compact old partials with
-    ``operators.layout.compact`` semantics (read + re-aggregate +
-    rewrite) to bound the directory count; at 100 TB the partials are
-    the same thing as a log-structured aggregate tree's delta layer.
+    folds its partial aggregate onto the newest EARLIER snapshot of a
+    ``streaming/epochs`` snapshot store (``fold_epoch``) and overwrites
+    its own ``batch_id`` dir: a replay folds onto the same earlier
+    snapshot and rewrites the same rows. Partial aggregation is
+    associative/commutative, so the snapshot equals the aggregate over
+    all raw data ever drained; it is key-domain sized, and retention
+    keeps at most two of them however long the stream runs.
     """
 
     def _partial(batch_df: DataFrame, epoch_id: int) -> None:
         partial = batch_df.groupBy(*key_cols).agg(
-            F.count(F.lit(1)).alias("partial_count"),
-            F.sum(sum_col).alias("partial_sum"),
+            F.count(F.lit(1)).alias("n"),
+            F.sum(sum_col).alias("total"),
         )
-        write_epoch(partial, rollup_dir, epoch_id)
+        fold_epoch(partial, rollup_dir, epoch_id, sum_by(*key_cols))
 
     return start_file_stream(
         spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
@@ -321,15 +319,8 @@ def start_rollup_stream(
 
 
 def read_rollup(spark: SparkSession, rollup_dir: str, key_cols: list[str]) -> DataFrame:
-    """Fold the per-batch partials into the current rollup state."""
-    return (
-        spark.read.parquet(rollup_dir)
-        .groupBy(*key_cols)
-        .agg(
-            F.sum("partial_count").alias("n"),
-            F.sum("partial_sum").alias("total"),
-        )
-    )
+    """The current rollup state: (key_cols..., n, total)."""
+    return read_latest(spark, rollup_dir).select(*key_cols, "n", "total")
 
 
 def start_active_users_stream(
@@ -347,9 +338,9 @@ def start_active_users_stream(
     information-theoretic minimum state for an EXACT rolling distinct
     (a COUNT can't be merged; the set can).
 
-    Exactly-once like start_rollup_stream: each micro-batch writes only
-    its OWN distinct (d, user_id) pairs to an additive
-    ``streaming/epochs`` store; cross-batch duplicates collapse in the
+    Exactly-once: each micro-batch writes only its OWN distinct
+    (d, user_id) pairs to a ``streaming/epochs`` log store (the set
+    grows with the days kept); cross-batch duplicates collapse in the
     read-side distinct (set union is idempotent, unlike addition — which
     is why this needs no version column). ``read_rolling_active_users``
     then folds the SAME ``rolling_active_users`` core the batch query
@@ -400,7 +391,7 @@ def start_trending_stream(
     multiplication with 0.5^((B-A)/halflife). Each batch (1) computes
     its own partial anchored at its max event time, (2) rescales the
     stored partial from its old anchor to the new one, (3) adds, and
-    (4) writes (event_type, partial, anchor_us, n_events) as a chained
+    (4) writes (event_type, partial, anchor_us, n_events) as a
     ``streaming/epochs`` snapshot, so a restarted batch recomputes
     byte-identical state. The anchor always advances to the newest
     event seen, keeping partials in (0, sum(values)] — no overflow for
@@ -521,7 +512,8 @@ def start_transition_stream(
     Assumes per-user event-time-ordered delivery across batches (file
     streams replaying a log satisfy this); genuinely out-of-order feeds
     belong to the batch query over the settled table. Both state
-    frames are chained snapshots in the ``streaming/epochs`` layout.
+    frames are ``streaming/epochs`` snapshot stores; the counts are
+    summed on write by ``fold_epoch``.
     ``read_transitions`` returns the e18 shape;
     batch/stream parity is pinned in tests/test_streaming.py."""
     counts_dir = f"{state_dir}/counts"
@@ -557,14 +549,7 @@ def start_transition_stream(
             .groupBy("prev_type", F.col("event_type").alias("next_type"))
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        prev_counts = read_latest(s, counts_dir, before=epoch_id)
-        merged = (
-            batch_trans.unionByName(prev_counts)
-            if prev_counts is not None
-            else batch_trans
-        )
-        merged = merged.groupBy("prev_type", "next_type").agg(F.sum("n").alias("n"))
-        write_epoch(merged, counts_dir, epoch_id)
+        fold_epoch(batch_trans, counts_dir, epoch_id, sum_by("prev_type", "next_type"))
 
         new_last = (
             ev.withColumn(
@@ -627,7 +612,7 @@ def start_attribution_stream(
     last-non-purchase state (purchases never become seeds, so 'direct'
     attribution survives batch splits).
 
-    Same assumptions and chained ``streaming/epochs`` snapshots as
+    Same assumptions and ``streaming/epochs`` snapshot stores as
     start_transition_stream. ``read_attribution`` returns the e21 shape;
     batch/stream parity is pinned in tests/test_streaming.py."""
     totals_dir = f"{state_dir}/totals"
@@ -672,13 +657,7 @@ def start_attribution_stream(
                 F.sum("value").cast("decimal(12,2)").alias("val_sum"),
             )
         )
-        prev_tot = read_latest(s, totals_dir, before=epoch_id)
-        merged = credited.unionByName(prev_tot) if prev_tot is not None else credited
-        merged = merged.groupBy("channel").agg(
-            F.sum("n_purchases").alias("n_purchases"),
-            F.sum("val_sum").cast("decimal(12,2)").alias("val_sum"),
-        )
-        write_epoch(merged, totals_dir, epoch_id)
+        fold_epoch(credited, totals_dir, epoch_id, sum_by("channel"))
 
         new_last = (
             ev.filter(F.col("event_type") != "purchase")
@@ -737,7 +716,8 @@ def start_daily_totals_stream(
     days×types-sized state, never over raw events. That is why one
     store serves two analytics: the stream cost is one tiny keyed
     aggregate per batch, and adding a third finalizer costs nothing at
-    ingest. The totals are a chained ``streaming/epochs`` snapshot.
+    ingest. The totals are a ``streaming/epochs`` snapshot store,
+    summed on write by ``fold_epoch``.
     Batch/stream parity for BOTH finalizers is pinned in
     tests/test_streaming.py."""
     daily_dir = f"{state_dir}/daily"
@@ -745,16 +725,10 @@ def start_daily_totals_stream(
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
         from ..plans.events import daily_totals
 
-        s = batch_df.sparkSession
         part = daily_totals(
             batch_df.withColumn("ts", F.col("ts").cast("timestamp"))
-        )
-        prev = read_latest(s, daily_dir, before=epoch_id)
-        merged = part.unionByName(prev) if prev is not None else part
-        merged = merged.groupBy("event_type", "day").agg(
-            F.sum("day_total").cast("decimal(12,2)").alias("day_total")
-        )
-        write_epoch(merged, daily_dir, epoch_id)
+        ).withColumn("day_total", F.col("day_total").cast("decimal(12,2)"))
+        fold_epoch(part, daily_dir, epoch_id, sum_by("event_type", "day"))
 
     return start_file_stream(
         spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _batch
@@ -790,16 +764,17 @@ def start_histogram_stream(
     """Streaming twin of the x08 histogram-quantile sketch: each
     micro-batch bins its rows against FIXED edges (``mn + i*width``,
     chosen up front — e.g. from a historical scan; a value outside the
-    range clamps to an edge bin) and writes its partial ``(bin, cnt)``
-    grid to an additive ``streaming/epochs`` store. The histogram is a mergeable
-    sketch, so read-side SUM over all partials equals the batch
-    histogram of the union — no raw rows are retained, state is
-    O(nbins) per drained micro-batch regardless of stream volume.
+    range clamps to an edge bin) and sums its partial ``(bin, cnt)``
+    grid into a ``streaming/epochs`` snapshot store. The histogram is a
+    mergeable sketch, so the snapshot equals the batch histogram of the
+    union — no raw rows are retained, and state is O(nbins) regardless
+    of stream volume.
     """
     from ..operators.sketch import histogram_bins
 
     def _partial(batch_df: DataFrame, epoch_id: int) -> None:
-        write_epoch(histogram_bins(batch_df, value_col, mn, width, nbins), state_dir, epoch_id)
+        part = histogram_bins(batch_df, value_col, mn, width, nbins)
+        fold_epoch(part, state_dir, epoch_id, sum_by("bin"))
 
     return start_file_stream(
         spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
@@ -817,12 +792,11 @@ def start_kmv_stream(
 ) -> StreamingQuery:
     """Streaming twin of the x09 KMV distinct sketch over document
     tokens: each micro-batch computes its per-source K-smallest distinct
-    token-hash set (``operators/sketch.kmv_sketch``) and writes that
-    partial to an additive ``streaming/epochs`` store. KMV is a
-    MERGEABLE sketch: the K smallest of a union equals the K smallest of
-    the union of per-shard K-smallest sets, so the read side folds
-    partials without raw rows; state is O(K) rows per (source, drained
-    batch)."""
+    token-hash set (``operators/sketch.kmv_sketch``) and merges it into
+    a ``streaming/epochs`` snapshot store. KMV is a MERGEABLE sketch:
+    the K smallest of a union equals the K smallest of the union of
+    per-shard K-smallest sets, so the snapshot is the stream's sketch
+    without raw rows; state is O(K) rows per source."""
     from ..functions.text import tokens
     from ..operators.sketch import kmv_hash, kmv_sketch
 
@@ -834,7 +808,7 @@ def start_kmv_stream(
             .select("source", kmv_hash(F.col("tok")).alias("hv"))
             .distinct()
         )
-        write_epoch(kmv_sketch(hv, ["source"], k), state_dir, epoch_id)
+        fold_epoch(hv, state_dir, epoch_id, lambda df: kmv_sketch(df, ["source"], k))
 
     return start_file_stream(
         spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
@@ -852,12 +826,11 @@ def start_ams_stream(
     """Streaming twin of the x10 AMS F2 sketch over document tokens:
     each micro-batch reduces its token stream to per-token counts, folds
     them through the SAME ``plans/graph_sketch.ams_zvector`` core the
-    batch query uses, and writes the 9-row ``(i, zi)`` partial to an
-    additive ``streaming/epochs`` store. Z_i is ADDITIVE: the union
+    batch query uses, and sums the 9-row ``(i, zi)`` partial into a
+    ``streaming/epochs`` snapshot store. Z_i is ADDITIVE: the union
     stream's Z equals the element-wise sum of per-batch Z, all exact
     int64, so stream-vs-batch parity is exact equality, not a tolerance
-    check. State is 9 integers per drained micro-batch regardless of
-    stream volume."""
+    check. State is 9 integers regardless of stream volume."""
     from ..functions.text import tokens
     from ..plans.graph_sketch import ams_zvector
 
@@ -867,7 +840,7 @@ def start_ams_stream(
             .groupBy("token")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         )
-        write_epoch(ams_zvector(per_tok), state_dir, epoch_id)
+        fold_epoch(ams_zvector(per_tok), state_dir, epoch_id, sum_by("i"))
 
     return start_file_stream(
         spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
@@ -875,19 +848,14 @@ def start_ams_stream(
 
 
 def read_ams_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Fold the streamed per-batch AMS partials by element-wise
-    addition (the sketch's merge) back into the 9-row ``(i, zi)``
-    state — exact int64, comparable by equality to the batch
-    ``ams_zvector`` over the union of all drained rows."""
-    return (
-        spark.read.parquet(state_dir)
-        .groupBy("i")
-        .agg(F.sum("zi").cast("bigint").alias("zi"))
-    )
+    """The streamed 9-row ``(i, zi)`` state — exact int64, comparable
+    by equality to the batch ``ams_zvector`` over the union of all
+    drained rows."""
+    return read_latest(spark, state_dir)
 
 
 def read_ams_f2(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Median-of-means F2 estimate from the folded stream state,
+    """Median-of-means F2 estimate from the stream state,
     through the SAME ``plans/graph_sketch.ams_f2_estimate`` core the
     batch x10 query uses, so batch/stream parity holds by
     construction."""
@@ -897,15 +865,14 @@ def read_ams_f2(spark: SparkSession, state_dir: str) -> DataFrame:
 
 
 def read_kmv_estimates(spark: SparkSession, state_dir: str, k: int = 16) -> DataFrame:
-    """Fold the streamed per-batch KMV partials (union → re-truncate to
-    the K smallest — the sketch's merge) and estimate per-source
-    distinct-token counts plus a '__all__' merged row, through the SAME
-    ``operators/sketch.kmv_sketch/kmv_estimate`` core the x09 batch
-    query family uses, so batch/stream parity holds by construction."""
+    """Estimate per-source distinct-token counts from the streamed KMV
+    snapshot (kept to the K smallest for this ``k``) plus a '__all__'
+    merged row, through the SAME ``operators/sketch.kmv_sketch/
+    kmv_estimate`` core the x09 batch query family uses, so batch/stream
+    parity holds by construction."""
     from ..operators.sketch import kmv_estimate, kmv_sketch
 
-    parts = spark.read.parquet(state_dir).select("source", "hv")
-    per_source = kmv_sketch(parts, ["source"], k)
+    per_source = kmv_sketch(read_latest(spark, state_dir), ["source"], k)
     merged = kmv_sketch(
         per_source.select(F.lit("__all__").alias("source"), "hv"), ["source"], k
     )
@@ -919,18 +886,13 @@ def read_histogram_quantiles(
     width: float,
     qs: tuple[float, ...] = (0.25, 0.5, 0.75, 0.9, 0.99),
 ) -> DataFrame:
-    """Fold the streamed per-batch histogram partials (bins add up —
-    the sketch's merge property) and pick quantiles through the SAME
-    ``operators/sketch.quantiles_from_histogram`` core the batch x08
-    query uses, so batch/stream parity holds by construction
+    """Pick quantiles from the streamed histogram snapshot through the
+    SAME ``operators/sketch.quantiles_from_histogram`` core the batch
+    x08 query uses, so batch/stream parity holds by construction
     (parity-tested in tests/test_streaming.py)."""
     from ..operators.sketch import quantiles_from_histogram
 
-    hist = (
-        spark.read.parquet(state_dir)
-        .groupBy("bin")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    hist = read_latest(spark, state_dir)
     w = hist.agg(F.sum("cnt").alias("n")).select(
         F.lit(float(mn)).alias("mn"), F.lit(float(width)).alias("width"), "n"
     )
@@ -948,12 +910,11 @@ def start_count_sketch_stream(
     """Streaming twin of the x12 Count-Sketch over document tokens: each
     micro-batch reduces its token stream to per-token counts, folds them
     through the SAME ``plans/graph_sketch.cs_grid`` core the batch query
-    uses, and writes the (d, bucket, s) grid partial to an additive
-    ``streaming/epochs`` store. The grid is ADDITIVE: the union stream's
-    grid equals the element-wise (d, bucket) sum of per-batch grids, all
-    exact int64, so stream-vs-batch parity is exact equality. State is
-    at most depth*width integers per drained micro-batch regardless of
-    stream volume."""
+    uses, and sums the (d, bucket, s) grid partial into a
+    ``streaming/epochs`` snapshot store. The grid is ADDITIVE: the union
+    stream's grid equals the element-wise (d, bucket) sum of per-batch
+    grids, all exact int64, so stream-vs-batch parity is exact equality.
+    State is at most depth*width integers regardless of stream volume."""
     from ..functions.text import tokens
     from ..plans.graph_sketch import cs_grid
 
@@ -963,7 +924,7 @@ def start_count_sketch_stream(
             .groupBy("token")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         )
-        write_epoch(cs_grid(per_tok), state_dir, epoch_id)
+        fold_epoch(cs_grid(per_tok), state_dir, epoch_id, sum_by("d", "bucket"))
 
     return start_file_stream(
         spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
@@ -971,21 +932,16 @@ def start_count_sketch_stream(
 
 
 def read_count_sketch_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Fold the streamed per-batch Count-Sketch partials by (d, bucket)
-    addition (the sketch's merge) back into one grid — exact int64,
-    comparable by equality to the batch ``cs_grid`` over the union of
-    all drained rows."""
-    return (
-        spark.read.parquet(state_dir)
-        .groupBy("d", "bucket")
-        .agg(F.sum("s").cast("bigint").alias("s"))
-    )
+    """The streamed Count-Sketch grid — exact int64, comparable by
+    equality to the batch ``cs_grid`` over the union of all drained
+    rows."""
+    return read_latest(spark, state_dir)
 
 
 def read_count_sketch_estimates(
     spark: SparkSession, state_dir: str, targets: DataFrame
 ) -> DataFrame:
-    """Probe the folded stream grid for the target tokens through the
+    """Probe the stream grid for the target tokens through the
     SAME ``plans/graph_sketch.cs_estimates`` core the batch x12 query
     uses, so batch/stream parity holds by construction."""
     from ..plans.graph_sketch import cs_estimates
@@ -1004,11 +960,11 @@ def start_linear_counting_stream(
     """Streaming twin of the x13 linear-counting bitmap over document
     tokens: each micro-batch reduces its tokens to the DISTINCT (source,
     bucket) hit set on the same portable hash the batch query uses,
-    written to an additive ``streaming/epochs`` store. The bitmap's
-    merge is set UNION — folding the per-batch hit sets with DISTINCT
-    reproduces the batch bitmap exactly, so stream-vs-batch parity is
-    exact set equality. State is at most sources*m rows per drained
-    micro-batch however large the stream."""
+    merged into a ``streaming/epochs`` snapshot store. The bitmap's
+    merge is set UNION — folding each hit set onto the snapshot with
+    DISTINCT reproduces the batch bitmap exactly, so stream-vs-batch
+    parity is exact set equality. State is at most sources*m rows
+    however large the stream."""
     from ..functions.text import tokens
     from ..operators.sketch import portable_hash
     from ..plans.graph_sketch import _X13_M
@@ -1024,7 +980,7 @@ def start_linear_counting_stream(
             )
             .distinct()
         )
-        write_epoch(hit, state_dir, epoch_id)
+        fold_epoch(hit, state_dir, epoch_id, DataFrame.distinct)
 
     return start_file_stream(
         spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
@@ -1032,17 +988,15 @@ def start_linear_counting_stream(
 
 
 def read_linear_counting_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Fold the streamed per-batch bitmap partials by set union (the
-    sketch's merge) back into the DISTINCT (source, bucket) hit set —
-    comparable by equality to the batch bitmap over the union of all
-    drained rows."""
-    return spark.read.parquet(state_dir).select("source", "b").distinct()
+    """The streamed DISTINCT (source, bucket) hit set — comparable by
+    equality to the batch bitmap over the union of all drained rows."""
+    return read_latest(spark, state_dir)
 
 
 def read_linear_counting_estimates(
     spark: SparkSession, state_dir: str
 ) -> DataFrame:
-    """Per-source linear-counting estimate m*ln(m/empty) from the folded
+    """Per-source linear-counting estimate m*ln(m/empty) from the
     stream bitmap — the same occupancy inversion the batch x13 query
     reports, so batch/stream parity holds by construction."""
     from ..plans.graph_sketch import _X13_M
@@ -1128,9 +1082,10 @@ def start_dgim_stream(
     ``value >= threshold`` among the key's last ``window`` arrivals?".
 
     Unlike the KMV/AMS/Count-Sketch/linear-counting stores (mergeable
-    partials folded at read time), DGIM state EVOLVES sequentially —
-    expiry depends on arrival order — so each batch writes the FULL
-    per-key snapshot as a chained ``streaming/epochs`` store (tiny:
+    sketches any batch split folds alike), DGIM state EVOLVES
+    sequentially — expiry depends on arrival order — so each batch
+    steps the FULL per-key snapshot of a ``streaming/epochs`` snapshot
+    store with its own fold (tiny:
     <= 2*(log2 W)+2 buckets per key).
     Arrivals are ordered by (ts, event_id) and numbered from the
     key's persisted ``n_seen``, so the fold is a pure function of the
@@ -1286,7 +1241,7 @@ def start_misra_gries_stream(
     Like the DGIM store (and unlike the mergeable KMV/AMS/Count-Sketch/
     linear-counting folds), the MG summary EVOLVES sequentially — a
     decrement depends on what arrived before — so each batch persists
-    the full per-key snapshot as a chained ``streaming/epochs`` store
+    the full per-key snapshot of a ``streaming/epochs`` snapshot store
     (<= k rows per key) and folds arrivals ordered by (ts, event_id)
     from the persisted ``n_seen``: the state is a pure function of the
     stream prefix, and split-vs-one-batch delivery is bit-identical
@@ -1414,18 +1369,28 @@ def start_sample_quantile_stream(
     """Streaming twin of the x15 sampling idea as a FIXED-SIZE store:
     each micro-batch reduces its rows to the per-group bottom-k rows by
     scrambled row-key hash (``operators/sketch.bottomk_sample``) and
-    writes that partial to an additive ``streaming/epochs`` store. The
-    bottom-k row sample is MERGEABLE exactly like KMV: bottom-k of a
-    union == bottom-k of the union of per-shard bottom-k sets, so the
-    read side folds k-row partials, never raw rows, and state is O(k)
-    rows per (group, drained batch) regardless of stream volume. k rides
-    IN the state rows (round-8 Misra-Gries ADVICE: never a reader
-    parameter that can drift from the writer's)."""
+    merges it into a ``streaming/epochs`` snapshot store. The bottom-k
+    row sample is MERGEABLE exactly like KMV: bottom-k of a union ==
+    bottom-k of the union of per-shard bottom-k sets, so each epoch
+    folds k-row samples, never raw rows, and state is O(k) rows per
+    group regardless of stream volume. k rides IN the state rows
+    (round-8 Misra-Gries ADVICE: never a reader parameter that can
+    drift from the writer's)."""
     from ..operators.sketch import bottomk_sample
+
+    def _merge(st: DataFrame) -> DataFrame:
+        # union -> re-truncate to the k smallest scrambled hashes
+        w = W.partitionBy("grp").orderBy("hv", "key")
+        return (
+            st.dropDuplicates(["grp", "key"])
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= F.col("k"))
+            .select("grp", "hv", "key", "val", "k")
+        )
 
     def _partial(batch_df: DataFrame, epoch_id: int) -> None:
         sample = bottomk_sample(batch_df, group_col, key_col, value_col, k)
-        write_epoch(sample, state_dir, epoch_id)
+        fold_epoch(sample, state_dir, epoch_id, _merge)
 
     return start_file_stream(
         spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
@@ -1433,25 +1398,13 @@ def start_sample_quantile_stream(
 
 
 def read_sample_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Fold the streamed per-batch bottom-k partials back into ONE
-    bottom-k sample per group (union -> re-truncate to the k smallest
-    scrambled hashes — the sketch's merge, with k read from the state
-    itself). Exactly comparable to ``bottomk_sample`` over the union
-    of all drained rows."""
-    from pyspark.sql import Window as W
-
-    st = spark.read.parquet(state_dir)
-    w = W.partitionBy("grp").orderBy("hv", "key")
-    return (
-        st.dropDuplicates(["grp", "key"])
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= F.col("k"))
-        .select("grp", "hv", "key", "val", "k")
-    )
+    """The streamed bottom-k sample, one per group — exactly comparable
+    to ``bottomk_sample`` over the union of all drained rows."""
+    return read_latest(spark, state_dir)
 
 
 def read_sample_quantiles(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Quantile estimates from the folded stream sample, through the
+    """Quantile estimates from the stream sample, through the
     SAME ``operators/sketch.bottomk_quantiles`` core a batch caller
     uses, so batch/stream parity holds by construction."""
     from ..operators.sketch import bottomk_quantiles
@@ -1474,18 +1427,27 @@ def start_priority_sample_stream(
     """Streaming twin of the x16 priority sample as store #6: each
     micro-batch reduces its rows to the per-group top-(k+1) priorities
     (``operators/sketch.priority_sample`` — the SAME core x16 runs)
-    and writes that partial to an additive ``streaming/epochs`` store.
-    The k+1-row summary is MERGEABLE exactly like bottom-k: the top-(k+1)
+    and merges it into a ``streaming/epochs`` snapshot store. The
+    k+1-row summary is MERGEABLE exactly like bottom-k: the top-(k+1)
     of a union equals the top-(k+1) of the union of per-shard
     top-(k+1) sets, and row k+1 of the MERGED sample is the global
     tau the estimator needs — so the read side reproduces the one-pass
     batch estimate exactly, never approximately. State is O(k) rows
-    per (group, drained batch); k rides IN the state rows."""
+    per group; k rides IN the state rows."""
     from ..operators.sketch import priority_sample
+
+    def _merge(st: DataFrame) -> DataFrame:
+        # the top-(k+1) ranking priority_estimate applies
+        w = W.partitionBy("grp").orderBy(F.col("p").desc(), "key")
+        return (
+            st.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= F.col("k") + 1)
+            .drop("_rn")
+        )
 
     def _partial(batch_df: DataFrame, epoch_id: int) -> None:
         sample = priority_sample(batch_df, group_col, key_col, weight_col, k)
-        write_epoch(sample, state_dir, epoch_id)
+        fold_epoch(sample, state_dir, epoch_id, _merge)
 
     return start_file_stream(
         spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
@@ -1493,18 +1455,18 @@ def start_priority_sample_stream(
 
 
 def read_priority_estimates(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Fold the streamed per-batch priority-sample partials (union →
-    re-rank → tau-threshold estimate) through the SAME
-    ``operators/sketch.priority_estimate`` core x16 uses — batch/stream
-    parity by construction. No key-dedup on read: each source row lands
-    in exactly one drained batch (a replayed epoch OVERWRITES its own
-    partial), and the item key need not be unique — the testdata's
-    (orderkey, linenumber) pairs genuinely collide, and two distinct
-    rows sharing a key are two distinct sample items, exactly as the
-    one-pass batch sample treats them."""
+    """Tau-threshold estimate from the streamed priority sample through
+    the SAME ``operators/sketch.priority_estimate`` core x16 uses —
+    batch/stream parity by construction. No key-dedup in the merge:
+    each source row lands in exactly one drained batch (a replayed
+    epoch folds onto the same earlier snapshot), and the item key need
+    not be unique — the testdata's (orderkey, linenumber) pairs
+    genuinely collide, and two distinct rows sharing a key are two
+    distinct sample items, exactly as the one-pass batch sample treats
+    them."""
     from ..operators.sketch import priority_estimate
 
-    return priority_estimate(spark.read.parquet(state_dir))
+    return priority_estimate(read_latest(spark, state_dir))
 
 
 def stream_stream_left_outer_join(
@@ -1618,18 +1580,18 @@ def start_cms_pair_stream(
     micro-batch builds ONE count-min grid partial PER SIDE (the rows of
     each ``sides`` event type, keyed by ``key_col``) through the SAME
     ``operators/sketch.cms_build_portable`` core the batch queries use,
-    and writes it to the additive ``streaming/epochs`` store
+    and sums it into the ``streaming/epochs`` snapshot store
     ``side=<label>``.
 
     The CMS grid is ADDITIVE (bucket-wise exact int64 sums), so the
-    folded stream grid EQUALS the batch grid over the union of drained
-    rows — parity is exact equality, and the derived join-size estimate
-    and broadcast/shuffle pick (``read_join_size_estimate``) match the
-    batch x18 decision by construction. State per drained micro-batch
-    is at most ``len(sides) * depth * width`` integers regardless of
-    stream volume — the point: two KB-sized mergeable grids, built
-    where each stream lives, give the optimizer |A ⋈ B| before any
-    statistics exist."""
+    stream grid EQUALS the batch grid over the union of drained rows —
+    parity is exact equality, and the derived join-size estimate and
+    broadcast/shuffle pick (``read_join_size_estimate``) match the
+    batch x18 decision by construction. State is at most
+    ``len(sides) * depth * width`` integers regardless of stream
+    volume — the point: two KB-sized mergeable grids, built where each
+    stream lives, give the optimizer |A ⋈ B| before any statistics
+    exist."""
     from ..operators.sketch import cms_build_portable
 
     def _partial(batch_df: DataFrame, epoch_id: int) -> None:
@@ -1638,7 +1600,7 @@ def start_cms_pair_stream(
                 F.col(key_col).cast("string").alias("k")
             )
             grid = cms_build_portable(side, "k", depth, width)
-            write_epoch(grid, f"{state_dir}/side={label}", epoch_id)
+            fold_epoch(grid, f"{state_dir}/side={label}", epoch_id, sum_by("depth", "bucket"))
 
     return start_file_stream(
         spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
@@ -1648,31 +1610,17 @@ def start_cms_pair_stream(
 def read_cms_pair_state(
     spark: SparkSession, state_dir: str, side: str
 ) -> DataFrame:
-    """Fold one side's per-batch CMS partials by (depth, bucket)
-    addition — the sketch's merge — back into a single grid, exact
-    int64, equality-comparable to the batch ``cms_build_portable`` over
-    the union of that side's drained rows. A side that never drained a
-    row (no matching events yet, or every micro-batch was empty) has no
-    partials on disk — that is an EMPTY grid, not an error, so the read
-    degrades to zero rows instead of raising AnalysisException."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    try:
-        grid = spark.read.parquet(f"{state_dir}/side={side}")
-    except Exception:  # AnalysisException: PATH_NOT_FOUND -> empty grid
-        grid = spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("depth", LongType()),
-                    StructField("bucket", LongType()),
-                    StructField("cnt", LongType()),
-                ]
-            ),
-        )
-    return grid.groupBy("depth", "bucket").agg(
-        F.sum("cnt").cast("bigint").alias("cnt")
-    )
+    """One side's streamed CMS grid, exact int64, equality-comparable
+    to the batch ``cms_build_portable`` over the union of that side's
+    drained rows. A side that never drained a row (no matching events
+    yet, or every micro-batch was empty) has no snapshot on disk — that
+    is an EMPTY grid, not an error, so the read degrades to zero rows.
+    Any other read failure raises: a corrupt store must not steer a
+    join as if it were empty."""
+    grid = read_latest(spark, f"{state_dir}/side={side}")
+    if grid is None:
+        return spark.createDataFrame([], "depth bigint, bucket bigint, cnt bigint")
+    return grid
 
 
 def read_join_size_estimate(
@@ -1745,7 +1693,7 @@ def start_steered_join_stream(
     """Stream-static equi-join whose per-batch PHYSICAL strategy is
     picked from the persisted CMS pair state — the 100 TB ingest
     scenario the sketch store exists for (VERDICT r11 #6): the static
-    build side's exact row count is recovered from the folded grid
+    build side's exact row count is recovered from the stream grid
     (``read_cms_pair_state`` — KB of mergeable state written where the
     build side's ingest ran, possibly by another job), and each drained
     micro-batch plans ``probe.join(broadcast(static))`` when that count

@@ -1,10 +1,11 @@
 #!/usr/bin/env python3
 """Solo query probe (the optimization-round measurement recipe, guide
 §1): for each named query, in THIS fresh process, dump
-.explain('formatted') to plans/<tag>/<query>_<suffix>.txt and time N
-noop-sink runs with spark.catalog.clearCache() before each — printing
-every sample so cold (run 1, prices any per-process scratch-tier frame
-build) and steady (best-of-rest) are both visible.
+.explain('formatted') to plans/<tag>/<query>_<suffix>.txt, clear the
+frame tier and IVF cache, and time N noop-sink runs with
+spark.catalog.clearCache() before each — printing every sample so cold
+(run 1, prices the query's frame-tier builds) and steady (best-of-rest,
+tier reloads) are both visible.
 
 Usage:
   python tools/solo_probe.py [--tag r13] [--suffix before] [--runs 3] q1 q2 ...
@@ -21,6 +22,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from e_commerce_data_engineering_spark.frames import clear_frame_cache  # noqa: E402
+from e_commerce_data_engineering_spark.operators.similarity import clear_ivf_cache  # noqa: E402
 from e_commerce_data_engineering_spark.plans.registry import all_queries  # noqa: E402
 from e_commerce_data_engineering_spark.session import get_spark  # noqa: E402
 
@@ -64,6 +67,11 @@ def main() -> None:
             n_lines = plan.count("\n")
         else:
             n_exch = n_lines = -1
+        # building the plan for the dump already built its frame-tier
+        # entries; drop them so run 1 is cold
+        spark.catalog.clearCache()
+        clear_frame_cache()
+        clear_ivf_cache()
         samples = []
         for _ in range(args.runs):
             spark.catalog.clearCache()

@@ -4,7 +4,10 @@ VANILLA SparkSession (the driver's posture — no repo session factory)
 and compare against the DuckDB oracle, exactly like the round harness.
 
 Usage: python tools/verify_some.py [--sf /root/testdata/sf0.01] q1 q2 ...
-With no names: every oracle-backed query.
+With no names: every oracle-backed query; with --all: every registered
+query (rows-only ones are run and their row counts printed). A query or
+oracle that raises is reported and the sweep goes on. Exit code 1 on any
+mismatch or error.
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
+    ap.add_argument("--all", action="store_true", help="include rows-only queries")
     args = ap.parse_args()
 
     import duckdb
@@ -39,14 +43,19 @@ def main() -> None:
     ]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'")
     qs, orc = mod.queries(), mod.oracle_sql()
-    names = args.names or [n for n in qs if n in orc]
+    names = args.names or [n for n in qs if args.all or n in orc]
     failed = []
     for name in names:
         t0 = time.perf_counter()
-        sp = qs[name](spark, args.sf).toPandas()
+        try:
+            sp = qs[name](spark, args.sf).toPandas()
+            du = con.execute(orc[name]).fetchdf() if name in orc else None
+        except Exception as e:  # noqa: BLE001 — report and keep sweeping
+            print(f"{name}: ERROR {type(e).__name__}: {str(e)[:300]}", flush=True)
+            failed.append(name)
+            continue
         status = "rows_only"
-        if name in orc:
-            du = con.execute(orc[name]).fetchdf()
+        if du is not None:
             cols = sorted(sp.columns)
             ok = (
                 sorted(du.columns) == cols
