@@ -136,19 +136,18 @@ def pagerank(
     return out
 
 
-def triangle_counts(edges: DataFrame) -> DataFrame:
-    """Per-node triangle counts over an undirected graph given as its
-    CANONICAL edge list (columns ``u`` < ``v``, one row per edge).
+def _triangles(edges: DataFrame) -> DataFrame:
+    """Every triangle of the canonical edge list (``u`` < ``v``) exactly
+    once, as rows ``(a, b, c)`` with ``b`` < ``c``.
 
     Degree-orientation (Suri & Vassilvitskii, WWW'11): each edge is
     directed from its lower-(degree, id) endpoint, which bounds every
     node's oriented out-degree by O(sqrt(m)) — wedge generation is then
     Sum(outdeg^2), immune to the power-law hub blowup a naive
-    Sum(deg^2) plan hits. Each triangle has exactly one node with
+    Sum(deg^2) plan hits. Each triangle has exactly one node ``a`` with
     oriented out-edges to the other two, so the wedge + closing-edge
-    semi-join counts it exactly once. Everything is equi-joins and
-    aggregates (plan-asserted in tests/test_plan_shapes.py); used by
-    the g04 query and the scale harness."""
+    semi-join finds it exactly once. Everything is equi-joins and
+    aggregates (plan-asserted in tests/test_plan_shapes.py)."""
     deg = (
         edges.select(F.col("u").alias("node"))
         .union(edges.select(F.col("v").alias("node")))
@@ -175,11 +174,18 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     ).select(F.col("_s1").alias("a"), F.col("_d1").alias("b"), F.col("_d2").alias("c"))
     # wedge endpoints are id-ordered (b < c), so the closing edge is the
     # canonical (b, c) row — a two-column equi semi join
-    tri = wedges.join(
+    return wedges.join(
         edges.select(F.col("u").alias("b"), F.col("v").alias("c")), ["b", "c"], "left_semi"
     )
+
+
+def triangle_counts(edges: DataFrame) -> DataFrame:
+    """Per-node triangle counts over an undirected graph given as its
+    CANONICAL edge list (columns ``u`` < ``v``, one row per edge): each
+    triangle from ``_triangles`` credits its three nodes once."""
     return (
-        tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
+        _triangles(edges)
+        .select(F.explode(F.array("a", "b", "c")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
@@ -192,39 +198,12 @@ def edge_triangle_support(edges: DataFrame) -> DataFrame:
     (Cohen 2008). Zero-support edges are kept (left join), since the
     2-truss boundary is exactly the support-0 set.
 
-    Same degree-orientation wedge enumeration as ``triangle_counts``
-    (each triangle found exactly once), but instead of exploding the
+    Same triangle enumeration as ``triangle_counts`` (``_triangles``,
+    each triangle found exactly once), but instead of exploding the
     NODE set {a,b,c} we explode the three CANONICAL EDGES
     (min(a,b),max(a,b)), (min(a,c),max(a,c)), (b,c) and count per edge.
     All equi-joins and aggregates — no cartesian stage anywhere."""
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .union(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    du = deg.select(F.col("node").alias("_un"), F.col("d").alias("_ud"))
-    dv = deg.select(F.col("node").alias("_vn"), F.col("d").alias("_vd"))
-    u_first = (F.col("_ud") < F.col("_vd")) | (
-        (F.col("_ud") == F.col("_vd")) & (F.col("u") < F.col("v"))
-    )
-    ori = (
-        edges.join(du, edges["u"] == du["_un"])
-        .join(dv, edges["v"] == dv["_vn"])
-        .select(
-            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-        )
-    )
-    e1 = ori.select(F.col("src").alias("_s1"), F.col("dst").alias("_d1"))
-    e2 = ori.select(F.col("src").alias("_s2"), F.col("dst").alias("_d2"))
-    wedges = e1.join(
-        e2, (F.col("_s1") == F.col("_s2")) & (F.col("_d1") < F.col("_d2"))
-    ).select(F.col("_s1").alias("a"), F.col("_d1").alias("b"), F.col("_d2").alias("c"))
-    tri = wedges.join(
-        edges.select(F.col("u").alias("b"), F.col("v").alias("c")), ["b", "c"], "left_semi"
-    )
-    tri_edges = tri.select(
+    tri_edges = _triangles(edges).select(
         F.explode(
             F.array(
                 F.struct(

@@ -103,6 +103,31 @@ def compact_files(
     return n_files
 
 
+def _keep_latest(
+    current: DataFrame | None,
+    updates: DataFrame,
+    key_col: str,
+    version_col: str,
+    allow_missing_columns: bool = False,
+) -> DataFrame:
+    """The keep-latest-by-key merge both upserts publish: ``current``
+    (None: no table yet) unioned with ``updates``, one row per key with
+    the highest ``version_col``, updates winning ties via a source rank."""
+    from pyspark.sql import Window as W
+
+    if current is None:
+        current = updates.limit(0)
+    merged = current.withColumn("_src", F.lit(0)).unionByName(
+        updates.withColumn("_src", F.lit(1)), allowMissingColumns=allow_missing_columns
+    )
+    w = W.partitionBy(key_col).orderBy(F.col(version_col).desc(), F.col("_src").desc())
+    return (
+        merged.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "_src")
+    )
+
+
 def upsert_parquet(
     spark: SparkSession,
     target_dir: str,
@@ -124,25 +149,19 @@ def upsert_parquet(
     At 100 TB scale this is the compaction-style merge job you run per
     partition. One shuffle on the key; the window is partial-
     aggregation friendly. Returns the row count of the merged table.
-    """
-    from pyspark.sql import Window as W
 
-    jPath = spark._jvm.org.apache.hadoop.fs.Path
+    A call that finds no target but a ``<target>__old`` (a crash between
+    the two renames) first renames ``__old`` back, so the merge never
+    starts from an empty table while the previous one is on disk.
+    """
+    fs, jPath = _fs(spark, target_dir)
     fs_path = jPath(target_dir)
-    fs = fs_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(fs_path):
-        current = spark.read.parquet(target_dir).withColumn("_src", F.lit(0))
-    else:
-        current = updates.limit(0).withColumn("_src", F.lit(0))
-    merged = current.unionByName(updates.withColumn("_src", F.lit(1)))
-    w = W.partitionBy(key_col).orderBy(F.col(version_col).desc(), F.col("_src").desc())
-    latest = (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src")
-    )
     staging = target_dir.rstrip("/") + "__staging"
     old = target_dir.rstrip("/") + "__old"
+    if not fs.exists(fs_path) and fs.exists(jPath(old)):
+        fs.rename(jPath(old), fs_path)
+    current = spark.read.parquet(target_dir) if fs.exists(fs_path) else None
+    latest = _keep_latest(current, updates, key_col, version_col)
     # observe(): row count comes out of the single write pass — no
     # second read-back scan just to count.
     from pyspark.sql import Observation
@@ -431,21 +450,11 @@ def snapshot_upsert(
     version), so time travel into a pre-evolution version reads the
     pre-evolution schema — exactly Delta's behavior. Type CHANGES are
     not evolution (union still raises on incompatible types)."""
-    from pyspark.sql import Window as W
-
     try:
-        current = snapshot_read(spark, table_dir).withColumn("_src", F.lit(0))
+        current = snapshot_read(spark, table_dir)
     except ValueError:
-        current = updates.limit(0).withColumn("_src", F.lit(0))
-    merged = current.unionByName(
-        updates.withColumn("_src", F.lit(1)), allowMissingColumns=evolve_schema
-    )
-    w = W.partitionBy(key_col).orderBy(F.col(version_col).desc(), F.col("_src").desc())
-    latest = (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src")
-    )
+        current = None
+    latest = _keep_latest(current, updates, key_col, version_col, evolve_schema)
     return snapshot_commit(spark, latest, table_dir)
 
 

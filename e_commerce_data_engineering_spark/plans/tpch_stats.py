@@ -2434,10 +2434,15 @@ def q117_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).cast("bigint").alias("o"))
     rt = cells.groupBy("pri").agg(F.sum("o").cast("bigint").alias("rt"))
     ct = cells.groupBy("st").agg(F.sum("o").cast("bigint").alias("ct"))
-    tot = cells.agg(
-        F.sum("o").cast("bigint").alias("n"),
-        F.count_distinct("pri").cast("bigint").alias("r"),
-        F.count_distinct("st").cast("bigint").alias("k"),
+    # r and k count the margins' rows (one per distinct value; count()
+    # skips a NULL group as COUNT(DISTINCT) does) instead of two
+    # distinct aggregates, whose Expand lists its groups in an order
+    # Spark takes from hashing expression ids, so the plan text varied
+    # from run to run
+    tot = (
+        cells.agg(F.sum("o").cast("bigint").alias("n"))
+        .crossJoin(F.broadcast(rt.agg(F.count("pri").alias("r"))))
+        .crossJoin(F.broadcast(ct.agg(F.count("st").alias("k"))))
     )
     dec = "decimal(38,0)"
     num = (

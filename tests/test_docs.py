@@ -49,3 +49,30 @@ def test_survey_explains_count_current():
     assert int(claims[-1]) == n_sections, (
         f"SURVEY claims {claims[-1]} EXPLAINS sections, file has {n_sections}"
     )
+
+
+def test_explain_normalizer_renumbers_run_dependent_tokens():
+    """EXPLAINS.md must be byte-stable across regenerations: expression
+    ids, exchange plan ids and frame-tier scratch paths differ per run,
+    so the audit tool renumbers each kind by first appearance."""
+    import sys
+
+    tools = str(README.parent / "tools")
+    if tools not in sys.path:
+        sys.path.insert(0, tools)
+    from explain_audit import normalize_plan
+
+    def plan(a, b, pid, tmp, md5):
+        return (
+            f"(1) Scan parquet [k#{a}L, v#{b}]\n"
+            f"Location: InMemoryFileIndex [file:{tmp}/spark_graft_frames_x/{md5}]\n"
+            f"(2) Exchange hashpartitioning(k#{a}L, 4), [plan_id={pid}]\n"
+        )
+
+    one = normalize_plan(plan(6840, 12, 15, "/var/tmp", "0" * 32))
+    assert one == normalize_plan(plan(31, 7, 1180, "/scratch/run_9Zq", "f" * 32))
+    assert one == (
+        "(1) Scan parquet [k#1L, v#2]\n"
+        "Location: InMemoryFileIndex [file:<frame tier>/1]\n"
+        "(2) Exchange hashpartitioning(k#1L, 4), [plan_id=1]\n"
+    )

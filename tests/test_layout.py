@@ -112,6 +112,28 @@ def test_upsert_parquet_keeps_latest(spark, tmp_path):
     assert got == {(1, 1, "a"), (2, 5, "b2"), (3, 1, "c2"), (4, 1, "d")}
 
 
+def test_upsert_parquet_recovers_interrupted_swap(spark, tmp_path):
+    """A crash between the swap's two renames leaves the previous table
+    only at ``<target>__old`` (and the merged one at ``__staging``); the
+    next upsert must merge onto that table, not onto an empty one."""
+    import os
+
+    from e_commerce_data_engineering_spark.operators.layout import upsert_parquet
+
+    tgt = str(tmp_path / "tbl")
+    base = spark.createDataFrame(
+        [(1, 1, "a"), (2, 1, "b"), (3, 1, "c")], "k long, ver long, val string"
+    )
+    upsert_parquet(spark, tgt, base, "k", "ver")
+    base.write.parquet(tgt + "__staging")
+    os.rename(tgt, tgt + "__old")
+    upd = spark.createDataFrame([(2, 5, "b2")], "k long, ver long, val string")
+    assert upsert_parquet(spark, tgt, upd, "k", "ver") == 3
+    got = {(r["k"], r["ver"], r["val"]) for r in spark.read.parquet(tgt).collect()}
+    assert got == {(1, 1, "a"), (2, 5, "b2"), (3, 1, "c")}
+    assert not os.path.exists(tgt + "__old")
+
+
 def test_schema_evolution_merge_read(spark, tmp_path):
     """Lake reality: later batches add columns. mergeSchema reconciles
     the union schema and older files read the new column as null —

@@ -3,11 +3,15 @@
 EXPLAINS.md — the .explain("formatted") audit trail behind the
 plan-shape tests: pushed filters, broadcast placements, partial
 aggregates, TakeOrderedAndProject, and the absence of cartesian
-products are all visible in one file without running anything."""
+products are all visible in one file without running anything.
+
+Every plan goes through ``normalize_plan``, so a regeneration rewrites
+only the sections whose plans changed."""
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -212,8 +216,45 @@ AUDIT = [
 ]
 
 
+# Run-dependent plan tokens: Spark's expression ids (``l_orderkey#8L``),
+# exchange ids (``[plan_id=15]``) and the frame tier's per-process
+# scratch entries (``<tempdir>/spark_graft_frames_<random>/<md5 of a key
+# holding the application id>``).
+_VOLATILE = (
+    (re.compile(r"#(\d+)"), "#{}"),
+    (re.compile(r"plan_id=(\d+)"), "plan_id={}"),
+    (re.compile(r"/\S*?spark_graft_frames_[^/\s]+/([0-9a-f]{32})"), "<frame tier>/{}"),
+)
+
+
+def normalize_plan(plan: str) -> str:
+    """Renumber each run-dependent token kind 1, 2, ... in order of
+    first appearance, so equal plans print equal text in every run and
+    references between nodes still line up."""
+    for pattern, fmt in _VOLATILE:
+        ids: dict[str, int] = {}
+        plan = pattern.sub(lambda m: fmt.format(ids.setdefault(m.group(1), len(ids) + 1)), plan)
+    return plan
+
+
+def _plan_lines(df, max_node: int) -> list[str]:
+    """The normalized formatted plan: the tree plus the details of
+    nodes up to ``max_node``, then a truncation note."""
+    plan = df._jdf.queryExecution().explainString(
+        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    lines = normalize_plan(plan).splitlines()
+    for i, l in enumerate(lines):
+        if i > 0 and l.startswith("(") and int(l.split(")")[0][1:] or 0) > max_node:
+            lines = lines[:i]
+            break
+    return lines + ["… (details truncated; run the tool for the full dump)"]
+
+
 def main() -> None:
-    spark = get_spark(app_name="explain-audit")
+    # fixed parallelism: every Exchange prints its partition count, which
+    # must not follow the machine's SPARK_GRAFT_CPUS
+    spark = get_spark(app_name="explain-audit", cpus=4)
     spark.sparkContext.setLogLevel("ERROR")
     qs = all_queries()
     out = [
@@ -224,19 +265,8 @@ def main() -> None:
         "",
     ]
     for name, why in AUDIT:
-        df = qs[name](spark, SF)
-        plan = df._jdf.queryExecution().explainString(
-            df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        # keep the tree + the scan/filter details; cap the detail dump
-        lines = plan.splitlines()
-        cut = len(lines)
-        for i, l in enumerate(lines):
-            if i > 0 and l.startswith("(") and int(l.split(")")[0][1:] or 0) > 12:
-                cut = i
-                break
         out += [f"## {name}", "", f"_{why} ({QUERIES[name].doc[:120]}...)_", "", "```"]
-        out += lines[:cut] + ["… (details truncated; run the tool for the full dump)", "```", ""]
+        out += _plan_lines(qs[name](spark, SF), 12) + ["```", ""]
 
     # cms_steered_join (operators/sketch.py): BOTH physical shapes under a
     # statistics-free planner (auto-broadcast off — the scenario the sketch
@@ -261,15 +291,6 @@ def main() -> None:
         ("shuffle (sketch count over threshold)", n_build * 128 - 1),
     ):
         df = cms_steered_join(cust, nation, "n_nationkey", threshold_bytes=thresh)
-        plan = df._jdf.queryExecution().explainString(
-            df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        lines = plan.splitlines()
-        cut = len(lines)
-        for i, l in enumerate(lines):
-            if i > 0 and l.startswith("(") and int(l.split(")")[0][1:] or 0) > 8:
-                cut = i
-                break
         out += [
             f"## cms_steered_join — {label}",
             "",
@@ -279,7 +300,7 @@ def main() -> None:
             "",
             "```",
         ]
-        out += lines[:cut] + ["… (details truncated; run the tool for the full dump)", "```", ""]
+        out += _plan_lines(df, 8) + ["```", ""]
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.unset("spark.sql.adaptive.enabled")
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "EXPLAINS.md"), "w") as f:

@@ -22,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from e_commerce_data_engineering_spark.frames import clear_frame_cache  # noqa: E402
 from e_commerce_data_engineering_spark.operators.similarity import clear_ivf_cache  # noqa: E402
 from e_commerce_data_engineering_spark.plans.registry import all_queries  # noqa: E402
@@ -45,9 +46,7 @@ def main() -> None:
     spark = get_spark(app_name=f"solo-{args.names[0]}")
     queries = all_queries()
     # same warm-up the bench uses: JVM, codegen, parquet footers
-    queries["q06_mktsegment_revenue"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    bench.materialize(queries["q06_mktsegment_revenue"](spark, sf_dir))
 
     results = {}
     for name in args.names:
@@ -76,7 +75,7 @@ def main() -> None:
         for _ in range(args.runs):
             spark.catalog.clearCache()
             t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            bench.materialize(fn(spark, sf_dir))
             samples.append(round(time.perf_counter() - t0, 3))
         results[name] = {
             "samples": samples,
