@@ -5,9 +5,11 @@ validation gate (functions/validate.py) which the reference applies
 first (processor:123-126).
 
 Everything is Catalyst higher-order functions over the ``items`` array:
-no shuffle, no UDF, stays in whole-stage codegen. Money rounding is
-``F.bround`` = Python banker's ``round`` (SURVEY §7.4-1) — this module
-is bit-for-bit parity-tested against the reference implementation.
+no shuffle, no UDF. Higher-order functions have no generated code, so
+the projection that holds them runs outside whole-stage codegen and
+evaluates them interpreted. Every reference ``round(x, 2)`` goes through ``rounding.round2``, Python's
+rounding as one Catalyst expression, so this module is bit-for-bit
+parity-tested against the reference implementation.
 """
 
 from __future__ import annotations
@@ -16,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import scalar
-from .rounding import python_round2
+from .rounding import round2
 
 
 def _items() -> Column:
@@ -25,18 +27,17 @@ def _items() -> Column:
 
 def profit_analysis(items: Column) -> Column:
     """processor:38-48 (A2): cost=Σ price·0.6·qty, revenue=Σ subtotal,
-    margin% with div-0 guard, all banker's-rounded to 2dp."""
+    margin% with div-0 guard, all rounded to 2dp."""
     cost = F.aggregate(
         items, F.lit(0.0), lambda a, x: a + x["unit_price"] * 0.6 * x["quantity"]
     )
     revenue = F.aggregate(items, F.lit(0.0), lambda a, x: a + x["subtotal"])
     profit = revenue - cost
-    margin = F.when(revenue > 0, F.bround(profit / revenue * 100, 2)).otherwise(F.lit(0.0))
     return F.struct(
-        F.bround(cost, 2).alias("estimated_cost"),
-        F.bround(revenue, 2).alias("revenue"),
-        F.bround(profit, 2).alias("profit"),
-        margin.alias("margin_percentage"),
+        round2(cost).alias("estimated_cost"),
+        round2(revenue).alias("revenue"),
+        round2(profit).alias("profit"),
+        scalar.ratio_pct_guarded(profit, revenue).alias("margin_percentage"),
     )
 
 
@@ -47,15 +48,14 @@ def discount_pattern(items: Column) -> Column:
     n_disc = F.size(disc)
     avg_pct = F.when(
         n_disc > 0,
-        F.bround(
+        round2(
             F.aggregate(disc, F.lit(0), lambda a, x: a + x["discount_percentage"]).cast("double")
-            / n_disc,
-            2,
+            / n_disc
         ),
     ).otherwise(F.lit(0.0))
     savings = F.when(
         n_disc > 0,
-        F.bround(F.aggregate(items, F.lit(0.0), lambda a, x: a + x["discount_amount"]), 2),
+        F.aggregate(items, F.lit(0.0), lambda a, x: a + x["discount_amount"], round2),
     ).otherwise(F.lit(0.0))
     return F.struct(
         (n_disc > 0).alias("uses_discounts"),
@@ -79,26 +79,20 @@ def product_mix(items: Column) -> Column:
             F.struct(
                 F.size(sub).alias("count"),
                 F.aggregate(sub, F.lit(0), lambda a, x: a + x["quantity"]).alias("quantity"),
-                F.bround(
-                    F.aggregate(sub, F.lit(0.0), lambda a, x: a + x["subtotal"]), 2
-                ).alias("revenue"),
+                F.aggregate(sub, F.lit(0.0), lambda a, x: a + x["subtotal"], round2).alias(
+                    "revenue"
+                ),
             ).alias("value"),
         )
 
     return F.map_from_entries(F.transform(cats, _entry))
 
 
-def enrich_columns(order_ts: Column, exact_rounding: bool = True) -> list[Column]:
+def enrich_columns(order_ts: Column) -> list[Column]:
     """The full 29-column projection (processor:130-161). ``order_ts``
     is the parsed order_date timestamp (processor:128 re-parses the
     ISO string; we take it as an argument so batch and streaming share
-    the expression).
-
-    ``exact_rounding`` controls the two row-level division roundings
-    (average_item_value, discount_rate): True = Python-exact via Arrow
-    UDF (reference parity), False = pure-codegen bround (fastest; may
-    differ by one cent on half-cent representation ties).
-    """
+    the expression)."""
     items = _items()
     return [
         F.col("order_id"),
@@ -126,15 +120,10 @@ def enrich_columns(order_ts: Column, exact_rounding: bool = True) -> list[Column
         profit_analysis(items).alias("profit_analysis"),
         discount_pattern(items).alias("discount_pattern"),
         product_mix(items).alias("product_mix"),
-        python_round2(F.col("subtotal") / F.col("num_items"), exact_rounding).alias(
-            "average_item_value"
+        round2(F.col("subtotal") / F.col("num_items")).alias("average_item_value"),
+        scalar.ratio_pct_guarded(F.col("total_discount"), F.col("subtotal")).alias(
+            "discount_rate"
         ),
-        F.when(
-            F.col("subtotal") > 0,
-            python_round2(F.col("total_discount") / F.col("subtotal") * 100, exact_rounding),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("discount_rate"),
         F.coalesce(F.col("tax_rate"), F.lit(0.0)).alias("tax_rate_applied"),
         F.hour(order_ts).alias("order_hour"),
         scalar.day_name_english(order_ts).alias("order_day_of_week"),
@@ -146,7 +135,7 @@ def enrich_columns(order_ts: Column, exact_rounding: bool = True) -> list[Column
     ]
 
 
-def enrich(valid_orders: DataFrame, exact_rounding: bool = True) -> DataFrame:
+def enrich(valid_orders: DataFrame) -> DataFrame:
     """Apply the enrichment to a validated raw-order DataFrame.
 
     order_date strings carry an explicit offset (…+00:00), so
@@ -155,4 +144,4 @@ def enrich(valid_orders: DataFrame, exact_rounding: bool = True) -> DataFrame:
     ``fromisoformat`` (UTC fields). Run with session tz UTC for parity.
     """
     order_ts = F.to_timestamp(F.regexp_replace(F.col("order_date"), "Z$", "+00:00"))
-    return valid_orders.select(*enrich_columns(order_ts, exact_rounding))
+    return valid_orders.select(*enrich_columns(order_ts))

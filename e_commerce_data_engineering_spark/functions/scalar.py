@@ -3,8 +3,9 @@
 so every classification stays inside whole-stage codegen.
 
 Each builder takes Columns and returns a Column, so the same semantics
-serve both the order-enrichment pipeline (reference parity, which uses
-``F.bround`` = Python banker's rounding) and the analytics surface.
+serve both the order-enrichment pipeline (reference parity: money goes
+through ``rounding.round2``, Python's ``round(x, 2)``) and the analytics
+surface.
 
 Reference cites: /root/reference/ecommerce-order-processor.py (classify
 thresholds :14-26, segments :29-35, priority :88-102) and
@@ -16,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .rounding import round2
 
 # Thresholds from ecommerce-order-processor.py:14-15
 VIP_QUANTITY_THRESHOLD = 10
@@ -70,16 +73,14 @@ def shipping_cost(subtotal: Column, city: Column) -> Column:
 
 
 def tax_amount(subtotal: Column, shipping: Column, rate: float = 0.20) -> Column:
-    """(subtotal+shipping)·rate, banker's-rounded — generator:83-84 (F14)."""
-    return F.bround((subtotal + shipping) * rate, 2)
+    """round((subtotal+shipping)·rate, 2) — generator:83-84 (F14)."""
+    return round2((subtotal + shipping) * rate)
 
 
-def ratio_pct_guarded(num: Column, den: Column, ndigits: int = 2) -> Column:
-    """num/den·100 with zero-denominator guard — processor:153-154,42 (F10).
-
-    Uses bround (banker's) to match Python ``round`` bit-for-bit.
-    """
-    return F.when(den > 0, F.bround(num / den * 100, ndigits)).otherwise(F.lit(0.0))
+def ratio_pct_guarded(num: Column, den: Column) -> Column:
+    """round(num/den·100, 2) with zero-denominator guard —
+    processor:153-154,42 (F10)."""
+    return F.when(den > 0, round2(num / den * 100)).otherwise(F.lit(0.0))
 
 
 def is_weekend(ts: Column) -> Column:

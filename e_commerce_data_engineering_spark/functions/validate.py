@@ -5,6 +5,11 @@ The reference logs & drops invalid rows (no DLQ; its README.md:68
 recommends one). We upgrade to a quarantine split: the invalid side
 keeps the rows plus an ``errors array<string>`` column with the
 reference's own (French) messages, so nothing is silently lost.
+
+One rule is ours: ``num_items`` must be a positive count, because the
+enrichment divides by it (``average_item_value``). Under ANSI mode a
+zero raises DIVIDE_BY_ZERO, which would abort the whole write (and, in
+the stream, fail the same epoch again on every restart).
 """
 
 from __future__ import annotations
@@ -18,10 +23,12 @@ ERR_TOTAL = "Montant total invalide"  # processor:109
 ERR_ORDER_ID = "ID commande manquant"  # processor:111
 ERR_NO_ITEMS = "Aucun article"  # processor:113
 ERR_SUBTOTAL = "Sous-total incohérent"  # processor:117
+ERR_NUM_ITEMS = "Nombre d'articles invalide"  # divisor of average_item_value
 
 
 def error_array() -> Column:
-    """Per-rule F.when → array_compact, mirroring processor:106-117."""
+    """Per-rule F.when → array_compact, mirroring processor:106-117
+    plus the ``num_items`` rule."""
     items_sum = F.aggregate(
         F.coalesce(F.col("items"), F.array()), F.lit(0.0), lambda a, x: a + x["subtotal"]
     )
@@ -31,6 +38,7 @@ def error_array() -> Column:
             F.col("order_id").isNull() | (F.length("order_id") == 0), F.lit(ERR_ORDER_ID)
         ),
         F.when(F.col("items").isNull() | (F.size("items") == 0), F.lit(ERR_NO_ITEMS)),
+        F.when(F.coalesce(F.col("num_items"), F.lit(0)) <= 0, F.lit(ERR_NUM_ITEMS)),
         F.when(
             F.abs(items_sum - F.coalesce(F.col("subtotal"), F.lit(0.0))) > SUBTOTAL_TOLERANCE,
             F.lit(ERR_SUBTOTAL),

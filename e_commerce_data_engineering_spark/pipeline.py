@@ -20,7 +20,7 @@ from __future__ import annotations
 import datetime as _dt
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.enrich import enrich
@@ -28,14 +28,19 @@ from .functions.validate import split_valid
 from .schemas import RAW_ORDER_SCHEMA_PERMISSIVE
 
 
-def read_raw_jsonl(spark: SparkSession, path: str) -> DataFrame:
-    """Permissive schema-on-read with corrupt-line capture (S2)."""
+def _permissive_json(reader):
+    """Raw-order schema-on-read with corrupt-line capture (S2), for a
+    batch ``DataFrameReader`` or a streaming ``DataStreamReader``."""
     return (
-        spark.read.schema(RAW_ORDER_SCHEMA_PERMISSIVE)
+        reader.schema(RAW_ORDER_SCHEMA_PERMISSIVE)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
     )
+
+
+def read_raw_jsonl(spark: SparkSession, path: str) -> DataFrame:
+    """Permissive schema-on-read with corrupt-line capture (S2)."""
+    return _permissive_json(spark.read).json(path)
 
 
 def with_processing_partitions(df: DataFrame, now: _dt.datetime | None = None) -> DataFrame:
@@ -45,6 +50,43 @@ def with_processing_partitions(df: DataFrame, now: _dt.datetime | None = None) -
         df.withColumn("year", F.lit(now.strftime("%Y")))
         .withColumn("month", F.lit(now.strftime("%m")))
         .withColumn("day", F.lit(now.strftime("%d")))
+    )
+
+
+def _write_outputs(
+    processed: DataFrame,
+    invalid: DataFrame,
+    out_dir: str | None,
+    quarantine_dir: str | None,
+    output_format: str,
+    now: _dt.datetime | None = None,
+) -> tuple[int | None, int | None]:
+    """Append the processed rows to ``out_dir`` and the quarantined
+    ones (``errors`` as a JSON string) to ``quarantine_dir``, each
+    partitioned by processing date; a missing directory is skipped.
+    → rows written to each (None where skipped). The counts ride along
+    with the write as an observation instead of re-scanning afterwards
+    (A6 metrics; the reference's processed/rejected counters,
+    processor:184-194) — at 100 TB a metrics ``.count()`` is a full
+    extra pass."""
+
+    def append(df: DataFrame, path: str | None) -> int | None:
+        if not path:
+            return None
+        obs = Observation()
+        (
+            with_processing_partitions(df, now)
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+            .write.mode("append")
+            .partitionBy("year", "month", "day")
+            .format(output_format)
+            .save(path)
+        )
+        return obs.get["n"]
+
+    return (
+        append(processed, out_dir),
+        append(invalid.withColumn("errors", F.to_json("errors")), quarantine_dir),
     )
 
 
@@ -85,51 +127,17 @@ def run_batch(
     """Full reference-equivalent run. ``output_format='parquet'`` is the
     columnar upgrade for the analytics surface (json = byte-level
     reference parity)."""
-    from pyspark.sql import Observation
-
     raw = read_raw_jsonl(spark, in_path)
     processed, invalid, corrupt = process_raw(raw)
-
-    # observe(): row counters ride along with the write action instead
-    # of re-scanning afterwards (A6 metrics; the reference's processed/
-    # rejected counters, processor:184-194). At 100 TB a metrics
-    # .count() is a full extra pass — observation is free.
-    out_path = quarantine_path = None
-    if out_dir:
-        out_path = out_dir
-        obs_p = Observation()
-        (
-            with_processing_partitions(processed, now)
-            .observe(obs_p, F.count(F.lit(1)).alias("n"))
-            .write.mode("append")
-            .partitionBy("year", "month", "day")
-            .format(output_format)
-            .save(out_dir)
-        )
-        n_processed = obs_p.get["n"]
-    else:
-        n_processed = processed.count()
-    if quarantine_dir:
-        quarantine_path = quarantine_dir
-        obs_q = Observation()
-        (
-            with_processing_partitions(invalid.withColumn("errors", F.to_json("errors")), now)
-            .observe(obs_q, F.count(F.lit(1)).alias("n"))
-            .write.mode("append")
-            .partitionBy("year", "month", "day")
-            .format(output_format)
-            .save(quarantine_dir)
-        )
-        n_invalid = obs_q.get["n"]
-    else:
-        n_invalid = invalid.count()
-    n_corrupt = corrupt.count()
-    raw.unpersist()  # process_raw's parse cache; every count is taken
-
-    return BatchResult(
-        total_processed=n_processed,
-        invalid_orders=n_invalid,
-        corrupt_lines=n_corrupt,
-        output_path=out_path,
-        quarantine_path=quarantine_path,
+    n_processed, n_invalid = _write_outputs(
+        processed, invalid, out_dir, quarantine_dir, output_format, now
     )
+    result = BatchResult(
+        total_processed=processed.count() if n_processed is None else n_processed,
+        invalid_orders=invalid.count() if n_invalid is None else n_invalid,
+        corrupt_lines=corrupt.count(),
+        output_path=out_dir or None,
+        quarantine_path=quarantine_dir or None,
+    )
+    raw.unpersist()  # process_raw's parse cache; every count is taken
+    return result

@@ -345,7 +345,7 @@ def p01_generate_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     now = dt.datetime(2026, 8, 13, 12, 0, 0, tzinfo=dt.timezone.utc)
     raw = generate_orders(spark, 2000, seed=123, now=now)
     valid, _invalid = split_valid(raw)
-    enriched = enrich(valid, exact_rounding=False)  # pure-codegen path
+    enriched = enrich(valid)
     return enriched.groupBy("order_value_class", "customer_segment", "delivery_priority").agg(
         F.count("*").alias("n"),
         F.round(F.sum("total_amount"), 2).alias("revenue"),

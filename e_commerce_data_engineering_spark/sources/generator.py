@@ -15,7 +15,8 @@ matching its distributions exactly:
   from the 6-product catalog (generator:51) via hash-priority sort,
 * quantity 1-2 @ .8/.2 (generator:54),
 * discount {0,5,10} applied with p=0.2 (generator:55),
-* money math = round(..., 2) → F.bround (banker's, generator:57,65-66),
+* money math = round(..., 2) → ``round2``, Python's own rounding
+  (generator:57,65-66),
 * shipping/tax/total (generator:70-74,83-85),
 * status/payment weighted draws (generator:86-87),
 * order_date = now − randint(0,7) days (generator:88).
@@ -29,7 +30,8 @@ import string
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.scalar import shipping_cost
+from ..functions import scalar
+from ..functions.rounding import round2
 from .catalog import (
     CITIES,
     EMAIL_DOMAINS,
@@ -130,15 +132,13 @@ def generate_orders(
     selected = F.slice(F.array_sort(prioritized), 1, num_items)
 
     def _mk_item(p: Column) -> Column:
-        uq = F.pmod(F.xxhash64(F.lit(seed), F.lit("qty"), oid, p["product_id"]), F.lit(_HASH_RANGE)).cast("double") / _HASH_RANGE
-        ua = F.pmod(F.xxhash64(F.lit(seed), F.lit("dap"), oid, p["product_id"]), F.lit(_HASH_RANGE)).cast("double") / _HASH_RANGE
         uc = F.pmod(F.xxhash64(F.lit(seed), F.lit("dch"), oid, p["product_id"]), F.lit(3))
-        quantity = F.when(uq < 0.8, F.lit(1)).otherwise(F.lit(2))
+        quantity = F.when(_u(seed, "qty", oid, p["product_id"]) < 0.8, F.lit(1)).otherwise(F.lit(2))
         pct = F.when(
-            ua < 0.2,
+            _u(seed, "dap", oid, p["product_id"]) < 0.2,
             F.when(uc == 0, 0).when(uc == 1, 5).otherwise(10),
         ).otherwise(F.lit(0))
-        disc_unit = F.bround(p["unit_price"] * (pct.cast("double") / 100), 2)
+        disc_unit = round2(p["unit_price"] * (pct.cast("double") / 100))
         return F.struct(
             p["product_id"].alias("product_id"),
             p["product_name"].alias("product_name"),
@@ -146,19 +146,21 @@ def generate_orders(
             quantity.cast("int").alias("quantity"),
             p["unit_price"].alias("unit_price"),
             pct.cast("int").alias("discount_percentage"),
-            F.bround(disc_unit * quantity, 2).alias("discount_amount"),
-            F.bround((p["unit_price"] - disc_unit) * quantity, 2).alias("subtotal"),
+            round2(disc_unit * quantity).alias("discount_amount"),
+            round2((p["unit_price"] - disc_unit) * quantity).alias("subtotal"),
         )
 
-    items = F.transform(selected, _mk_item)
+    # a column of its own, so that the sums below read it instead of
+    # each re-running the per-item draws
+    base = base.withColumn("items", F.transform(selected, _mk_item))
 
     # --- order-level money math (generator:79-85, A1/F13/F14) ----------
-    subtotal = F.aggregate(items, F.lit(0.0), lambda a, x: a + x["subtotal"])
-    total_discount = F.aggregate(items, F.lit(0.0), lambda a, x: a + x["discount_amount"])
+    subtotal = F.aggregate("items", F.lit(0.0), lambda a, x: a + x["subtotal"])
+    total_discount = F.aggregate("items", F.lit(0.0), lambda a, x: a + x["discount_amount"])
     city = _weighted(_u(seed, "city", oid), CITIES, [0.2] * 5)
-    shipping = shipping_cost(subtotal, city)
-    tax_amount = F.bround((subtotal + shipping) * 0.20, 2)
-    total_amount = F.bround(subtotal + shipping + tax_amount, 2)
+    shipping = scalar.shipping_cost(subtotal, city)
+    tax_amount = scalar.tax_amount(subtotal, shipping)
+    total_amount = round2(subtotal + shipping + tax_amount)
 
     # --- temporal (generator:88,91,106, F20) ---------------------------
     jitter_days = F.floor(_u(seed, "day", oid) * 8).cast("int")  # randint(0,7)
@@ -171,9 +173,9 @@ def generate_orders(
         customer_id.alias("customer_id"),
         customer_email.alias("customer_email"),
         city.alias("customer_city"),
-        items.alias("items"),
-        F.size(items).alias("num_items"),
-        F.aggregate(items, F.lit(0), lambda a, x: a + x["quantity"]).alias("total_quantity"),
+        "items",
+        F.size("items").alias("num_items"),
+        F.aggregate("items", F.lit(0), lambda a, x: a + x["quantity"]).alias("total_quantity"),
         subtotal.alias("subtotal"),
         total_discount.alias("total_discount"),
         shipping.alias("shipping_cost"),
@@ -191,6 +193,6 @@ def batch_stats(orders: DataFrame) -> DataFrame:
     (generator:116-121, A5)."""
     return orders.agg(
         F.count("*").alias("total_orders"),
-        F.bround(F.sum("total_amount"), 2).alias("total_revenue"),
-        F.bround(F.sum("total_amount") / F.count("*"), 2).alias("average_order_value"),
+        round2(F.sum("total_amount")).alias("total_revenue"),
+        round2(F.sum("total_amount") / F.count("*")).alias("average_order_value"),
     )

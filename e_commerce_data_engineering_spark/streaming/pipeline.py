@@ -22,21 +22,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 from pyspark.sql.streaming import StreamingQuery
 
-from ..pipeline import process_raw, with_processing_partitions
-from ..schemas import RAW_ORDER_SCHEMA_PERMISSIVE
+from ..pipeline import _permissive_json, _write_outputs, process_raw
 from .epochs import fold_epoch, read_latest, start_file_stream, sum_by, write_epoch
 
 
-def read_raw_stream(spark: SparkSession, raw_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
+def read_raw_stream(spark: SparkSession, raw_dir: str) -> DataFrame:
     """File-source stream over the raw/ prefix (SURVEY §2.1 S3)."""
-    reader = (
-        spark.readStream.schema(RAW_ORDER_SCHEMA_PERMISSIVE)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(raw_dir)
+    return _permissive_json(spark.readStream).json(raw_dir)
 
 
 def start_processing_stream(
@@ -60,22 +52,8 @@ def start_processing_stream(
     )
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        processed, invalid, corrupt = process_raw(batch_df)
-        (
-            with_processing_partitions(processed)
-            .write.mode("append")
-            .partitionBy("year", "month", "day")
-            .format(output_format)
-            .save(out_dir)
-        )
-        if quarantine_dir is not None:
-            (
-                with_processing_partitions(invalid.withColumn("errors", F.to_json("errors")))
-                .write.mode("append")
-                .partitionBy("year", "month", "day")
-                .format(output_format)
-                .save(quarantine_dir)
-            )
+        processed, invalid, _corrupt = process_raw(batch_df)
+        _write_outputs(processed, invalid, out_dir, quarantine_dir, output_format)
         batch_df.unpersist()
 
     writer = stream.writeStream.foreachBatch(_sink).option("checkpointLocation", checkpoint_dir)

@@ -7,6 +7,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
+from e_commerce_data_engineering_spark.functions.rounding import round2
 from e_commerce_data_engineering_spark.sources.generator import batch_stats, generate_orders
 
 NOW = dt.datetime(2026, 8, 10, 12, 0, 0, tzinfo=dt.timezone.utc)
@@ -31,12 +32,12 @@ def test_seed_changes_data(spark):
 
 
 def test_money_invariants(spark):
-    """total = bround(subtotal+shipping+tax, 2); tax = bround((subtotal+
+    """total = round(subtotal+shipping+tax, 2); tax = round((subtotal+
     shipping)·0.2, 2); Σ items.subtotal == subtotal (generator:79-85)."""
     df = generate_orders(spark, 400, seed=42, now=NOW)
     bad = df.filter(
-        (F.abs(F.col("total_amount") - F.bround(F.col("subtotal") + F.col("shipping_cost") + F.col("tax_amount"), 2)) > 1e-9)
-        | (F.abs(F.col("tax_amount") - F.bround((F.col("subtotal") + F.col("shipping_cost")) * 0.2, 2)) > 1e-9)
+        (F.abs(F.col("total_amount") - round2(F.col("subtotal") + F.col("shipping_cost") + F.col("tax_amount"))) > 1e-9)
+        | (F.abs(F.col("tax_amount") - round2((F.col("subtotal") + F.col("shipping_cost")) * 0.2)) > 1e-9)
         | (
             F.abs(
                 F.aggregate("items", F.lit(0.0), lambda a, x: a + x["subtotal"])

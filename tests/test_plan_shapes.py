@@ -14,11 +14,14 @@ QUERIES = all_queries()
 SF = "/root/testdata/sf0.001"
 
 
-def plan_of(spark, name: str) -> str:
-    df = QUERIES[name](spark, SF)
+def explain(df) -> str:
     return df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+
+
+def plan_of(spark, name: str) -> str:
+    return explain(QUERIES[name](spark, SF))
 
 
 def test_filter_pushdown_and_pruning(spark):
@@ -66,9 +69,17 @@ def test_probe_set_broadcast_in_ann(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
 
 
-def test_no_python_udf_in_analytics_plans(spark):
-    """The parity pipeline's Arrow UDF is opt-in; the analytics surface
-    must stay fully JVM-side (SURVEY §2.10)."""
+def test_no_python_udf_in_analytics_plans(spark, tmp_path):
+    """The order ETL and the analytics surface stay fully JVM-side
+    (SURVEY §2.10): no plan evaluates Python, and the ETL's
+    reference-exact money rounding is a Catalyst expression."""
+    from e_commerce_data_engineering_spark.pipeline import process_raw, read_raw_jsonl
+    from e_commerce_data_engineering_spark.sources.generator import generate_orders
+
+    raw = tmp_path / "raw.jsonl"
+    raw.write_text("\n".join(generate_orders(spark, 20, seed=3).toJSON().collect()) + "\n")
+    processed, _invalid, _corrupt = process_raw(read_raw_jsonl(spark, str(raw)))
+    plans = {"process_raw": explain(processed)}
     for name in (
         "q01_pricing_summary",
         "q05_region_nation_revenue",
@@ -76,7 +87,8 @@ def test_no_python_udf_in_analytics_plans(spark):
         "s02_cosine_topk",
         "e03_sessionize",
     ):
-        plan = plan_of(spark, name)
+        plans[name] = plan_of(spark, name)
+    for name, plan in plans.items():
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
 
 

@@ -5,7 +5,6 @@ SURVEY §7.4-4) on generated orders AND hand-built boundary fixtures."""
 from __future__ import annotations
 
 import json
-import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,26 +16,14 @@ from e_commerce_data_engineering_spark.sources.generator import generate_orders
 
 from .ref_loader import load_reference_processor
 
-REF = load_reference_processor()
-
 SKIP_FIELDS = {"processed_at"}  # batch-constant in Spark vs per-row (SURVEY §7.4-4)
 
-# Fields produced by round(x, 2) on a double. Python rounds the exact
-# binary value; Spark's bround rounds the shortest decimal repr
-# (BigDecimal.valueOf). The two differ ONLY when the shortest repr sits
-# exactly on a half-cent (a representation tie, e.g. 345.97/2 →
-# "172.985") — a one-cent artifact of the reference's own float usage.
-# We assert bit-exactness everywhere else, and |diff| ∈ {0, 0.01} with
-# low frequency here.
-TIE_TOLERANT_PREFIXES = (
-    "average_item_value",
-    "discount_rate",
-    "profit_analysis.",
-    "discount_pattern.avg_discount_percentage",
-    "discount_pattern.total_savings",
-    "product_mix.",
-)
-_tie_hits: list[str] = []
+
+@pytest.fixture(scope="module")
+def ref():
+    """The reference processor module, loaded only by the tests that
+    compare against it."""
+    return load_reference_processor()
 
 
 def _mk_order(
@@ -151,22 +138,11 @@ def boundary_fixtures():
     return good, bad
 
 
-def _is_tie_tolerant(path: str) -> bool:
-    field_path = path.split(".", 1)[1] if "." in path else path
-    return any(field_path.startswith(p) for p in TIE_TOLERANT_PREFIXES)
-
-
 def _close(a, b, path):
     if isinstance(a, float) or isinstance(b, float):
         assert a is not None and b is not None, f"{path}: {a!r} vs {b!r}"
-        if math.isclose(float(a), float(b), rel_tol=1e-9, abs_tol=1e-9):
-            return
-        if _is_tie_tolerant(path) and math.isclose(
-            abs(float(a) - float(b)), 0.01, abs_tol=1e-9
-        ):
-            _tie_hits.append(path)  # one-cent representation tie
-            return
-        raise AssertionError(f"{path}: {a!r} != {b!r}")
+        # repr is unique per double: bit-exact, the sign of zero included
+        assert repr(float(a)) == repr(float(b)), f"{path}: {a!r} != {b!r}"
     elif isinstance(a, dict):
         assert isinstance(b, dict) and set(a) == set(b), f"{path}: keys {set(a)} vs {set(b)}"
         for k in a:
@@ -191,11 +167,11 @@ def _run_spark_pipeline(spark, raw_orders):
     return out, inv
 
 
-def _assert_parity(spark, raw_orders):
+def _assert_parity(spark, ref, raw_orders):
     ref_out = {}
     ref_invalid = 0
     for o in raw_orders:
-        p = REF.process_order(json.loads(json.dumps(o)))
+        p = ref.process_order(json.loads(json.dumps(o)))
         if p is None:
             ref_invalid += 1
         else:
@@ -211,26 +187,23 @@ def _assert_parity(spark, raw_orders):
             _close(got[field], ref_val, f"{oid}.{field}")
 
 
-def test_boundary_fixtures_parity(spark):
+def test_boundary_fixtures_parity(spark, ref):
     good, bad = boundary_fixtures()
-    _assert_parity(spark, good + bad)
+    _assert_parity(spark, ref, good + bad)
 
 
-def test_generated_orders_parity(spark):
+def test_generated_orders_parity(spark, ref):
     orders_df = generate_orders(spark, 300, seed=7)
     raw = [json.loads(s) for s in orders_df.toJSON().collect()]
     assert len(raw) == 300
-    _tie_hits.clear()
-    _assert_parity(spark, raw)
-    # representation ties must be rare (< 2% of field comparisons hit one)
-    assert len(_tie_hits) < 300 * 0.05, f"too many half-cent ties: {_tie_hits[:10]}"
+    _assert_parity(spark, ref, raw)
 
 
-def test_generated_orders_all_valid(spark):
+def test_generated_orders_all_valid(spark, ref):
     """Generator output must satisfy the reference's own validation."""
     good, bad = [], []
     for s in generate_orders(spark, 200, seed=11).toJSON().collect():
-        (good if REF.validate_order(json.loads(s))[0] else bad).append(s)
+        (good if ref.validate_order(json.loads(s))[0] else bad).append(s)
     assert not bad, f"{len(bad)} generated orders fail reference validation"
 
 

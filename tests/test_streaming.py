@@ -10,7 +10,8 @@ import json
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from e_commerce_data_engineering_spark.pipeline import read_raw_jsonl, process_raw
+from e_commerce_data_engineering_spark.functions.validate import ERR_NUM_ITEMS
+from e_commerce_data_engineering_spark.pipeline import process_raw, read_raw_jsonl, run_batch
 from e_commerce_data_engineering_spark.sources.generator import generate_orders
 from e_commerce_data_engineering_spark.streaming.pipeline import (
     sessionized_event_counts,
@@ -79,6 +80,37 @@ def test_stream_restart_is_exactly_once(spark, tmp_path):
         q = start_processing_stream(spark, raw_dir, out_dir, ckpt, available_now=True)
         q.awaitTermination(120)
     assert len(_read_processed(spark, out_dir)) == 40
+
+
+def test_zero_num_items_is_quarantined_not_fatal(spark, tmp_path):
+    """An order whose items and subtotal agree but whose ``num_items`` is
+    0 is quarantined: under ANSI mode ``subtotal / num_items`` would raise
+    DIVIDE_BY_ZERO and abort the batch write, and the stream would fail
+    the same epoch again on every restart."""
+    good = json.loads(generate_orders(spark, 1, seed=13).toJSON().first())
+    zero = dict(good, order_id="ORD-ZERO-ITEMS", num_items=0)
+    raw_dir = tmp_path / "raw"
+    raw_dir.mkdir()
+    (raw_dir / "a.jsonl").write_text(json.dumps(good) + "\n" + json.dumps(zero) + "\n")
+
+    res = run_batch(
+        spark, str(raw_dir), str(tmp_path / "b_out"), str(tmp_path / "b_quarantine")
+    )
+    assert (res.total_processed, res.invalid_orders, res.corrupt_lines) == (1, 1, 0)
+
+    q = start_processing_stream(
+        spark,
+        str(raw_dir),
+        str(tmp_path / "s_out"),
+        str(tmp_path / "ckpt"),
+        quarantine_dir=str(tmp_path / "s_quarantine"),
+        available_now=True,
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert [r["order_id"] for r in _read_processed(spark, str(tmp_path / "s_out"))] == [good["order_id"]]
+    (qrow,) = _read_processed(spark, str(tmp_path / "s_quarantine"))
+    assert qrow["order_id"] == "ORD-ZERO-ITEMS" and ERR_NUM_ITEMS in qrow["errors"]
 
 
 EVENT_SCHEMA = T.StructType(
