@@ -10,9 +10,20 @@ the projection that holds them runs outside whole-stage codegen and
 evaluates them interpreted. Every reference ``round(x, 2)`` goes through ``rounding.round2``, Python's
 rounding as one Catalyst expression, so this module is bit-for-bit
 parity-tested against the reference implementation.
+
+The 29 Columns are built once per JVM (``_projection``, keyed on the
+py4j gateway they live in) and live as long as it; every ``enrich``
+call after the first reuses them. Building them costs ~1,200 py4j
+round trips, applying them is one ``select``. Reuse is sound because
+a Column is an unresolved expression that each plan resolves on its
+own: ``processed_at``'s ``current_timestamp()`` is fixed per query by
+the optimizer, and every lambda variable got a unique name when it was
+built.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -143,5 +154,13 @@ def enrich(valid_orders: DataFrame) -> DataFrame:
     are then session-timezone dependent exactly like the reference's
     ``fromisoformat`` (UTC fields). Run with session tz UTC for parity.
     """
+    return valid_orders.select(*_projection(valid_orders.sparkSession.sparkContext._gateway))
+
+
+@functools.lru_cache(maxsize=1)
+def _projection(gateway) -> tuple[Column, ...]:
+    """``enrich_columns`` over the parsed ``order_date``, built once for
+    the JVM behind ``gateway``. Two threads may both build it; either
+    result is correct."""
     order_ts = F.to_timestamp(F.regexp_replace(F.col("order_date"), "Z$", "+00:00"))
-    return valid_orders.select(*enrich_columns(order_ts))
+    return tuple(enrich_columns(order_ts))

@@ -10,9 +10,19 @@ One rule is ours: ``num_items`` must be a positive count, because the
 enrichment divides by it (``average_item_value``). Under ANSI mode a
 zero raises DIVIDE_BY_ZERO, which would abort the whole write (and, in
 the stream, fail the same epoch again on every restart).
+
+The ``errors`` Column and the two tests on it are built once per JVM
+(``_split_columns``, keyed on the py4j gateway they live in) and live
+as long as it; every ``split_valid`` call after the first reuses them,
+so a micro-batch pays a few py4j round trips here, not a rebuild of
+the five rules. A Column is an unresolved expression that each plan
+resolves on its own, and its lambda variable got a unique name when it
+was built, so one Column serves every plan.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -53,7 +63,17 @@ def split_valid(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     One shared ``errors`` projection: Catalyst dedups the expression;
     the two filters read the same cached scan.
     """
-    with_errors = raw.withColumn("errors", error_array())
-    valid = with_errors.filter(F.size("errors") == 0).drop("errors")
-    invalid = with_errors.filter(F.size("errors") > 0)
+    errors, is_valid, is_invalid = _split_columns(raw.sparkSession.sparkContext._gateway)
+    with_errors = raw.withColumn("errors", errors)
+    valid = with_errors.filter(is_valid).drop("errors")
+    invalid = with_errors.filter(is_invalid)
     return valid, invalid
+
+
+@functools.lru_cache(maxsize=1)
+def _split_columns(gateway) -> tuple[Column, Column, Column]:
+    """(``error_array()``, its valid-row test, its quarantine test),
+    built once for the JVM behind ``gateway``. Two threads may both
+    build them; either result is correct."""
+    n_errors = F.size("errors")
+    return error_array(), n_errors == 0, n_errors > 0

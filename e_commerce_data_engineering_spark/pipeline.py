@@ -46,10 +46,12 @@ def read_raw_jsonl(spark: SparkSession, path: str) -> DataFrame:
 def with_processing_partitions(df: DataFrame, now: _dt.datetime | None = None) -> DataFrame:
     """year=/month=/day= columns from *processing* time (processor:196-203)."""
     now = now or _dt.datetime.now(_dt.timezone.utc)
-    return (
-        df.withColumn("year", F.lit(now.strftime("%Y")))
-        .withColumn("month", F.lit(now.strftime("%m")))
-        .withColumn("day", F.lit(now.strftime("%d")))
+    return df.withColumns(
+        {
+            "year": F.lit(now.strftime("%Y")),
+            "month": F.lit(now.strftime("%m")),
+            "day": F.lit(now.strftime("%d")),
+        }
     )
 
 

@@ -100,7 +100,11 @@ def fold_epoch(
 ) -> None:
     """Write ``merge(part ∪ newest snapshot before epoch_id)`` as the
     snapshot of ``epoch_id``: the one write path of every mergeable
-    snapshot store."""
+    snapshot store. ``part`` has the snapshot's columns and is the
+    batch's contribution: its rows themselves where ``merge``
+    aggregates them (a summed store passes one row per input row, so
+    the batch and the snapshot are grouped in one aggregation), or a
+    frame the caller already reduced."""
     prev = read_latest(part.sparkSession, store_dir, before=epoch_id)
     write_epoch(merge(part if prev is None else part.unionByName(prev)), store_dir, epoch_id)
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..pipeline import _permissive_json, _write_outputs, process_raw
@@ -275,25 +276,31 @@ def start_rollup_stream(
 
     Exactly-once without transactions: an additive merge is NOT
     idempotent (a replayed batch would double-count), so each batch
-    folds its partial aggregate onto the newest EARLIER snapshot of a
-    ``streaming/epochs`` snapshot store (``fold_epoch``) and overwrites
+    folds its rows, each as ``(keys…, n = 1, total = sum_col)``,
+    together with the newest EARLIER snapshot of a ``streaming/epochs``
+    snapshot store in one aggregation (``fold_epoch``) and overwrites
     its own ``batch_id`` dir: a replay folds onto the same earlier
-    snapshot and rewrites the same rows. Partial aggregation is
+    snapshot and rewrites the same rows. Summing is
     associative/commutative, so the snapshot equals the aggregate over
     all raw data ever drained; it is key-domain sized, and retention
     keeps at most two of them however long the stream runs.
     """
+    total = F.col(sum_col).cast(_sum_type(schema[sum_col].dataType)).alias("total")
 
-    def _partial(batch_df: DataFrame, epoch_id: int) -> None:
-        partial = batch_df.groupBy(*key_cols).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(sum_col).alias("total"),
-        )
-        fold_epoch(partial, rollup_dir, epoch_id, sum_by(*key_cols))
+    def _fold(batch_df: DataFrame, epoch_id: int) -> None:
+        rows = batch_df.select(*key_cols, F.lit(1).cast("bigint").alias("n"), total)
+        fold_epoch(rows, rollup_dir, epoch_id, sum_by(*key_cols))
 
     return start_file_stream(
-        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _partial
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _fold
     )
+
+
+def _sum_type(t: T.DataType) -> T.DataType:
+    """The type Spark's ``sum`` gives a column of type ``t``."""
+    if isinstance(t, T.DecimalType):
+        return T.DecimalType(min(38, t.precision + 10), t.scale)
+    return T.LongType() if isinstance(t, T.IntegralType) else T.DoubleType()
 
 
 def read_rollup(spark: SparkSession, rollup_dir: str, key_cols: list[str]) -> DataFrame:
@@ -692,21 +699,26 @@ def start_daily_totals_stream(
     under any batch split — and run the non-additive finalization (dow
     means, ratio-to-type, running CUSUM) at read time over the
     days×types-sized state, never over raw events. That is why one
-    store serves two analytics: the stream cost is one tiny keyed
-    aggregate per batch, and adding a third finalizer costs nothing at
-    ingest. The totals are a ``streaming/epochs`` snapshot store,
-    summed on write by ``fold_epoch``.
+    store serves two analytics: the stream cost is one keyed
+    aggregation per batch, of the batch's rows (each as ``(event_type,
+    day, day_total = value)`` in exact cents) together with the previous
+    snapshot, and adding a third finalizer costs nothing at ingest. The
+    totals are a ``streaming/epochs`` snapshot store, summed on write by
+    ``fold_epoch``, and hold what ``plans.events.daily_totals`` gives
+    over every event drained so far.
     Batch/stream parity for BOTH finalizers is pinned in
     tests/test_streaming.py."""
+    from ..plans.money import dmoney
+
     daily_dir = f"{state_dir}/daily"
 
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from ..plans.events import daily_totals
-
-        part = daily_totals(
-            batch_df.withColumn("ts", F.col("ts").cast("timestamp"))
-        ).withColumn("day_total", F.col("day_total").cast("decimal(12,2)"))
-        fold_epoch(part, daily_dir, epoch_id, sum_by("event_type", "day"))
+        rows = batch_df.select(
+            "event_type",
+            F.col("ts").cast("timestamp").cast("date").alias("day"),
+            dmoney("value").alias("day_total"),
+        )
+        fold_epoch(rows, daily_dir, epoch_id, sum_by("event_type", "day"))
 
     return start_file_stream(
         spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, _batch
